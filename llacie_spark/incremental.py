@@ -46,7 +46,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .io import SnapshotCatalog
-from .materialize import build_edges, edge_partition_metrics
+from .materialize import build_edges, edge_partition_metrics, write_graph
 from .pipeline import SECS_IN_24H, episode_triples
 
 EDGES = "edges"
@@ -326,17 +326,9 @@ def export_graph(spark: SparkSession, cat: SnapshotCatalog, out_dir: str) -> dic
     (pred, subj_bucket), metrics/) — a full-table write, so an explicit
     step (final export / downstream handoff), NOT part of the per-batch
     loop. Returns the same counters dict as ``materialize_graph``."""
-    from .schemas import PRED_HAS_SYMPTOM
-
     edges = cat.read_stage(spark, EDGES)
     if edges is None:
         raise ValueError("export_graph: no committed edges table")
-    (
-        edges.repartition("pred", "subj_bucket")
-        .write.mode("overwrite")
-        .partitionBy("pred", "subj_bucket")
-        .parquet(f"{out_dir}/edges")
-    )
     ep = cat.read_stage(spark, EPISODE_NODES)
     cn = cat.read_stage(spark, CONCEPT_NODES)
     nodes = ep if cn is None else (cn if ep is None else ep.unionByName(cn))
@@ -354,11 +346,4 @@ def export_graph(spark: SparkSession, cat: SnapshotCatalog, out_dir: str) -> dic
             "derivation is incomplete; re-run the incremental derive (the "
             "pending log re-covers it) before exporting"
         )
-    nodes.write.mode("overwrite").parquet(f"{out_dir}/nodes")
-    metrics.write.mode("overwrite").parquet(f"{out_dir}/metrics")
-    return {
-        "nodes": spark.read.parquet(f"{out_dir}/nodes").count(),
-        "edges": spark.read.parquet(f"{out_dir}/edges").count(),
-        "partitions": spark.read.parquet(f"{out_dir}/metrics").count(),
-        "preds": [PRED_HAS_SYMPTOM],
-    }
+    return write_graph(nodes, edges, metrics, out_dir)

@@ -99,6 +99,19 @@ def shingles(df: DataFrame, id_col: str = "doc_id", text_col: str = "text", n: i
     return with_toks.select("doc_id", F.explode(F.array_distinct(grams)).alias("shingle"))
 
 
+def size_compatible(sz_a: Column, sz_b: Column, threshold: float) -> Column:
+    """Size-compatibility prune (exact): J(A,B) >= t implies
+    common >= t*(|A|+|B|)/(1+t) and common <= min(|A|,|B|), so
+    (1+t)*min >= t*(|A|+|B|) is necessary — incompatible pairs can never
+    survive the final filter and are dropped BEFORE the pair aggregation
+    (the giant intermediate). The slack is relative: the double rounding
+    error of both sides grows with the sizes (at 1e8 shingles an absolute
+    1e-9 dropped exact-boundary pairs)."""
+    t = float(threshold)
+    total = sz_a + sz_b
+    return (1.0 + t) * F.least(sz_a, sz_b) >= t * total - 1e-9 * total
+
+
 def _pair_jaccard(
     sh: DataFrame, max_shingle_df: int | None, threshold: float | None = None
 ) -> DataFrame:
@@ -128,17 +141,7 @@ def _pair_jaccard(
     b = enriched.alias("b")
     cond = (F.col("a.shingle") == F.col("b.shingle")) & (F.col("a.doc_id") < F.col("b.doc_id"))
     if threshold is not None and threshold > 0:
-        # size-compatibility prune (exact): J(A,B) >= t implies
-        # common >= t*(|A|+|B|)/(1+t) and common <= min(|A|,|B|), so
-        # (1+t)*min >= t*(|A|+|B|) is necessary — incompatible pairs can
-        # never survive the final filter and are dropped BEFORE the pair
-        # aggregation (the giant intermediate). The 1e-9 slack keeps float
-        # rounding from dropping an exact-boundary pair.
-        t = float(threshold)
-        cond = cond & (
-            (1.0 + t) * F.least(F.col("a.sz"), F.col("b.sz"))
-            >= t * (F.col("a.sz") + F.col("b.sz")) - 1e-9
-        )
+        cond = cond & size_compatible(F.col("a.sz"), F.col("b.sz"), threshold)
     return (
         a.join(b, cond)
         .groupBy(

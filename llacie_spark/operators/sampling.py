@@ -52,11 +52,17 @@ def stratified_sample(
     # into a filter that Catalyst then pushes below any repartition: the r06
     # plan evaluated the stratum expression 108x per row inside a
     # single-task scan stage (OPTIMIZATION_r07.md §stratified_sample).
+    #
+    # Spark casts both join sides to string, so rates keys of any type
+    # compare with the stratum value, never through an implicit cast.
     spark = df.sparkSession
     rate_rows = [(value, float(r)) for value, r in sorted(rates.items())]
-    rate_df = F.broadcast(
-        spark.createDataFrame(rate_rows, "stratum string, _rate double")
+    rate_df = (
+        spark.createDataFrame(rate_rows, ["stratum", "_rate"])
+        if rate_rows
+        else spark.createDataFrame([], "stratum string, _rate double")
     )
+    rate_df = F.broadcast(rate_df.select(F.col("stratum").cast("string"), "_rate"))
     # round, don't truncate: 0.3 * 10000 is 2999.999... in binary floating
     # point, and a cast-to-long threshold of 2999 would systematically
     # under-sample every non-binary-exact rate (ADVICE r2). Any oracle SQL
@@ -66,9 +72,12 @@ def stratified_sample(
     thresh = F.round(
         F.coalesce(F.col("_rate"), F.lit(float(default_rate))) * RESOLUTION
     ).cast("long")
+    # withColumn replaces a pre-existing stratum column in place, so the
+    # output carries one
+    cols = [c for c in df.columns if c != "stratum"]
     return (
-        df.withColumn("stratum", stratum)
+        df.withColumn("stratum", stratum.cast("string"))
         .join(rate_df, "stratum", "left")
         .where(keep_bucket(F.col(id_col), salt) < thresh)
-        .select(*df.columns, "stratum")  # using-join moved the key first
+        .select(*cols, "stratum")  # using-join moved the key first
     )

@@ -87,10 +87,12 @@ _NONCLINICAL_ITEM = re.compile(
 )
 
 # A denial cue negates everything to the end of the sentence, except clauses
-# re-opened by an adversative conjunction.
+# re-opened by an adversative conjunction. The alternatives are factored by
+# prefix (same order, so the same match) because the sentence gate scans
+# for this cue at every position of every sentence.
 _DENIAL_CUE = re.compile(
-    r"\b(denies|denied|denying|deny|negative for|neg for|no evidence of"
-    r"|without|nor|no|not (other|new|further))\b",
+    r"\b(?:den(?:ies|ied|ying|y)|neg(?:ative)? for"
+    r"|no(?:r| evidence of|t (?:other|new|further))?|without)\b",
     re.I,
 )
 _ADVERSATIVE = re.compile(r",?\s+\b(but|however|although|though)\b", re.I)
@@ -243,26 +245,38 @@ _RECENT_WOUND = re.compile(
 # (TEMP/RR/NIV), the care path's REASON/WORSENED_TAIL/NOTED (NOTED's verbs
 # are a subset of _CUE), or the affirm path's HR/SAT/O2NEED/REASON/CUE. A
 # sentence with no gate match can therefore add nothing and mutate no
-# state, so skipping it wholesale is exact. The gate runs on the RAW
-# sentence, which over-approximates the stripped variants the components
-# see: _strip_denials joins surviving pieces with a space and
-# _SPECULATION.sub stops before a [,.;] delimiter, so neither can create a
-# trigger token that the raw sentence lacked. Measured: 55% of corpus
-# sentences skip, each saving ~10 pattern scans.
+# state, so skipping it is exact as long as the gate matches the RAW
+# sentence whenever a component matches the text it sees. Two rewrites
+# sit between them:
+# - _SPECULATION.sub and _strip_denials (pieces joined by a space) delete
+#   spans, which can shrink a bounded window until it fits: "presents for
+#   the third time this month denies fever but with leg swelling" matches
+#   _PRESENTS_WITH only once the denial is stripped. So the gate uses
+#   unbounded variants of the windowed patterns (presents-with,
+#   O2-need, the sat reading), which match wherever the originals match
+#   any shortened text.
+# - _strip_denials also splices the text before a denial cue onto the
+#   text after an adversative, which can join the two halves of even a
+#   whitespace-gapped pattern ("Tmax no thermometer but 102"). A sentence
+#   with a denial cue before an adversative therefore always passes.
+# A deletion cannot create a trigger token otherwise: the deleted spans
+# start at a word boundary, and _SPECULATION's ends at [,.;] or the end.
+# Measured: 55% of corpus sentences skip, each saving ~10 pattern scans.
 _SENTENCE_GATE = re.compile(
     "|".join(
-        f"(?:{p.pattern})"
+        f"(?:{p})"
         for p in (
-            _RECENT_WOUND,
-            _VITALS_TEMP,
-            _VITALS_RR,
-            _NIV,
-            _VITALS_HR,
-            _VITALS_SAT,
-            _O2_NEED,
-            _REASON,
-            _CUE,
-            _WORSENED_TAIL,
+            _RECENT_WOUND.pattern,
+            _VITALS_TEMP.pattern,
+            _VITALS_RR.pattern,
+            _NIV.pattern,
+            _VITALS_HR.pattern,
+            _VITALS_SAT.pattern.replace("[^0-9]{0,4}", "[^0-9]*"),
+            _O2_NEED.pattern.replace(".{0,40}", ".*"),
+            _REASON.pattern,
+            _CUE.pattern.replace(_PRESENTS_WITH, r"present(?:s|ed|ing)?.*?\s+w(?:ith|/)"),
+            _WORSENED_TAIL.pattern,
+            rf"{_DENIAL_CUE.pattern}.*?{_ADVERSATIVE.pattern}",
         )
     ),
     re.I,

@@ -25,6 +25,32 @@ def spark():
     spark.stop()
 
 
+@pytest.fixture
+def forbid_parquet_reads():
+    """``with forbid_parquet_reads(prefix):`` makes ``DataFrameReader.parquet``
+    fail on any path under ``prefix`` inside the block."""
+    from contextlib import contextmanager
+
+    from pyspark.sql import DataFrameReader
+
+    real = DataFrameReader.parquet
+
+    def guarded_for(prefix):
+        def guarded(self, *paths, **kw):
+            assert not any(str(p).startswith(prefix) for p in paths), f"read {paths}"
+            return real(self, *paths, **kw)
+
+        return guarded
+
+    @contextmanager
+    def forbid(prefix: str):
+        with pytest.MonkeyPatch.context() as m:
+            m.setattr(DataFrameReader, "parquet", guarded_for(prefix))
+            yield
+
+    return forbid
+
+
 @pytest.fixture(scope="session")
 def vocab():
     from llacie_spark.vocab import Vocab

@@ -13,6 +13,7 @@ including the two hard cases full-table recompute gets for free:
   must drop from the concept nodes.
 """
 
+import glob
 from datetime import datetime
 
 import pytest
@@ -309,16 +310,21 @@ def test_split_between_batches_preserves_derivation(spark, world):
     assert not any(s == "episode:2" for s, _o, _l in e2)  # retraction survived
 
 
-def test_export_matches_materialize_layout(spark, world, tmp_path):
+def test_export_matches_materialize_layout(spark, world, tmp_path, forbid_parquet_reads):
     cat, b1, b2, meta = world
     _stage(cat, spark, b1)
     derive_batch(spark, cat, _ids(b1), meta, n_buckets=N_BUCKETS)
     _stage(cat, spark, b2)
     derive_batch(spark, cat, _ids(b2), meta, n_buckets=N_BUCKETS)
     out = str(tmp_path / "graph")
-    stats = export_graph(spark, cat, out)
+    with forbid_parquet_reads(out):  # written once, never read back
+        stats = export_graph(spark, cat, out)
     edges = spark.read.parquet(f"{out}/edges")
     assert stats["edges"] == edges.count()
+    assert stats["nodes"] == spark.read.parquet(f"{out}/nodes").count()
+    assert stats["partitions"] == spark.read.parquet(f"{out}/metrics").count()
+    for leaf in glob.glob(f"{out}/edges/pred=*/subj_bucket=*"):
+        assert len(glob.glob(f"{leaf}/*.parquet")) == 1, leaf
     # partition layout: pred + subj_bucket survive the directory round-trip
     assert {"pred", "subj_bucket"} <= set(edges.columns)
     nodes = {r.node_id for r in spark.read.parquet(f"{out}/nodes").collect()}

@@ -1,5 +1,7 @@
 """Graph materialization: partitioned nodes/edges + per-partition metrics."""
 
+import glob
+
 from llacie_spark.corpus import reference_doc_meta, reference_documents
 from llacie_spark.materialize import (
     build_edges,
@@ -10,14 +12,19 @@ from llacie_spark.materialize import (
 from llacie_spark.pipeline import run_pipeline
 
 
-def test_materialize_graph(spark, vocab, tmp_path):
+def test_materialize_graph(spark, vocab, tmp_path, forbid_parquet_reads):
     triples = run_pipeline(
         reference_documents(spark), reference_doc_meta(spark), vocab
     ).cache()
     out = str(tmp_path / "graph")
-    stats = materialize_graph(triples, out, n_buckets=8)
+    with forbid_parquet_reads(out):  # written once, never read back
+        stats = materialize_graph(triples, out, n_buckets=8)
     assert stats["edges"] == triples.count()
     assert stats["nodes"] > 0 and stats["partitions"] <= 8
+    leaves = glob.glob(f"{out}/edges/pred=*/subj_bucket=*")
+    assert stats["partitions"] == len(leaves)
+    for leaf in leaves:
+        assert len(glob.glob(f"{leaf}/*.parquet")) == 1, leaf
 
     edges = spark.read.parquet(f"{out}/edges")
     # partition columns restored from directory layout
@@ -28,13 +35,28 @@ def test_materialize_graph(spark, vocab, tmp_path):
     assert 0 < one.count() < stats["edges"]
 
     nodes = spark.read.parquet(f"{out}/nodes")
+    assert nodes.count() == stats["nodes"]
     kinds = {r.kind for r in nodes.select("kind").distinct().collect()}
     assert kinds == {"episode", "concept"}
     assert nodes.groupBy("node_id").count().where("count > 1").count() == 0
 
     metrics = spark.read.parquet(f"{out}/metrics")
+    assert metrics.count() == stats["partitions"]
     total = metrics.agg({"n_edges": "sum"}).first()[0]
     assert total == stats["edges"]
+
+
+def test_materialize_empty_triples(spark, vocab, tmp_path):
+    triples = run_pipeline(
+        reference_documents(spark), reference_doc_meta(spark), vocab
+    ).where("false")
+    out = str(tmp_path / "graph")
+    stats = materialize_graph(triples, out, n_buckets=8)
+    assert {k: stats[k] for k in ("nodes", "edges", "partitions")} == {
+        "nodes": 0, "edges": 0, "partitions": 0,
+    }
+    assert spark.read.parquet(f"{out}/nodes").count() == 0
+    assert spark.read.parquet(f"{out}/metrics").count() == 0
 
 
 def test_materialize_executes_extraction_exactly_once(spark, vocab, tmp_path):

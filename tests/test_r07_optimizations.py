@@ -115,6 +115,25 @@ def test_jaccard_size_prune_keeps_boundary_pairs(spark):
     assert len(out2) == 1 and abs(out2[0]["jaccard"] - 0.8) < 1e-12
 
 
+
+def test_jaccard_size_prune_keeps_boundary_pairs_at_large_sizes(spark):
+    """At 1e8+ shingles the prune's double rounding error exceeds an
+    absolute slack. Each boundary pair is a subset pair (common = min)
+    whose min/max >= t in double, so the final filter keeps it; the prune
+    must keep it too, and must still drop a pair far from the boundary."""
+    from llacie_spark.operators.dedup import size_compatible
+
+    boundary = [(0.8, 208473584, 260591980), (0.9, 131374818, 145972020),
+                (0.45, 174498066, 387773480), (0.8, 756986876, 946233595)]
+    far = [(0.8, 100_000_000, 200_000_000)]
+    for t, a, b in boundary + far:
+        sz_a, sz_b = F.lit(a).cast("long"), F.lit(b).cast("long")
+        r = spark.range(1).select(
+            (sz_a / sz_b >= t).alias("final"), size_compatible(sz_a, sz_b, t).alias("kept")
+        ).first()
+        assert r.final == ((t, a, b) in boundary)
+        assert r.kept == r.final, (t, a, b)
+
 def test_argmin_min_by_matches_window(spark):
     """The min_by argmin form equals the rank-1 window on ties-by-key data."""
     from pyspark.sql.window import Window

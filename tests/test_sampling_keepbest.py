@@ -51,6 +51,25 @@ def test_rate_threshold_rounds_not_truncates(spark):
     assert out.count() == 1
 
 
+
+def test_stratified_replaces_existing_stratum_column(spark):
+    """A pre-existing ``stratum`` column is replaced, not duplicated, and
+    the new stratum may be computed from it."""
+    df = spark.createDataFrame([(i, "x") for i in range(50)], "doc_id long, stratum string")
+    out = stratified_sample(df, F.upper("stratum"), rates={"X": 1.0}, salt="t")
+    assert out.columns == ["doc_id", "stratum"]
+    assert {r.stratum for r in out.collect()} == {"X"} and out.count() == 50
+
+
+def test_stratified_non_string_strata(spark):
+    """Integer strata and integer rates keys join through an explicit
+    string cast on both sides."""
+    df = spark.createDataFrame([(i, i % 3) for i in range(300)], "doc_id long, band int")
+    out = stratified_sample(df, F.col("band"), rates={0: 1.0, 1: 0.0}, salt="t")
+    kept = {r.doc_id for r in out.collect()}
+    assert kept == {i for i in range(300) if i % 3 == 0}
+    assert dict(out.dtypes)["stratum"] == "string"
+
 def test_keep_bucket_salt_changes_sample(spark, docs):
     a = docs.where(keep_bucket(F.col("doc_id"), "s1") < RESOLUTION // 4)
     b = docs.where(keep_bucket(F.col("doc_id"), "s2") < RESOLUTION // 4)

@@ -5,6 +5,11 @@ The P/R >= 0.95 gate scores exactly like the reference evaluator
 canonical vocabulary, truth = the gold fixture's 20 episodes / 145 labels.
 """
 
+import re
+
+import pytest
+
+from llacie_spark import scorer as scorer_mod
 from llacie_spark.scorer import GazetteerScorer, LLMScorer
 
 
@@ -155,3 +160,58 @@ def test_cached_gazetteer_registered(vocab):
     assert "feature.presenting_sx.gazetteer.cached" in find_scorers("*gazetteer*")
     s = get_scorer("feature.presenting_sx.gazetteer.cached", vocab=vocab)
     assert s.score_batch(["complains of nausea."]) == [["nausea"]]
+
+
+def _gate_off(monkeypatch, s, texts):
+    """Score ``texts`` with the sentence gate disabled (every sentence runs
+    the full rule set)."""
+    with monkeypatch.context() as m:
+        m.setattr(scorer_mod, "_SENTENCE_GATE", re.compile(""))
+        return s.score_batch(texts)
+
+
+def test_gate_keeps_cue_window_shortened_by_denial(vocab):
+    s = make_scorer(vocab)
+    out = s.score_one(
+        "Pt presents for the third time this month denies fever but with worsening leg swelling"
+    )
+    assert out == ["leg swelling"]
+
+
+@pytest.mark.parametrize(
+    "text",
+    [
+        # a stripped denial splices a vital sign's keyword onto its value
+        "Tmax no thermometer at home but 102.5 per wife.",
+        "HR denies palpitations but 128 at home.",
+        # a removed speculation shortens the sat / presents-with windows
+        "Home O2 sat possible error, 85% on room air.",
+        "He presented possible cellulitis of the left foot which is red and hot. with fever",
+    ],
+)
+def test_gate_equals_gate_off_on_rewrite_holes(vocab, monkeypatch, text):
+    s = make_scorer(vocab)
+    want = _gate_off(monkeypatch, s, [text])
+    assert want != [[]]
+    assert s.score_batch([text]) == want
+
+
+def test_gate_equals_gate_off_with_denial_inside_cue_window(vocab, monkeypatch, corpus_notes):
+    """Every fixture HPI section, with a denial span inserted between each
+    presents-with cue verb and the rest of the sentence (or appended as a
+    sentence of its own where the section has none)."""
+    from llacie_spark.operators.sections import clean_note_text, extract_short_hpi
+
+    verb = re.compile(r"\b(present(?:s|ed|ing)?)\b", re.I)
+    span = r"\1 for the third time this month denies fever but"
+    texts = []
+    for note in corpus_notes:
+        sec = extract_short_hpi(clean_note_text(note))
+        if verb.search(sec):
+            texts.append(verb.sub(span, sec))
+        else:
+            texts.append(f"{sec} Pt presented again denies chills but with leg swelling.")
+    assert len(texts) == 100
+    s = make_scorer(vocab)
+    want = _gate_off(monkeypatch, s, texts)
+    assert s.score_batch(texts) == want
