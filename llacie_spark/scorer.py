@@ -32,6 +32,7 @@ from __future__ import annotations
 
 import re
 from collections.abc import Callable, Iterable, Sequence
+from types import SimpleNamespace
 
 MAX_MENTIONS = 10  # reference JSON schema: maxItems 10 (llama3_8b.py:32-45)
 
@@ -60,6 +61,8 @@ _ABBREVIATIONS = [
     (re.compile(r"\bAMS\b"), "altered mental status"),
     (re.compile(r"\bw/o\b", re.I), "without"),
 ]
+# each is \b<literal>\b: normalize_text looks for the literal before a sub
+assert all(re.fullmatch(r"\\b[\w/]+\\b", p.pattern) for p, _ in _ABBREVIATIONS)
 
 # Sentences about care received / clinician measurements, not
 # patient-reported complaints. Named findings cited with a "noted" cue and
@@ -116,6 +119,9 @@ _CUE = re.compile(
     r"|followed by|along with|complicated by)\s+",
     re.I,
 )
+# "prior MRSA SSTI p/w cellulitis": a *prior* condition's presentation
+# (the text before a "p/w" cue) is past history, unlike a *recent* one's
+_PRIOR_PW = re.compile(r"\bprior\s+(?:[\w/-]+\s+){0,3}$", re.I)
 # Strong chief-complaint cues override care context ("presents from urgent
 # care with worsening dyspnea" is still the presenting complaint).
 _STRONG_CUE = re.compile(rf"\b(?:p/w|{_PRESENTS_WITH}|c/o|complain(?:s|ing|ed)? of)\s+", re.I)
@@ -212,6 +218,7 @@ _VITALS_TEMP = re.compile(
 )
 _VITALS_RR = re.compile(r"\bRR\s*(?:of\s*)?(\d{2,3})\b", re.I)
 _NIV = re.compile(r"\b(non-?rebreather|BiPAP|CPAP|NIPPV|NPPV)\b", re.I)
+_NIV_HISTORY = re.compile(r"\b(?:yrs?|years?|months?)\s+ago|\bprior\b|\bprevious\b", re.I)
 # Clinician-measured pulse/sat readings (EMS/ED observation) do not imply a
 # reported symptom; temperature/respiratory-failure inference applies anywhere.
 _MEASURED_VITALS = re.compile(r"\b(EMS|ED|triage|arrival|found|vitals)\b", re.I)
@@ -228,7 +235,8 @@ _BECAME_PAINFUL = re.compile(r"\bbecame painful\b", re.I)
 _URGENCY = re.compile(r"\burgency\b", re.I)
 _BLACKENING = re.compile(r"\bblackening\b", re.I)
 _AFTER_N_OF = re.compile(r"\bafter\s+\d+\s+\w+\s+of\b", re.I)
-_ITEM_SPLIT = re.compile(r",|;|:|\b(?:and|with|plus)\b|/")
+_SPLIT_WORDS = ("and", "with", "plus")  # case-sensitive: see _FOLDED
+_ITEM_SPLIT = re.compile(rf",|;|:|\b(?:{'|'.join(_SPLIT_WORDS)})\b|/")
 _OCCASIONAL = re.compile(r"\boccasional(?:ly)?\b", re.I)
 _ANY_LETTER = re.compile(r"[a-zA-Z]")
 _LEADING_DENIAL = re.compile(r"^(?:no|not|denies|denied)\b", re.I)
@@ -239,6 +247,69 @@ _LEADING_DENIAL = re.compile(r"^(?:no|not|denies|denied)\b", re.I)
 _RECENT_WOUND = re.compile(
     r"\brecent\s+((?:[a-z-]+\s+){0,2}(?:ulcer|wound|laceration|abscess))\b", re.I
 )
+
+_SITE_CLASS_RX = {
+    cls: re.compile(rf"(?:{pat})\Z", re.I) for cls, pat in _SITE_CLASS.items()
+}
+
+_PITTING = re.compile(r"\bpitting edema\b", re.I)
+# precompiled (site-class, symptom-class) adjacency rewrites — built once;
+# rebuilding these f-string patterns per call dominated the scorer profile.
+# Grouped by symptom class with one guard regex each (r07): a rule whose
+# symptom words are absent from the segment cannot match, so skipping its
+# whole group is an exact no-op — the old flat loop ran all 18 subs whenever
+# ANY symptom word was present (~19 regex scans per _collect in the profile).
+_ADJACENT_GROUPS = [
+    (
+        re.compile(rf"\b(?:{syms})\b", re.I),
+        [
+            (re.compile(rf"\b(?:{pat})\b\s+(?:{syms})\b", re.I), f"{cls} {repl}")
+            for cls, pat in _SITE_CLASS.items()
+        ],
+    )
+    for syms, repl in (("edema|swelling", "swelling"), ("pain|ache", "pain"), ("ulcer|wound", "wound"))
+]
+# every adjacency rewrite requires one of these symptom words; segments
+# without any (the common case) skip the whole rule loop
+_ADJACENT_GUARD = re.compile(r"\b(?:edema|swelling|pain|ache|ulcer|wound)\b", re.I)
+
+_SPECIALS = [
+    (
+        re.compile(
+            r"\b(?:sharp\s+)?(?:chest\s+)?pain[^.;]{0,60}chest[^.;]{0,60}"
+            r"(?:deep breaths?|inspiration|breathing)"
+            r"|\bpain[^.;]{0,30}(?:worse(?:ns)?|worsens) with (?:deep breaths?|inspiration)",
+            re.I,
+        ),
+        "pleuritic chest pain",
+    ),
+    (
+        re.compile(r"\bscratchy\b[^.;]{0,25}\bthroat\b|\bthroat\b[^.;]{0,15}\bscratchy\b", re.I),
+        "sore throat",
+    ),
+    (
+        re.compile(r"\bsuprapubic (?:pressure|pain|cramping|discomfort|tenderness)\b", re.I),
+        "abdominal pain",
+    ),
+    (
+        re.compile(r"\babdominal cramping\b|\bcramping\b[^.;]{0,20}\babdomen\b", re.I),
+        "abdominal pain",
+    ),
+    (re.compile(r"\bburning (?:on|with) (?:urination|voiding)\b", re.I), "dysuria"),
+    (re.compile(r"\bfoul[- ]smelling drainage\b", re.I), "malodorous"),
+    (
+        re.compile(
+            r"\b(?:doesn'?t feel|can'?t feel|cannot feel|no sensation|loss of sensation)\b",
+            re.I,
+        ),
+        "numbness",
+    ),
+    (re.compile(r"\bdifficulty (?:walking|ambulating)\b", re.I), "difficulty walking"),
+]
+# one boolean scan gates the per-pattern loop: the vast majority of
+# segments match no special, and N searches per segment dominated the
+# scorer profile (re.search was ~25% of per-doc time)
+_SPECIALS_ANY = re.compile("|".join(f"(?:{p.pattern})" for p, _ in _SPECIALS), re.I)
 
 # Union gate over every pattern through which a sentence can produce a
 # mention (r07): _add is reachable only via _RECENT_WOUND, _infer_global
@@ -283,118 +354,123 @@ _SENTENCE_GATE = re.compile(
 )
 
 
+# --------------------------------------------------------------------------
+# case folding: the _EXACT and _FOLDED pattern tables
+# --------------------------------------------------------------------------
+# Under re.I, sre folds the case of every character it tries. So score_one
+# lowers each sentence once and runs the rule code on _FOLDED: every
+# module-level pattern above, each re.I one recompiled from its own source
+# with literal characters lowercased, escapes (\b, \S, \Z, ...) kept and re.I
+# dropped (so no letter may be spelled as an escape such as \x41). Define a
+# new pattern once, at module level under an upper-case name; its folded twin
+# is derived, never written by hand. A section runs on _FOLDED only where
+# that is exact, and on _EXACT otherwise:
+# - none of _FOLD_HAZARDS occurs in it. U+0130 lowers to two characters;
+#   U+0131 and U+017F match i / s under re.I but lower to themselves; the
+#   Kelvin sign lowers to k, which the case-sensitive _ANY_LETTER matches;
+#   U+03A3 lowers to final or medial sigma by context, so a lowered sentence
+#   can differ from its lowered words. Any other code point lowers to one
+#   that re.I atoms here treat alike (tests/test_scorer_fold.py);
+# - each of its _SPLIT_WORDS is lower case already, since _ITEM_SPLIT is
+#   case-sensitive ("And" must not split). The other case-sensitive patterns
+#   (_SENT_SPLIT, the SOB/AMS expansions) see the original text.
+_FOLD_HAZARDS = re.compile("[\u0130\u0131\u017f\u212a\u03a3]")
 
 
-# one boolean scan gates the abbreviation subs (same pattern alternatives as
-# _ABBREVIATIONS minus the expansion-only differences): most notes contain no
-# shorthand, and 5 full sub() scans per doc showed in the r07 profile
-_ABBREV_ANY = re.compile(r"\bN/V(/D)?\b|\bSOB\b|\bAMS\b|\bw/o\b", re.I)
+def _fold(obj):
+    """The folded twin of a pattern, or of a list/tuple/dict holding some."""
+    if isinstance(obj, re.Pattern) and obj.flags & re.I:
+        src = re.sub(r"(\\.)|.", lambda m: m[1] or m[0].lower(), obj.pattern, flags=re.S)
+        return re.compile(src, obj.flags & ~re.I)
+    if isinstance(obj, dict):
+        return {k: _fold(v) for k, v in obj.items()}
+    if isinstance(obj, (list, tuple)):
+        return type(obj)(map(_fold, obj))
+    return obj
 
 
-# every fix maps one char to one char, so a single translate() pass is
-# exactly the nine sequential replace() scans (disjoint keys; r07)
-_UNICODE_TRANSLATE = str.maketrans(_UNICODE_FIXES)
+_EXACT = SimpleNamespace(**{k[1:]: v for k, v in globals().items() if k[0] == "_" and k[1:].isupper()})
+_FOLDED = SimpleNamespace(**{k: _fold(v) for k, v in vars(_EXACT).items()})
 
 
 def normalize_text(text: str) -> str:
-    text = text.translate(_UNICODE_TRANSLATE)
-    if _ABBREV_ANY.search(text):
-        for pat, repl in _ABBREVIATIONS:
+    # keys and values are disjoint single characters, so sequential replaces
+    # equal one translate() pass, which costs a dict lookup per character
+    for a, b in _UNICODE_FIXES.items():
+        if a in text:
+            text = text.replace(a, b)
+    low = text.lower()
+    for pat, repl in _ABBREVIATIONS:
+        # most notes hold no shorthand: a substring test skips the sub (a full
+        # scan) unless the pattern's literal occurs
+        lit = pat.pattern[2:-2]
+        if (lit.lower() in low) if pat.flags & re.I else (lit in text):
             text = pat.sub(repl, text)
     return text
 
 
-def _strip_denials(sentence: str) -> str:
+def _strip_denials(p: SimpleNamespace, sentence: str) -> str:
     """Remove negated scope: from a denial cue to sentence end, except
     affirmative clauses re-opened by an adversative conjunction."""
     out = []
     rest = sentence
     while True:
-        m = _DENIAL_CUE.search(rest)
+        m = p.DENIAL_CUE.search(rest)
         if m is None:
             out.append(rest)
             break
         out.append(rest[: m.start()])
         after = rest[m.end() :]
-        adv = _ADVERSATIVE.search(after)
+        adv = p.ADVERSATIVE.search(after)
         if adv is None:
             break
         rest = after[adv.end() :]
-    return " ".join(p for p in out if p.strip())
+    return " ".join(piece for piece in out if piece.strip())
 
 
-_SITE_CLASS_RX = {
-    cls: re.compile(rf"(?:{pat})\Z", re.I) for cls, pat in _SITE_CLASS.items()
-}
-
-
-def _site_class(raw_site: str) -> str | None:
-    site = _SITE_MODIFIER.sub("", raw_site.lower()).strip()
+def _site_class(p: SimpleNamespace, raw_site: str) -> str | None:
+    site = p.SITE_MODIFIER.sub("", raw_site.lower()).strip()
     words = site.split()
     # try longest suffix first so "medial shin while gardening" resolves
     for k in range(len(words), 0, -1):
         for prefix in (words[:k], words[-k:]):
             cand = " ".join(prefix)
-            for cls, rx in _SITE_CLASS_RX.items():
+            for cls, rx in p.SITE_CLASS_RX.items():
                 if rx.match(cand):
                     return cls
     return None
 
 
-def _sentence_site(sentence: str) -> str | None:
+def _sentence_site(p: SimpleNamespace, sentence: str) -> str | None:
     """Body-site context of a sentence (the last site mentioned — nearest
     antecedent for trailing symptom qualities)."""
     last = None
-    for m in _ANY_SITE.finditer(sentence):
+    for m in p.ANY_SITE.finditer(sentence):
         last = m
-    return _site_class(last.group(1)) if last else None
+    return _site_class(p, last.group(1)) if last else None
 
 
-def _reorder_sites(text: str) -> str:
+def _reorder_sites(p: SimpleNamespace, text: str) -> str:
     """Rewrite "swelling of the RLE" -> "leg swelling" so the n-gram matcher
     sees the dictionary's site-first surface forms."""
 
     def repl(m):
         sym = _SYMPTOM_WORD_MAP.get(m.group(1).lower(), m.group(1).lower())
-        cls = _site_class(m.group(2))
+        cls = _site_class(p, m.group(2))
         if cls is None:
             return m.group(0)
         return f"{cls} {sym}"
 
-    return _SYMPTOM_OF_SITE.sub(repl, text)
+    return p.SYMPTOM_OF_SITE.sub(repl, text)
 
 
-_PITTING = re.compile(r"\bpitting edema\b", re.I)
-# precompiled (site-class, symptom-class) adjacency rewrites — built once;
-# rebuilding these f-string patterns per call dominated the scorer profile.
-# Grouped by symptom class with one guard regex each (r07): a rule whose
-# symptom words are absent from the segment cannot match, so skipping its
-# whole group is an exact no-op — the old flat loop ran all 18 subs whenever
-# ANY symptom word was present (~19 regex scans per _collect in the profile).
-_ADJACENT_GROUPS = [
-    (
-        re.compile(rf"\b(?:{syms})\b", re.I),
-        [
-            (re.compile(rf"\b(?:{pat})\b\s+(?:{syms})\b", re.I), f"{cls} {repl}")
-            for cls, pat in _SITE_CLASS.items()
-        ],
-    )
-    for syms, repl in (("edema|swelling", "swelling"), ("pain|ache", "pain"), ("ulcer|wound", "wound"))
-]
-
-
-# every adjacency rewrite requires one of these symptom words; segments
-# without any (the common case) skip the whole rule loop
-_ADJACENT_GUARD = re.compile(r"\b(?:edema|swelling|pain|ache|ulcer|wound)\b", re.I)
-
-
-def _normalize_adjacent_sites(text: str) -> str:
+def _normalize_adjacent_sites(p: SimpleNamespace, text: str) -> str:
     """Map adjacent site+symptom pairs: "LE pitting edema" -> "leg swelling",
     "plantar ulcer" -> "foot wound"."""
-    if not _ADJACENT_GUARD.search(text):
+    if not p.ADJACENT_GUARD.search(text):
         return text
-    t = _PITTING.sub("edema", text)
-    for guard, rules in _ADJACENT_GROUPS:
+    t = p.PITTING.sub("edema", text)
+    for guard, rules in p.ADJACENT_GROUPS:
         if guard.search(t):
             for pat, repl in rules:
                 t = pat.sub(repl, t)
@@ -431,138 +507,102 @@ class GazetteerScorer:
     def score_one(self, text: str) -> list[str]:
         text = normalize_text(text)
         text = _PARENTHETICAL.sub(" ", text)  # parentheticals are asides
+        low = text.lower()
+        fold = not _FOLD_HAZARDS.search(text) and all(
+            low.count(w) == text.count(w) for w in _SPLIT_WORDS
+        )
+        p = self._p = _FOLDED if fold else _EXACT  # see _FOLDED
         mentions: list[str] = []
         self._covered: set[str] = set()
         self._site_key: str | None = None  # per-doc _sentence_site memo
         self._site_val: str | None = None
 
-        for raw_sentence in _SENT_SPLIT.split(text):
+        sentences = _SENT_SPLIT.split(text)  # needs the original case
+        for raw_sentence in map(str.lower, sentences) if fold else sentences:
             sentence = raw_sentence.strip()
             if not sentence:
                 continue
-            if not _SENTENCE_GATE.search(sentence):
+            if not p.SENTENCE_GATE.search(sentence):
                 continue  # cannot produce a mention — see _SENTENCE_GATE
-            for m in _RECENT_WOUND.finditer(sentence):
+            for m in p.RECENT_WOUND.finditer(sentence):
                 self._collect(m.group(1), sentence, mentions)
-            sentence = _strip_denials(sentence)
+            sentence = _strip_denials(p, sentence)
             if not sentence.strip():
                 continue
 
             # inference rules that apply to any sentence
             self._infer_global(sentence, mentions)
 
-            care = _CARE_CONTEXT.search(sentence) and not _STRONG_CUE.search(sentence)
+            care = p.CARE_CONTEXT.search(sentence) and not p.STRONG_CUE.search(sentence)
             if care:
                 # From care/clinician sentences extract only: cited reasons,
                 # post-treatment progressions, and explicitly noted findings.
-                for m in _REASON.finditer(sentence):
+                for m in p.REASON.finditer(sentence):
                     self._collect(m.group(1), sentence, mentions)
-                m = _WORSENED_TAIL.search(sentence)
+                m = p.WORSENED_TAIL.search(sentence)
                 if m:
                     self._collect(m.group(1), sentence, mentions)
-                for m in _NOTED_CUE.finditer(sentence):
+                for m in p.NOTED_CUE.finditer(sentence):
                     self._collect(self._cue_segment(sentence, m.end()), sentence, mentions)
                 continue
 
-            sentence_affirm = _SPECULATION.sub(" ", sentence)
+            sentence_affirm = p.SPECULATION.sub(" ", sentence)
             self._infer_reported(sentence_affirm, mentions)
-            for m in _REASON.finditer(sentence_affirm):
+            for m in p.REASON.finditer(sentence_affirm):
                 self._collect(m.group(1), sentence_affirm, mentions)
-            for m in _CUE.finditer(sentence_affirm):
-                # "prior MRSA SSTI p/w cellulitis" — a *prior* condition's
-                # presentation is past history, unlike a *recent* one's
-                if m.group(0).strip().lower() == "p/w" and re.search(
-                    r"\bprior\s+(?:[\w/-]+\s+){0,3}$", sentence_affirm[: m.start()], re.I
+            for m in p.CUE.finditer(sentence_affirm):
+                if m.group(0).strip().lower() == "p/w" and p.PRIOR_PW.search(
+                    sentence_affirm[: m.start()]
                 ):
                     continue
                 self._collect(self._cue_segment(sentence_affirm, m.end()), sentence_affirm, mentions)
 
         return mentions if self.canonicalize is not None else mentions[:MAX_MENTIONS]
 
-    @staticmethod
-    def _cue_segment(sentence: str, start: int) -> str:
+    def _cue_segment(self, sentence: str, start: int) -> str:
         seg = sentence[start:]
-        nxt = _CUE.search(seg)
+        nxt = self._p.CUE.search(seg)
         return seg[: nxt.start()] if nxt else seg
 
     # ------------------------------------------------------------- inference
 
     def _infer_global(self, sentence: str, mentions: list[str]) -> None:
         """Severity inferences valid regardless of who observed them."""
-        m = _VITALS_TEMP.search(sentence)
+        p = self._p
+        m = p.VITALS_TEMP.search(sentence)
         if m:
             v = float(m.group(1))
             unit = m.group(2) or ("F" if v > 45 else "C")
             if (unit.upper() == "C" and v >= 38.0) or (unit.upper() == "F" and v >= 100.4):
                 self._add(mentions, "fever")
-        m = _VITALS_RR.search(sentence)
+        m = p.VITALS_RR.search(sentence)
         if m and int(m.group(1)) >= 30:
             self._add(mentions, "tachypnea")
-        if _NIV.search(sentence) and not re.search(
-            r"\b(?:yrs?|years?|months?)\s+ago|\bprior\b|\bprevious\b", sentence, re.I
-        ):
+        if p.NIV.search(sentence) and not p.NIV_HISTORY.search(sentence):
             self._add(mentions, "respiratory failure")
 
     def _infer_reported(self, sentence: str, mentions: list[str]) -> None:
         """Patient-reported pulse/oxygen values imply symptoms; clinician
         measurements (EMS/ED/triage sentences) do not."""
-        if _MEASURED_VITALS.search(sentence):
+        p = self._p
+        if p.MEASURED_VITALS.search(sentence):
             return
-        m = _VITALS_HR.search(sentence)
+        m = p.VITALS_HR.search(sentence)
         if m and int(m.group(1)) >= 100:
             self._add(mentions, "tachycardia")
-        m = _VITALS_SAT.search(sentence)
+        m = p.VITALS_SAT.search(sentence)
         if m and int(m.group(1)) < 92:
             self._add(mentions, "hypoxemia")
-        if _O2_NEED.search(sentence):
+        if p.O2_NEED.search(sentence):
             self._add(mentions, "hypoxemia")
 
     # ------------------------------------------------------------- collect
 
-    _SPECIALS = [
-        (
-            re.compile(
-                r"\b(?:sharp\s+)?(?:chest\s+)?pain[^.;]{0,60}chest[^.;]{0,60}"
-                r"(?:deep breaths?|inspiration|breathing)"
-                r"|\bpain[^.;]{0,30}(?:worse(?:ns)?|worsens) with (?:deep breaths?|inspiration)",
-                re.I,
-            ),
-            "pleuritic chest pain",
-        ),
-        (
-            re.compile(r"\bscratchy\b[^.;]{0,25}\bthroat\b|\bthroat\b[^.;]{0,15}\bscratchy\b", re.I),
-            "sore throat",
-        ),
-        (
-            re.compile(r"\bsuprapubic (?:pressure|pain|cramping|discomfort|tenderness)\b", re.I),
-            "abdominal pain",
-        ),
-        (
-            re.compile(r"\babdominal cramping\b|\bcramping\b[^.;]{0,20}\babdomen\b", re.I),
-            "abdominal pain",
-        ),
-        (re.compile(r"\bburning (?:on|with) (?:urination|voiding)\b", re.I), "dysuria"),
-        (re.compile(r"\bfoul[- ]smelling drainage\b", re.I), "malodorous"),
-        (
-            re.compile(
-                r"\b(?:doesn'?t feel|can'?t feel|cannot feel|no sensation|loss of sensation)\b",
-                re.I,
-            ),
-            "numbness",
-        ),
-        (re.compile(r"\bdifficulty (?:walking|ambulating)\b", re.I), "difficulty walking"),
-    ]
-    # one boolean scan gates the per-pattern loop: the vast majority of
-    # segments match no special, and N searches per segment dominated the
-    # scorer profile (re.search was ~25% of per-doc time)
-    _SPECIALS_ANY = re.compile(
-        "|".join(f"(?:{p.pattern})" for p, _ in _SPECIALS), re.I
-    )
-
     def _collect(self, segment: str, sentence: str, mentions: list[str]) -> None:
-        segment = _SPECULATION.sub(" ", segment)
+        p = self._p
+        segment = p.SPECULATION.sub(" ", segment)
         # exposures are never presenting symptoms ("neighbor with bad cold")
-        segment = _EXPOSURE_CUT.sub("", segment)
+        segment = p.EXPOSURE_CUT.sub("", segment)
         # lazy, one-entry-memoized site: most segments never branch on the
         # sentence site (r07 profile: _sentence_site was ~7% while only the
         # rare BECAME_PAINFUL/BLACKENING/site-symptom branches consume it),
@@ -570,42 +610,42 @@ class GazetteerScorer:
         def site_of():
             if sentence != self._site_key:
                 self._site_key = sentence
-                self._site_val = _sentence_site(sentence)
+                self._site_val = _sentence_site(p, sentence)
             return self._site_val
 
-        if _BECAME_PAINFUL.search(segment) and site_of() in ("leg", "arm"):
-            segment = _BECAME_PAINFUL.sub(" ", segment)
+        if p.BECAME_PAINFUL.search(segment) and site_of() in ("leg", "arm"):
+            segment = p.BECAME_PAINFUL.sub(" ", segment)
             self._add(mentions, f"{site_of()} pain")
-        if self._SPECIALS_ANY.search(segment):
-            for pat, repl in self._SPECIALS:
+        if p.SPECIALS_ANY.search(segment):
+            for pat, repl in p.SPECIALS:
                 if pat.search(segment):
                     segment = pat.sub(" ", segment)
                     self._add(mentions, repl)
-        if _URGENCY.search(segment) and _URINARY_CONTEXT.search(sentence):
-            segment = _URGENCY.sub(" ", segment)
+        if p.URGENCY.search(segment) and p.URINARY_CONTEXT.search(sentence):
+            segment = p.URGENCY.sub(" ", segment)
             self._add(mentions, "urinary urgency")
-        if _BLACKENING.search(segment) and site_of() == "foot":
+        if p.BLACKENING.search(segment) and site_of() == "foot":
             self._add(mentions, "foot wound")
 
-        segment = _reorder_sites(segment)
-        segment = _normalize_adjacent_sites(segment)
+        segment = _reorder_sites(p, segment)
+        segment = _normalize_adjacent_sites(p, segment)
         # "X after 2 days of Y" buries Y in X's trailing cut — make Y its own item
-        segment = _AFTER_N_OF.sub(", ", segment)
+        segment = p.AFTER_N_OF.sub(", ", segment)
 
-        for item in _ITEM_SPLIT.split(segment):
+        for item in p.ITEM_SPLIT.split(segment):
             item = item.strip(" .-:\"'")
-            if _OCCASIONAL.search(item):
+            if p.OCCASIONAL.search(item):
                 continue  # "occasional X" is not a presenting complaint
             prev = None
             while prev != item:
                 prev = item
-                item = _QUALIFIER.sub("", item).strip()
-                item = _TRAILING.sub("", item).strip(" .-:\"'")
-            if not item or not _ANY_LETTER.search(item):
+                item = p.QUALIFIER.sub("", item).strip()
+                item = p.TRAILING.sub("", item).strip(" .-:\"'")
+            if not item or not p.ANY_LETTER.search(item):
                 continue
-            if _NONCLINICAL_ITEM.search(item):
+            if p.NONCLINICAL_ITEM.search(item):
                 continue
-            if _LEADING_DENIAL.match(item):
+            if p.LEADING_DENIAL.match(item):
                 continue
             words = [_SYMPTOM_WORD_MAP.get(w.lower(), w.lower()) for w in item.split()[:4]]
             item = " ".join(words)
@@ -761,11 +801,11 @@ class CachingScorer:
     must be treated as read-only, which the Arrow serialization boundary in
     the pipeline UDF guarantees.
 
-    Honest-benchmark note: cache effectiveness is a CORPUS property. The
-    synthetic bench corpus has ~0.5% distinct sections (100 templates), so
-    a cached run measures dictionary lookups, not extraction — which is why
-    the headline bench stays uncached and any cached number must disclose
-    the corpus' duplicate ratio alongside it.
+    Honest-benchmark note: cache effectiveness is a CORPUS property. In the
+    benchmark corpora (perfbench) 100% of build_distinct's HPI sections are
+    distinct and 8.3% of build_episodes' (100 templates, 1,200 sections), so
+    a cached build_episodes run would mostly measure dictionary lookups: the
+    benchmarks stay uncached, and a cached number must disclose the ratio.
     """
 
     def __init__(self, inner, max_entries: int = 65_536):

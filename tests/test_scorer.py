@@ -6,6 +6,7 @@ canonical vocabulary, truth = the gold fixture's 20 episodes / 145 labels.
 """
 
 import re
+from pathlib import Path
 
 import pytest
 
@@ -162,12 +163,44 @@ def test_cached_gazetteer_registered(vocab):
     assert s.score_batch(["complains of nausea."]) == [["nausea"]]
 
 
-def _gate_off(monkeypatch, s, texts):
+def _gate_off(monkeypatch, s, texts, gate=re.compile("")):
     """Score ``texts`` with the sentence gate disabled (every sentence runs
-    the full rule set)."""
+    the full rule set) in both pattern tables, the folded one foldable
+    sections run against and the exact one the others run against."""
     with monkeypatch.context() as m:
-        m.setattr(scorer_mod, "_SENTENCE_GATE", re.compile(""))
+        for table in (scorer_mod._FOLDED, scorer_mod._EXACT):
+            m.setattr(table, "SENTENCE_GATE", gate)
         return s.score_batch(texts)
+
+
+def test_gate_patch_reaches_the_table_that_runs(vocab, monkeypatch):
+    """A gate that passes nothing silences both paths, so ``_gate_off``
+    really turns the gate off wherever a section is scored."""
+    s = make_scorer(vocab)
+    texts = ["He reports fever and chills.", "He reports fever And chills."]
+    assert all(s.score_batch(texts))
+    assert _gate_off(monkeypatch, s, texts, gate=re.compile("(?!)")) == [[], []]
+
+
+def test_golden_mentions(vocab):
+    """Sections + scorer over the 100 golden documents reproduce
+    ``fixtures/golden/mentions.parquet`` (the kg_linking oracle's input)."""
+    import pandas as pd
+
+    from llacie_spark.operators.sections import clean_note_text, extract_short_hpi
+
+    golden = Path(__file__).resolve().parents[1] / "fixtures/golden"
+    docs = pd.read_parquet(golden / "reference_docs.parquet")
+    want = pd.read_parquet(golden / "mentions.parquet").set_index("doc_id")["mentions"]
+    s = make_scorer(vocab)
+    got = {}
+    for doc_id, spans in zip(docs["doc_id"], docs["spans"]):
+        text = "\n\n".join(  # the text spans in offset order, as corpus.assemble_text
+            sp["text"] for sp in sorted(spans, key=lambda sp: sp["offset"]) if sp["kind"] == "text"
+        )
+        got[doc_id] = s.score_batch([extract_short_hpi(clean_note_text(text)) or None])[0]
+    assert len(got) == 100 and sum(map(len, got.values())) > 500
+    assert {d: list(want[d]) for d in got} == got
 
 
 def test_gate_keeps_cue_window_shortened_by_denial(vocab):
