@@ -219,7 +219,7 @@ def run_headline(sf_dir: str, cpus: int) -> dict:
         "kg_triples": kg_rows,
         "kg_docs_per_sec": round(n_docs / timings["kg_pipeline"], 1),
         "kg_steal_pct": detail["kg_pipeline"]["steal_pct"],
-        "kg_argmin_strategy": KG_ARGMIN_STRATEGY,
+        "kg_argmin_strategy": "window_fat",  # frozen key; the rank-1 window is the only form
         "cpus": cpus,
         "steal_gate_pct": STEAL_OK_PCT,
     }
@@ -235,15 +235,6 @@ def run_headline(sf_dir: str, cpus: int) -> dict:
     return report
 
 
-# bench corpus is generated (unbucketed) and 40k-240k docs: the rank-1
-# window form measured faster than min_by at BOTH scales (interleaved
-# best-of-3, BENCH/ARGMIN_AB.md) — min_by's payload re-join branch re-reads
-# the corpus, which here costs more than the fat window shuffle it avoids.
-# min_by remains the form for broadcastable winners / doc_id-bucketed tables
-# (see episode_triples docstring).
-KG_ARGMIN_STRATEGY = "window_fat"
-
-
 def _run_kg(spark, n_docs: int, scorer=None) -> int:
     from llacie_spark.corpus import synthetic_doc_meta, synthetic_documents
     from llacie_spark.pipeline import docs_partitions, run_pipeline
@@ -257,9 +248,7 @@ def _run_kg(spark, n_docs: int, scorer=None) -> int:
     parts = docs_partitions(n_docs, spark.sparkContext.defaultParallelism)
     docs = synthetic_documents(spark, n_docs, partitions=parts)
     meta = synthetic_doc_meta(spark, n_docs)
-    triples = run_pipeline(
-        docs, meta, vocab, scorer=scorer, argmin_strategy=KG_ARGMIN_STRATEGY
-    )
+    triples = run_pipeline(docs, meta, vocab, scorer=scorer)
     return triples.count()
 
 
@@ -395,7 +384,7 @@ def wait_quiet(max_wait_min: float = 15.0, verbose: bool = False) -> bool:
     16-core level at 91.7s best between an 8-core 102.6s and a 32-core
     35.7s — physically non-monotonic). Instantaneous slices catch epochs
     that averages hide. The ONE quiet-gate implementation — scripts that
-    need the same protocol (scripts/argmin_ab.py) import this."""
+    need the same protocol import this."""
     deadline = time.time() + max_wait_min * 60
     clean = 0
     while time.time() < deadline:
@@ -488,7 +477,7 @@ def run_scaling(n_docs: int = 480_000) -> dict:
         )
     report = {
         "n_docs": n_docs,
-        "argmin_strategy": KG_ARGMIN_STRATEGY,
+        "argmin_strategy": "window_fat",
         "pairs": {
             "4v16": round((results[4]["secs"] / results[16]["secs"]) / 4, 3),
             "8v32": round((results[8]["secs"] / results[32]["secs"]) / 4, 3),

@@ -48,12 +48,6 @@ def main(argv: list[str]) -> None:
         help="registered scorer strategy name (scorer.find_scorers('*'))",
     )
     p.add_argument(
-        "--argmin-strategy", default="min_by", choices=["min_by", "window_fat"],
-        help="episode-argmin physical form (crossover: BENCH/ARGMIN_AB.md — "
-        "window_fat for unbucketed small/mid corpora, min_by when winners "
-        "broadcast or the docs table is doc_id-bucketed)",
-    )
-    p.add_argument(
         "--redo-older-than", default=None,
         help="ISO timestamp: re-extract committed rows older than this "
         "(staleness redo after a strategy upgrade; needs --stage-root)",
@@ -228,9 +222,7 @@ def main(argv: list[str]) -> None:
                     meta.select("doc_id"), "doc_id", "left_anti"
                 ).count()
                 dstats = derive_batch(
-                    spark, cat, pending, meta,
-                    n_buckets=args.buckets,
-                    argmin_strategy=args.argmin_strategy,
+                    spark, cat, pending, meta, n_buckets=args.buckets
                 )
                 if n_uncovered:
                     print(
@@ -267,16 +259,11 @@ def main(argv: list[str]) -> None:
             spark.stop()
             return
         t = time.time()
-        triples = episode_triples(
-            cat.read_stage(spark, "extracted"), meta,
-            argmin_strategy=args.argmin_strategy,
-        )
+        triples = episode_triples(cat.read_stage(spark, "extracted"), meta)
     else:
         n_todo = None
         t = time.time()
-        triples = run_pipeline(
-            docs, meta, vocab, scorer=scorer, argmin_strategy=args.argmin_strategy
-        )
+        triples = run_pipeline(docs, meta, vocab, scorer=scorer)
 
     stats = materialize_graph(triples, args.out, n_buckets=args.buckets)
     phases["triples_materialize_s"] = round(time.time() - t, 2)

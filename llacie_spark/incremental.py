@@ -47,7 +47,7 @@ from pyspark.sql import functions as F
 
 from .io import SnapshotCatalog
 from .materialize import build_edges, edge_partition_metrics, write_graph
-from .pipeline import SECS_IN_24H, episode_triples
+from .pipeline import episode_triples
 
 EDGES = "edges"
 EPISODE_NODES = "episode_nodes"
@@ -80,9 +80,6 @@ def derive_batch(
     new_doc_ids: DataFrame,
     doc_meta: DataFrame,
     n_buckets: int = 64,
-    argmin_strategy: str = "min_by",
-    time_limit_s: int = SECS_IN_24H,
-    stage_table: str = "extracted",
 ) -> dict:
     """Recompute + commit the graph contribution of one ingest batch.
 
@@ -91,16 +88,13 @@ def derive_batch(
     with the same batch converges to the same table state — upserts
     replace, tombstones re-delete)."""
     eps, adocs = affected_docs(new_doc_ids, doc_meta)
-    slice_df = cat.read_stage_pruned(spark, stage_table, keys_df=adocs)
+    slice_df = cat.read_stage_pruned(spark, "extracted", keys_df=adocs)
     if slice_df is None:
         return {"episodes": 0, "edges": 0, "retracted": 0, "metric_buckets": 0}
     # pruned read returns whole buckets (a superset); restrict to the
     # affected episodes' docs before the argmin
     slice_df = slice_df.join(adocs, "doc_id", "semi")
-    triples = episode_triples(
-        slice_df, doc_meta, time_limit_s=time_limit_s,
-        argmin_strategy=argmin_strategy,
-    )
+    triples = episode_triples(slice_df, doc_meta)
     new_edges = build_edges(triples, n_buckets).persist()
     # episodes whose recomputation produced NO triples: their previously
     # committed edges (if any) must be retracted — equality-delete

@@ -1,6 +1,6 @@
 """Relational entity linking: candidate-generation join + greedy rerank.
 
-The UDF linker (``pipeline.link_mentions``) broadcasts the whole dictionary
+The UDF linker (``Vocab.find_terms`` in ``pipeline.fused_extract``) broadcasts the whole dictionary
 into Python — right when the dictionary is ~1k concepts. At UMLS/SNOMED scale
 (millions of surface forms) the dictionary can't ride a closure, so linking
 becomes a dataflow problem (SURVEY.md J11 option b):
@@ -21,7 +21,7 @@ becomes a dataflow problem (SURVEY.md J11 option b):
    ``applyInPandas`` over (doc, line) groups — but by then the data is
    only the surviving candidates, not the corpus or the dictionary.
 
-Output matches ``link_mentions``: (doc_id, label_name, line_number) with
+Output matches ``Vocab.find_terms``: (doc_id, label_name, line_number) with
 line_number = earliest 1-based mention line (property-tested equal).
 """
 

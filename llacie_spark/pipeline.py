@@ -7,26 +7,31 @@ extract -s pres_sx_eplab2`` (``/root/reference/llacie/app.py:135-220``). The
 reference runs these as driver loops over Postgres batches + Slurm fan-out;
 here each stage is one Spark job:
 
-- every heavy text transform is a scalar Arrow-batched pandas UDF over a
-  single projected column — all other columns (including the ``spans``
-  payload with media refs) never leave the JVM;
+- the whole Python portion (section regex → scorer → vocabulary linking) is
+  ONE scalar Arrow-batched pandas UDF over the single projected
+  ``note_text`` column (``fused_extract``) — all other columns (including
+  the ``spans`` payload with media refs) never leave the JVM;
 - the vocabulary is broadcast once per job (``llacie/vocab.py:55-74``'s
   pickle cache analog);
 - lineage + metrics columns (stage, strategy, version, partition, runtime
   share, timestamp) are appended to every output, the analog of
   ``FK_strategy_id``/``strategy_runtime``/``feature_updated``
   (``llacie/sql/schema.sql:106-110``);
-- the span-sequence invariant: every stage output keeps (or can re-join by
-  doc_id to) the input ``spans`` column untouched; ``spans_fingerprint``
-  gives a cheap JVM-side equality check.
+- checkpointed runs stage ``fused_extract``'s output through the snapshot
+  catalog (``SnapshotCatalog.upsert``, ``run_kg --stage-root``) and derive
+  triples from the staged table with the same ``episode_triples``;
+- the span-sequence invariant: every stage output keeps the input ``spans``
+  column untouched; ``spans_fingerprint`` gives a cheap JVM-side equality
+  check.
 """
 
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.window import Window
 
 from .operators.sections import clean_note_text, extract_short_hpi
 from .schemas import PRED_HAS_SYMPTOM
@@ -65,255 +70,16 @@ def with_lineage(df: DataFrame, stage: str, strategy: str, version: str) -> Data
     )
 
 
-# --------------------------------------------------------------------------
-# stage 1: section extraction (reference stage 2, regex strategy)
-# --------------------------------------------------------------------------
-
-
-def extract_sections(documents_with_text: DataFrame) -> DataFrame:
-    """(doc_id, spans, note_text) -> + section_text (short HPI), lineage.
-
-    One scalar pandas UDF over note_text; Python regex semantics are kept
-    deliberately (SURVEY.md §7.3 — the verbose HPI patterns don't map 1:1 to
-    Java regex). Null section_text = extraction failure (counted, kept, so
-    the anti-join resume can retry them — reference regex.py:118-122).
-    """
-
-    @F.pandas_udf(T.StringType())
-    def hpi_udf(texts: pd.Series) -> pd.Series:
-        def one(t):
-            if t is None:
-                return None
-            hpi = extract_short_hpi(clean_note_text(t))
-            return hpi if hpi else None
-
-        return texts.map(one)
-
-    # asNondeterministic: stop Catalyst from duplicating the (expensive)
-    # Python expression when collapsing projects or pushing filters through
-    # it — the UDF chain would otherwise be evaluated once per consumer.
-    hpi_udf = hpi_udf.asNondeterministic()
-
-    out = documents_with_text.withColumn("section_text", hpi_udf("note_text"))
-    return with_lineage(out, "sections", "section.hpi_short.regex", "1.0.0")
-
-
-# --------------------------------------------------------------------------
-# stage 2: mention extraction (reference stage 3, batched scorer)
-# --------------------------------------------------------------------------
-
-
-def extract_mentions(sections: DataFrame, vocab: Vocab, scorer=None) -> DataFrame:
-    """+ mentions array<string> — the feature_value as a real array
-    (SURVEY.md §1.3) instead of the reference's newline-joined TEXT cell.
-
-    The scorer runs as a scalar Arrow-batched pandas UDF: one Python hop,
-    input = the section column only. A custom (LLM) scorer object may be
-    injected; it is constructed once per executor task, mirroring the
-    one-engine-per-worker design.
-    """
-    vocab_dicts = vocab.ngram_dicts  # tiny; serialized into the UDF closure
-
-    @F.pandas_udf(T.ArrayType(T.StringType()))
-    def scorer_udf(texts: pd.Series) -> pd.Series:
-        local_vocab = Vocab(ngram_dicts=vocab_dicts)
-        s = scorer or GazetteerScorer(canonicalize=local_vocab.find_terms)
-        return pd.Series(s.score_batch(texts.tolist()))
-
-    scorer_udf = scorer_udf.asNondeterministic()  # see extract_sections
-    out = sections.withColumn("mentions", scorer_udf("section_text"))
-    return with_lineage(out, "mentions", "feature.presenting_sx.gazetteer", "2.0.0")
-
-
-# --------------------------------------------------------------------------
-# stage 3: entity linking + episode labeling (reference stage 4)
-# --------------------------------------------------------------------------
-
-
-def link_mentions(mentions_df: DataFrame, vocab: Vocab) -> DataFrame:
-    """mentions -> exploded (label_name, line_number) pairs per doc.
-
-    Greedy longest-n-gram-first matching with earliest-line-wins semantics
-    (``llacie/vocab.py:100-121``), broadcast-dictionary pandas UDF form.
-    ``operators/linking.py`` holds the equivalent relational (salted
-    broadcast-join) form; both are property-tested equal.
-    """
-    vocab_dicts = vocab.ngram_dicts
-
-    match_type = T.ArrayType(
-        T.StructType(
-            [
-                T.StructField("label_name", T.StringType(), False),
-                T.StructField("line_number", T.LongType(), False),
-            ]
-        )
-    )
-
-    @F.pandas_udf(match_type)
-    def match_udf(mentions: pd.Series) -> pd.Series:
-        local_vocab = Vocab(ngram_dicts=vocab_dicts)
-
-        def one(ms):
-            if ms is None or len(ms) == 0:
-                return []
-            found = local_vocab.find_terms("\n".join(ms))
-            return [(term, line) for term, line in found.items()]
-
-        return mentions.map(one)
-
-    match_udf = match_udf.asNondeterministic()  # see extract_sections
-    return mentions_df.withColumn("matches", match_udf("mentions"))
-
-
-def episode_triples(
-    linked: DataFrame,
-    doc_meta: DataFrame,
-    time_limit_s: int = SECS_IN_24H,
-    broadcast_winners: bool = False,
-    argmin_strategy: str = "min_by",
-) -> DataFrame:
-    """Collapse per-note matches into per-episode (subj, pred, obj) triples.
-
-    Reference semantics (``llacie/db.py:237-275`` + pres_sx_eplab2): among an
-    episode's qualifying notes (cohort flags pass, service within 24 h of
-    episode start — filters F2/F4), take the *earliest* note that produced
-    features (argmin join J4, Postgres ``DISTINCT ON`` ≡ rank-1), and emit
-    one triple per matched term with the earliest mention line number.
-
-    Scale shape (this is the plan that survives 100 TB):
-
-    - the argmin runs over a SLIM projection — (episode_id, delta, doc_id,
-      matches) at ~100 bytes/row — as a ``min_by`` hash aggregation, not a
-      sort-window. Partial (map-side) aggregation keeps one candidate per
-      (episode, map partition), so the exchange moves winners-per-partition,
-      never every qualifying note; no sort, and document payloads never
-      enter this shuffle. (A sort-window here would shuffle the full text
-      payload of every qualifying note: ~2 KB/row × corpus — the measured
-      8→32-core drag in BENCH/profile_scaling.)
-    - the fat ``spans`` column is re-attached AFTER winner selection by a
-      doc_id join against the pre-UDF side of the plan. Catalyst prunes the
-      (nondeterministic) extraction UDF out of that branch — verified by
-      tests/test_plans.py — so extraction still executes exactly once; the
-      branch is a 2-column re-scan of documents restricted to winners.
-    - the winners→spans join is left to AQE (default): at runtime the slim
-      winners side converts to a broadcast join when it fits, so the
-      documents side never shuffles; beyond broadcast capacity it degrades
-      to a shuffle that still moves only 2 columns. ``broadcast_winners=
-      True`` forces the hint — measured SLOWER here (a forced broadcast
-      whose build side contains the extraction UDF made AQE execute that
-      subtree twice under count-only consumers), so prefer the default.
-
-    ``argmin_strategy``: ``"min_by"`` (the slim-agg + re-join plan above,
-    default) or ``"window_fat"`` (the round-1 rank-1 window carrying the
-    ``spans`` payload through the episode shuffle — no re-join). The two are
-    result-identical (tests pin it); ``scripts/argmin_ab.py`` measures the
-    crossover so the choice is data, not vibes. Measured (interleaved
-    best-of-3, BENCH/ARGMIN_AB.md): window_fat wins at 40k docs (7.7 vs
-    10.5 s) and still at 240k (20.3 vs 21.7 s) on this host — min_by's
-    spans re-join branch re-reads/regenerates the payload column, which at
-    these scales costs more than the fat window shuffle it avoids.
-
-    When each form is right:
-
-    - **window_fat**: unbucketed small/mid corpora (one scan; the exchange
-      carries only QUALIFYING notes' payloads — after selective F1/F2/F4
-      filters that is a fraction of the corpus).
-    - **min_by**: the winners side fits broadcast (episodes ≪ docs), OR the
-      documents table is bucketed/clustered by doc_id (``io.write_bucketed``
-      / Iceberg bucket partitioning) so the re-join needs no exchange on the
-      payload side. When neither holds at 10^12 docs, the re-join would
-      itself shuffle the FULL payload column on doc_id — strictly worse than
-      window_fat's qualifying-only shuffle. Pick with measurements, not
-      slogans.
-    """
-    if argmin_strategy not in ("min_by", "window_fat"):
-        raise ValueError(f"unknown argmin_strategy: {argmin_strategy!r}")
-    delta = (
-        F.unix_timestamp("date_of_service_ts") - F.unix_timestamp("episode_start_ts")
-    ).alias("delta")
-    if argmin_strategy == "window_fat":
-        from pyspark.sql.window import Window
-
-        qualifying = (
-            linked.join(doc_meta, "doc_id")
-            .where(F.col("infection_criteria") & ~F.col("excl_st0_combined"))
-            .where(F.col("note_type") == "H&P")
-            .withColumn("delta", delta)
-            .where(F.col("delta") < F.lit(time_limit_s))
-            .where(F.col("section_text").isNotNull() & F.col("matches").isNotNull())
-        )
-        w = Window.partitionBy("episode_id").orderBy(
-            F.col("delta").asc(), F.col("doc_id").asc()
-        )
-        earliest = (
-            qualifying.withColumn("rn", F.row_number().over(w))
-            .where("rn = 1")
-            .select("episode_id", "doc_id", "matches", "spans")
-        )
-        return _emit_triples(earliest)
-    qualifying = (
-        linked.select("doc_id", "section_text", "matches")  # slim: no payloads
-        .join(doc_meta, "doc_id")
-        .where(F.col("infection_criteria") & ~F.col("excl_st0_combined"))  # F2
-        .where(F.col("note_type") == "H&P")  # F1
-        .withColumn("delta", delta)
-        .where(F.col("delta") < F.lit(time_limit_s))  # F4
-        # J7: qualify on section/feature presence (a scored note with zero
-        # matches still wins the argmin and yields no labels — reference
-        # get_earliest_notes_with_feature semantics, db.py:237-275)
-        .where(F.col("section_text").isNotNull() & F.col("matches").isNotNull())
-    )
-    # rank-1 ≡ min_by over the (delta, doc_id) sort key: lexicographic struct
-    # ordering keeps the deterministic doc_id tie-break
-    earliest = qualifying.groupBy("episode_id").agg(
-        F.min_by(
-            F.struct("doc_id", "matches"), F.struct(F.col("delta"), F.col("doc_id"))
-        ).alias("w")
-    ).select(
-        "episode_id",
-        F.col("w.doc_id").alias("doc_id"),
-        F.col("w.matches").alias("matches"),
-    )
-    if broadcast_winners:
-        earliest = F.broadcast(earliest)
-    spans_side = linked.select("doc_id", "spans")  # UDF pruned out of this branch
-    return _emit_triples(earliest.join(spans_side, "doc_id"))
-
-
-def _emit_triples(winners: DataFrame) -> DataFrame:
-    """(episode_id, doc_id, matches, spans) winners -> exploded triples."""
-    triples = winners.select(
-        "episode_id",
-        "doc_id",
-        F.lit(PRED_HAS_SYMPTOM).alias("pred"),
-        F.explode("matches").alias("m"),
-        "spans",
-    ).select(
-        "episode_id",
-        "doc_id",
-        "pred",
-        F.col("m.label_name").alias("label_name"),
-        F.lit(1.0).alias("label_value"),  # constant in the reference (db.py:747)
-        F.col("m.line_number").alias("line_number"),
-        "spans",
-    )
-    return with_lineage(triples, "triples", "episode_label.pres_sx_eplab2", "1.0.0")
-
-
-# --------------------------------------------------------------------------
-# end-to-end
-# --------------------------------------------------------------------------
-
-
 def fused_extract(documents_with_text: DataFrame, vocab: Vocab, scorer=None) -> DataFrame:
     """sections+mentions+linking as ONE pandas UDF returning a struct.
 
-    Three chained ArrowEvalPython nodes each get their own Python worker
-    pool per task slot (3x workers, poor reuse, 3 Arrow round-trips); for
-    the single-job path we fuse the whole Python portion into one node —
-    one worker pool, one Arrow round-trip, and the text crosses the
-    JVM/Python boundary exactly once. The per-stage functions remain the
-    checkpointed (stage-per-table) path.
+    Three chained ArrowEvalPython nodes would each get their own Python
+    worker pool per task slot (3x workers, poor reuse, 3 Arrow round-trips);
+    one node means one worker pool, one Arrow round-trip, and the text
+    crosses the JVM/Python boundary exactly once. Null ``section_text`` is
+    an extraction failure (kept, so the anti-join resume can retry it —
+    reference regex.py:118-122). Python regex semantics are kept
+    deliberately (SURVEY.md §7.3). A custom (LLM) scorer may be injected.
     """
     vocab_dicts = vocab.ngram_dicts
 
@@ -383,6 +149,53 @@ def fused_extract(documents_with_text: DataFrame, vocab: Vocab, scorer=None) -> 
     return with_lineage(out, "extract", "fused.gazetteer", "2.0.0")
 
 
+def episode_triples(linked: DataFrame, doc_meta: DataFrame) -> DataFrame:
+    """Collapse per-note matches into per-episode (subj, pred, obj) triples.
+
+    Reference semantics (``llacie/db.py:237-275`` + pres_sx_eplab2): among an
+    episode's qualifying notes (cohort flags pass, service within 24 h of
+    episode start — filters F2/F4), take the *earliest* note that produced
+    features (argmin join J4, Postgres ``DISTINCT ON`` ≡ rank-1 over
+    ``(delta, doc_id)``, so ties go to the smaller doc_id), and emit one
+    triple per matched term with the earliest mention line number.
+
+    The rank-1 window carries ``spans`` through the episode exchange: only
+    qualifying notes reach it, and no second scan re-joins the payload.
+    """
+    delta = (
+        F.unix_timestamp("date_of_service_ts") - F.unix_timestamp("episode_start_ts")
+    ).alias("delta")
+    qualifying = (
+        linked.join(doc_meta, "doc_id")
+        .where(F.col("infection_criteria") & ~F.col("excl_st0_combined"))  # F2
+        .where(F.col("note_type") == "H&P")  # F1
+        .withColumn("delta", delta)
+        .where(F.col("delta") < F.lit(SECS_IN_24H))  # F4
+        # J7: qualify on section/feature presence (a scored note with zero
+        # matches still wins the argmin and yields no labels — reference
+        # get_earliest_notes_with_feature semantics, db.py:237-275)
+        .where(F.col("section_text").isNotNull() & F.col("matches").isNotNull())
+    )
+    w = Window.partitionBy("episode_id").orderBy(F.col("delta").asc(), F.col("doc_id").asc())
+    earliest = qualifying.withColumn("rn", F.row_number().over(w)).where("rn = 1")
+    triples = earliest.select(
+        "episode_id",
+        "doc_id",
+        F.lit(PRED_HAS_SYMPTOM).alias("pred"),
+        F.explode("matches").alias("m"),
+        "spans",
+    ).select(
+        "episode_id",
+        "doc_id",
+        "pred",
+        F.col("m.label_name").alias("label_name"),
+        F.lit(1.0).alias("label_value"),  # constant in the reference (db.py:747)
+        F.col("m.line_number").alias("line_number"),
+        "spans",
+    )
+    return with_lineage(triples, "triples", "episode_label.pres_sx_eplab2", "1.0.0")
+
+
 def filter_terms(
     df: DataFrame,
     whitelist,
@@ -419,58 +232,16 @@ def docs_partitions(n_docs: int, cores: int, docs_per_task: int = 1000) -> int:
     return min(8 * cores, max(2 * cores, n_docs // docs_per_task))
 
 
-def repartition_by_cost(
-    df: DataFrame,
-    text_col: str = "note_text",
-    chars_per_task: int = 2_000_000,
-    min_partitions: int | None = None,
-) -> DataFrame:
-    """Size-aware repartition before a Python-heavy stage.
+def run_pipeline(documents: DataFrame, doc_meta: DataFrame, vocab: Vocab, scorer=None) -> DataFrame:
+    """documents + doc_meta -> triples, all stages in one plan (the Python
+    portion fused into a single UDF node).
 
-    Note length is skewed (the reference autotrims because some HPIs blow
-    the model window, llama3_8b.py:62); with layout-inherited partitions a
-    run of giant documents stalls one task. Repartitioning on a random-ish
-    key with the partition count derived from total text volume bounds
-    per-task Python work — the declarative version of the reference's
-    50-notes-per-job byterm sharding (byterm.py:35).
-
-    Costs one shuffle of the text; worth it only when the downstream Python
-    work dominates (it does for LLM scorers; for the gazetteer it's
-    optional, hence a separate helper rather than always-on).
-
-    The volume estimate reads a ~0.1 % sample, not the full column — a full
-    pre-scan would be an extra pass over the corpus at 100 TB. The sample
-    mean length × an exact (cheap, text-free) row count bounds the error
-    well below the 2x slack any chars_per_task choice already has.
-    """
-    spark = df.sparkSession
-    n_rows = df.count()  # column-pruned count: no text is read
-    frac = min(1.0, max(0.001, 10_000 / max(n_rows, 1)))
-    mean_len = (
-        df.sample(fraction=frac, seed=7).select(F.avg(F.length(text_col))).first()[0] or 0.0
-    )
-    n = max(
-        min_partitions or spark.sparkContext.defaultParallelism,
-        int(n_rows * mean_len / chars_per_task) + 1,
-    )
-    return df.repartition(n, F.col("doc_id"))
-
-
-def run_pipeline(
-    documents: DataFrame,
-    doc_meta: DataFrame,
-    vocab: Vocab,
-    scorer=None,
-    argmin_strategy: str = "min_by",
-) -> DataFrame:
-    """documents + doc_meta -> triples, all four stages in one plan (the
-    Python portion fused into a single UDF node).
-
-    When stages are checkpointed individually (resume support), use the
-    per-stage functions with ``io.write_stage`` between them instead.
+    For resumable runs, stage ``fused_extract``'s output with
+    ``SnapshotCatalog.upsert`` and call ``episode_triples`` on the staged
+    table instead (``run_kg --stage-root``).
     """
     from .corpus import assemble_text
 
     with_text = assemble_text(documents)
     linked = fused_extract(with_text, vocab, scorer=scorer)
-    return episode_triples(linked, doc_meta, argmin_strategy=argmin_strategy)
+    return episode_triples(linked, doc_meta)

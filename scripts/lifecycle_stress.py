@@ -91,7 +91,6 @@ def invoke(
         "--docs", str(docs), "--out", out, "--stage-root", stage_root,
         "--stage-buckets", "auto", "--stage-maintenance",
         "--stage-split-target-mb", str(SPLIT_TARGET_MB),
-        "--argmin-strategy", "window_fat",
         *(extra or []),
     ]
     t0 = time.time()

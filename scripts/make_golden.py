@@ -72,13 +72,13 @@ def main():
     print(f"kg_triples.parquet: {len(t_rows)} triples")
 
     from llacie_spark.corpus import assemble_text
-    from llacie_spark.pipeline import extract_mentions, extract_sections
+    from llacie_spark.pipeline import fused_extract
     from llacie_spark.vocab import Vocab
 
     vocab = Vocab.from_csv(str(REPO / "fixtures/vocab_pres_sx_v2.csv"))
-    mentions = extract_mentions(
-        extract_sections(assemble_text(docs)), vocab
-    ).select("doc_id", "mentions").orderBy("doc_id")
+    mentions = fused_extract(assemble_text(docs), vocab).select(
+        "doc_id", "mentions"
+    ).orderBy("doc_id")
     write_single_parquet(mentions, GOLDEN / "mentions.parquet")
     print(f"mentions.parquet: {mentions.count()} docs")
 

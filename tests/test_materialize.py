@@ -61,8 +61,7 @@ def test_materialize_empty_triples(spark, vocab, tmp_path):
 
 def test_materialize_executes_extraction_exactly_once(spark, vocab, tmp_path):
     """VERDICT r01 item 3: materialize_graph writes nodes+edges and derives
-    metrics/counts WITHOUT re-running the upstream pipeline — and the new
-    episode_triples spans re-join must not re-trigger the UDF either."""
+    metrics/counts WITHOUT re-running the upstream pipeline."""
 
     # defined in-function so cloudpickle ships it by value (tests/ is not
     # importable on executors); the accumulator observes executor-side work

@@ -5,18 +5,15 @@ Mirrors the reference quickstart chain (tests/integration/test_quickstart.py):
 live LLM (deterministic gazetteer scorer instead, like the SKIPTO fixture).
 """
 
+from pathlib import Path
+
 import pytest
 
 from llacie_spark.corpus import assemble_text, reference_doc_meta, reference_documents
 from llacie_spark.evaluate import confusion_counts, first_annotator_labels
-from llacie_spark.pipeline import (
-    episode_triples,
-    extract_mentions,
-    extract_sections,
-    link_mentions,
-    run_pipeline,
-    spans_fingerprint,
-)
+from llacie_spark.pipeline import fused_extract, run_pipeline, spans_fingerprint
+
+REPO = Path(__file__).resolve().parents[1]
 
 
 @pytest.fixture(scope="module")
@@ -51,9 +48,21 @@ def test_documents_shape(docs):
     assert offsets == list(range(len(offsets)))  # strictly increasing from 0
 
 
-def test_sections_extracted_for_all_docs(docs, vocab):
-    sec = extract_sections(assemble_text(docs))
-    assert sec.where("section_text is not null").count() == 100
+def test_sections_extracted_for_all_docs(spark, docs, vocab):
+    """Every fixture note yields a section, and the extraction's
+    (doc_id, mentions) is the committed golden mentions row for row — the
+    frame ``scripts/make_golden.py`` writes."""
+    ext = fused_extract(assemble_text(docs), vocab)
+    assert ext.where("section_text is not null").count() == 100
+    got = ext.select("doc_id", "mentions").orderBy("doc_id").collect()
+    golden = (
+        spark.read.parquet(str(REPO / "fixtures/golden/mentions.parquet"))
+        .orderBy("doc_id")
+        .collect()
+    )
+    assert [(r.doc_id, list(r.mentions)) for r in got] == [
+        (r.doc_id, list(r.mentions)) for r in golden
+    ]
 
 
 def test_triples_emitted(triples):
@@ -116,7 +125,8 @@ def test_cohort_and_time_filters(spark, docs, vocab):
 
 
 def test_argmin_join_picks_earliest_note(spark, vocab):
-    """Two qualifying notes in one episode -> labels come from the earlier."""
+    """Two qualifying notes in one episode -> labels come from the earlier;
+    at equal service time, from the smaller doc_id."""
     from pyspark.sql import functions as F
 
     from llacie_spark.schemas import DOC_META, DOCUMENTS
@@ -151,31 +161,12 @@ def test_argmin_join_picks_earliest_note(spark, vocab):
     assert {r.doc_id for r in rows} == {"d2"}  # earlier note wins
     assert {r.label_name for r in rows} == {"chills"}
 
-
-def test_argmin_strategies_identical(spark, docs, meta, vocab, triples):
-    """The min_by slim-agg form and the rank-1 window form are physical
-    alternatives for the same operator (scripts/argmin_ab.py measures the
-    crossover); their semantic output must be row-identical."""
-    semantic = [
-        "episode_id", "doc_id", "pred", "label_name",
-        "label_value", "line_number", "spans",
-    ]
-    a = triples.select(semantic)
-    b = run_pipeline(docs, meta, vocab, argmin_strategy="window_fat").select(semantic)
-    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
-    with pytest.raises(ValueError, match="argmin_strategy"):
-        run_pipeline(docs, meta, vocab, argmin_strategy="nope")
-
-
-def test_repartition_by_cost(spark, docs, vocab):
-    from llacie_spark.corpus import assemble_text
-    from llacie_spark.pipeline import repartition_by_cost, run_pipeline
-    from llacie_spark.corpus import reference_doc_meta
-
-    wt = assemble_text(docs)
-    rep = repartition_by_cost(wt, chars_per_task=20_000, min_partitions=2)
-    assert rep.rdd.getNumPartitions() >= 10  # ~350KB corpus / 20KB per task
-    assert rep.count() == 100  # no rows lost
+    # equal date_of_service_ts: the (delta, doc_id) order picks the smaller
+    # doc_id, whichever note the input yields first
+    tied = meta.withColumn("date_of_service_ts", F.to_timestamp(F.lit("3000-01-01 01:00:00")))
+    for ordered in (docs.orderBy("doc_id"), docs.orderBy(F.col("doc_id").desc())):
+        rows = run_pipeline(ordered.coalesce(1), tied, vocab).select("doc_id", "label_name")
+        assert {tuple(r) for r in rows.collect()} == {("d1", "fever")}
 
 
 def test_fused_udf_batches_scorer_calls(spark, docs, vocab):
@@ -185,7 +176,6 @@ def test_fused_udf_batches_scorer_calls(spark, docs, vocab):
     one process spawn per row — measured 191 vs ~8,000 docs/sec at 40k docs
     (BENCH/SUBPROCESS_SCORER.md). Counted via accumulator; the scorer class
     is function-local so cloudpickle ships it by value."""
-    from llacie_spark.pipeline import fused_extract
     from llacie_spark.scorer import GazetteerScorer
 
     calls = spark.sparkContext.accumulator(0)
@@ -218,7 +208,6 @@ def test_fused_udf_rejects_length_mismatched_scorer(spark, docs, vocab):
     """A backend returning the wrong number of results (truncated subprocess
     stdout, LLM batch drop) must fail loudly — pre-r6 the zip silently gave
     trailing documents empty mentions (ADVICE r5)."""
-    from llacie_spark.pipeline import fused_extract
 
     class TruncatingScorer:
         name = "feature.presenting_sx.truncating"

@@ -75,8 +75,3 @@ def test_run_kg_job_with_scorer_and_redo(spark, tmp_path, capsys, monkeypatch):
     redo = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert redo["resumed_docs"] == 60  # all rows stale -> full re-extraction
     assert redo["edges"] == first["edges"]
-
-    # the argmin physical form is a CLI choice; both forms emit the same graph
-    job.main(base + ["--argmin-strategy", "window_fat"])
-    wf = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert wf["edges"] == first["edges"]
