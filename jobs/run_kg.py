@@ -120,21 +120,6 @@ def main(argv: list[str]) -> None:
     phases = {}
     if args.stage_root:
         cat = SnapshotCatalog(args.stage_root)
-        # one-time migration for stage roots written before note_text was
-        # dropped from the persisted stage (ADVICE r5): a metadata-only
-        # column drop, otherwise the next upsert batch — now a column
-        # SUBSET of the old table — would hard-fail _check_schema with no
-        # way forward. Idempotent: returns [] once the column is gone.
-        cur = cat.current_snapshot("extracted")
-        if cur and cur.get("bucket_key") and "note_text" in (
-            cat._column_names(cur) or []
-        ):
-            cat.drop_columns(spark, "extracted", "note_text")
-            print(
-                "migrated stage table 'extracted': dropped persisted "
-                "note_text (re-derivable from spans)",
-                file=sys.stderr,
-            )
         todo = cat.unfinished(
             spark, docs, "extracted", "doc_id", redo_older_than=args.redo_older_than
         )

@@ -116,7 +116,7 @@ def derive_batch(
     try:
         n_new = new_edges.count()
         cur = cat.current_snapshot(EDGES)
-        if cur is not None and cur.get("n_buckets") not in (None, n_buckets):
+        if cur is not None and cur["n_buckets"] != n_buckets:
             raise ValueError(
                 f"edges table bucketed at base {cur['n_buckets']} != graph "
                 f"n_buckets {n_buckets}: metrics-bucket/leaf alignment broken"
@@ -130,7 +130,7 @@ def derive_batch(
         if cat.current_snapshot(EDGES) is not None:
             n_retracted = retracted.count()
             if n_retracted:
-                cat.delete_keys(spark, retracted, EDGES)
+                cat.delete_keys(retracted, EDGES)
         # ---- episode nodes: exact (present iff ≥1 edge) -------------------
         ep_nodes = new_edges.select(
             F.col("subj").alias("node_id"),
@@ -144,7 +144,7 @@ def derive_batch(
             )
         if n_retracted and cat.current_snapshot(EPISODE_NODES) is not None:
             cat.delete_keys(
-                spark, retracted.select(F.col("subj").alias("node_id")),
+                retracted.select(F.col("subj").alias("node_id")),
                 EPISODE_NODES,
             )
         # ---- metrics: recompute ONLY the touched subj-buckets ------------
@@ -199,7 +199,7 @@ def derive_batch(
                         new_metrics.select("pred", "subj_bucket"),
                         ["pred", "subj_bucket"], "left_anti",
                     )
-                cat.delete_keys(spark, dead, EDGE_METRICS)
+                cat.delete_keys(dead, EDGE_METRICS)
         finally:
             if new_metrics is not None:
                 new_metrics.unpersist()
@@ -228,7 +228,7 @@ def derive_batch(
                 gone = old_concepts.select("node_id").join(
                     live.select("node_id"), "node_id", "left_anti"
                 )
-                cat.delete_keys(spark, gone, CONCEPT_NODES)
+                cat.delete_keys(gone, CONCEPT_NODES)
         finally:
             live.unpersist()
     n_eps = eps.count()

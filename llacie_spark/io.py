@@ -51,18 +51,18 @@ Layout per table::
 
     <root>/<name>/snap-<k>/_mod=<m>/_bucket=<b>/part-*.parquet
     <root>/<name>/_SNAPSHOT.json
-    #  {"snapshot": k, "n_buckets": n, "bucket_mods": {"3": 2n, ...},
-    #   "columns": [["k","bigint"], ...], "buckets": {"b@m": "snap-j", ...},
+    #  {"format": 1, "snapshot": k, "bucket_key": ["k"], "n_buckets": n,
+    #   "bucket_mods": {"3": 2n, ...}, "columns": [["k","bigint"], ...],
+    #   "buckets": {"b@m": "snap-j", ...},
     #   "deltas": {"b@m": ["snap-p", "snap-q"], ...}}   # MoR, oldest->newest
 
-A key with hash h belongs to bucket ``(h % m_b) @ m_b`` where ``m_b`` is the
-modulus recorded for its base bucket ``h % n`` (n if never split). Manifest
-bucket entries created before the split feature use the legacy ``"b"`` key
-and ``snap-<k>/_bucket=<b>`` path; both are read transparently and upgraded
-to the ``"b@m"`` form whenever the bucket is next rewritten.
-
-(Unbucketed tables — written without a key — keep the flat
-``snap-<k>/part-*.parquet`` layout; the first upsert converts them.)
+Every table has this one format: key-bucketed, typed ``[name, dtype]``
+columns, ``"b@m"`` entries only. ``format`` is :data:`MANIFEST_FORMAT`;
+:meth:`SnapshotCatalog.current_snapshot` — the only manifest read — refuses
+any other value, so a stage root written by an older catalog must be
+rebuilt (:meth:`SnapshotCatalog.drop` still clears it). A key with hash h
+belongs to bucket ``(h % m_b) @ m_b`` where ``m_b`` is the modulus recorded
+for its base bucket ``h % n`` (n if never split).
 
 Concurrency (Iceberg's optimistic model, miniaturized): every write attempt
 first claims a UNIQUE snapshot directory via atomic ``mkdir``
@@ -86,6 +86,9 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+# the one manifest format this catalog writes and reads
+MANIFEST_FORMAT = 1
 
 
 class CommitConflict(RuntimeError):
@@ -111,13 +114,20 @@ class SnapshotCatalog:
         return self.root / name / "_SNAPSHOT.json"
 
     def current_snapshot(self, name: str) -> dict | None:
-        p = self._manifest_path(name)
-        if not p.exists():
-            return None
+        """The committed manifest of ``name`` (None if absent or torn) —
+        the one place a manifest is read. Raises ``ValueError`` on any
+        format other than :data:`MANIFEST_FORMAT`."""
         try:
-            return json.loads(p.read_text())
+            cur = json.loads(self._manifest_path(name).read_text())
         except (json.JSONDecodeError, OSError):
-            return None  # torn manifest = uncommitted
+            return None  # absent, or torn manifest = uncommitted
+        if cur.get("format") != MANIFEST_FORMAT:
+            raise ValueError(
+                f"table {name!r} has manifest format {cur.get('format')!r}; "
+                f"this catalog reads only format {MANIFEST_FORMAT} — rebuild "
+                f"the stage root {str(self.root)!r}"
+            )
+        return cur
 
     def _reserve_snap(self, name: str, start_id: int) -> int:
         """Claim a unique snapshot id by atomically creating its directory
@@ -148,7 +158,10 @@ class SnapshotCatalog:
         hook, self._commit_hook = self._commit_hook, None
         if hook is not None:
             hook()
-        manifest = {"snapshot": snap_id, "committed_at": time.time(), **meta}
+        manifest = {
+            "format": MANIFEST_FORMAT, "snapshot": snap_id,
+            "committed_at": time.time(), **meta,
+        }
         p = self._manifest_path(name)
         p.parent.mkdir(parents=True, exist_ok=True)
         import fcntl
@@ -178,11 +191,8 @@ class SnapshotCatalog:
             # deployments MUST give vacuum a grace window (older_than_s);
             # Iceberg's remove_orphan_files carries the same requirement.
             snap_name = f"snap-{snap_id}"
-            refs = [
-                k for k, s in (meta.get("buckets") or {}).items()
-                if s == snap_name
-            ]
-            for k, legs in (meta.get("deltas") or {}).items():
+            refs = [k for k, s in meta["buckets"].items() if s == snap_name]
+            for k, legs in meta["deltas"].items():
                 for d in legs:
                     if self._delta_snap(d)[0] == snap_name:
                         refs.append(k)
@@ -262,9 +272,14 @@ class SnapshotCatalog:
         n_leaves = base - len(bucket_mods) + sum(
             m // base for m in bucket_mods.values()
         )
+        # append, never overwrite: the directory was just reserved by this
+        # writer's mkdir, and a static overwrite would delete it before the
+        # job writes — a window in which a concurrent _reserve_snap can
+        # claim the same id and one writer's overwrite deletes the other's
+        # committed leaves
         (
             out.repartition(n_leaves, "_mod", "_bucket")
-            .write.mode("overwrite")
+            .write.mode("append")
             .partitionBy("_mod", "_bucket")
             .parquet(str(path))
         )
@@ -278,20 +293,14 @@ class SnapshotCatalog:
         return sorted(written)
 
     def _entry_path(self, name: str, snap: str, entry_key: str) -> Path:
-        """Filesystem path for a manifest bucket entry. ``"b@m"`` is the
-        current layout; a bare ``"b"`` is a legacy pre-split entry living at
-        ``snap/_bucket=b`` (modulus == n_buckets)."""
-        if "@" in entry_key:
-            b, m = entry_key.split("@", 1)
-            return self.root / name / snap / f"_mod={m}" / f"_bucket={b}"
-        return self.root / name / snap / f"_bucket={entry_key}"
+        """Filesystem path for a ``"b@m"`` manifest bucket entry."""
+        b, m = entry_key.split("@", 1)
+        return self.root / name / snap / f"_mod={m}" / f"_bucket={b}"
 
     @staticmethod
-    def _entry_bucket_mod(entry_key: str, base: int) -> tuple[int, int]:
-        if "@" in entry_key:
-            b, m = entry_key.split("@", 1)
-            return int(b), int(m)
-        return int(entry_key), base
+    def _entry_bucket_mod(entry_key: str) -> tuple[int, int]:
+        b, m = entry_key.split("@", 1)
+        return int(b), int(m)
 
     def _bucket_paths(self, name: str, cur: dict) -> list[str]:
         return [
@@ -303,15 +312,20 @@ class SnapshotCatalog:
     def _entry_for(b: int, m: int) -> str:
         return f"{b}@{m}"
 
+    @staticmethod
+    def _bucket_mods(cur: dict) -> dict[int, int]:
+        """The manifest's per-base-bucket moduli, as ints."""
+        return {int(k): int(v) for k, v in cur["bucket_mods"].items()}
+
     # -------------------------------------------------------- merge-on-read
 
-    def _delta_map(self, cur: dict) -> dict[str, list]:
-        """Manifest delta lists, keyed by CANONICAL ``b@m`` entry (a base
-        pointer may still sit under a legacy ``"b"`` key; its deltas are
-        always recorded canonically). Elements are either a snap name
-        (data delta) or ``{"snap": ..., "tombstone": true}`` (key-deletion
-        delta — Iceberg's equality-delete file)."""
-        return {k: list(v) for k, v in (cur.get("deltas") or {}).items()}
+    @staticmethod
+    def _delta_map(cur: dict) -> dict[str, list]:
+        """A copy of the manifest delta lists, keyed by ``b@m`` entry.
+        Elements are either a snap name (data delta) or ``{"snap": ...,
+        "tombstone": true}`` (key-deletion delta — Iceberg's equality-delete
+        file)."""
+        return {k: list(v) for k, v in cur["deltas"].items()}
 
     @staticmethod
     def _delta_snap(entry) -> tuple[str, bool]:
@@ -325,7 +339,7 @@ class SnapshotCatalog:
         spark: SparkSession,
         legs: list[tuple[int, bool, list[str]]],
         keys: list[str],
-        pairs: list[list[str]] | None,
+        pairs: list[list[str]],
     ) -> DataFrame:
         """Resolve merge-on-read: ``legs`` holds (generation, is_tombstone,
         paths) — generation 0 = base files, 1.. = delta snapshots
@@ -340,22 +354,17 @@ class SnapshotCatalog:
         its old edges). The per-key ``max(_gen)`` window is the MoR read
         tax: one extra shuffle of the delta-laden buckets, paid at scan
         instead of at write. ``pairs`` is the full (name, dtype) table
-        schema; required whenever a tombstone leg is present (tombstone
-        rows are padded to it with typed NULLs before the union)."""
+        schema; tombstone rows are padded to it with typed NULLs before the
+        union."""
         from functools import reduce
 
         from pyspark.sql.window import Window
 
-        ddl = self._schema_ddl(pairs) if pairs is not None else None
         dfs = []
         for gen, tomb, paths in legs:
             if not paths:
                 continue
             if tomb:
-                if pairs is None:
-                    raise ValueError(
-                        "tombstone deltas require a manifest column record"
-                    )
                 key_ddl = self._schema_ddl([p for p in pairs if p[0] in keys])
                 d = spark.read.schema(key_ddl).parquet(*paths)
                 for c, t in pairs:
@@ -363,10 +372,7 @@ class SnapshotCatalog:
                         d = d.withColumn(c, F.lit(None).cast(t))
                 d = d.select(*[c for c, _t in pairs])
             else:
-                reader = spark.read
-                if ddl is not None:
-                    reader = reader.schema(ddl)
-                d = reader.parquet(*paths)
+                d = spark.read.schema(self._schema_ddl(pairs)).parquet(*paths)
             dfs.append(
                 d.withColumn("_gen", F.lit(gen)).withColumn("_dead", F.lit(tomb))
             )
@@ -378,13 +384,6 @@ class SnapshotCatalog:
             .drop("_gen", "_maxgen", "_dead")
         )
 
-    def _base_lookup(self, cur: dict, b: int, m: int, base: int) -> str | None:
-        """Base snapshot for leaf (b, m), under either manifest key form."""
-        snap = cur["buckets"].get(self._entry_for(b, m))
-        if snap is None and m == base:
-            snap = cur["buckets"].get(str(b))
-        return snap
-
     def _leaf_groups(
         self, name: str, cur: dict, entries: list[tuple[int, int]]
     ) -> list[tuple[int, bool, list[str]]]:
@@ -394,21 +393,18 @@ class SnapshotCatalog:
         same-position deltas differ in kind don't share a leg; generation
         numbers stay monotone within every bucket because a single bucket
         has exactly one kind at each position."""
-        base = cur["n_buckets"]
-        deltas = self._delta_map(cur)
         acc: dict[tuple[int, bool], list[str]] = {}
         for b, m in entries:
-            canon = self._entry_for(b, m)
-            snap = self._base_lookup(cur, b, m, base)
+            entry = self._entry_for(b, m)
+            snap = cur["buckets"].get(entry)
             if snap is not None:
-                key = canon if canon in cur["buckets"] else str(b)
                 acc.setdefault((0, False), []).append(
-                    str(self._entry_path(name, snap, key))
+                    str(self._entry_path(name, snap, entry))
                 )
-            for i, d in enumerate(deltas.get(canon, []), start=1):
+            for i, d in enumerate(cur["deltas"].get(entry, []), start=1):
                 dsnap, tomb = self._delta_snap(d)
                 acc.setdefault((i, tomb), []).append(
-                    str(self._entry_path(name, dsnap, canon))
+                    str(self._entry_path(name, dsnap, entry))
                 )
         return [
             (gen, tomb, paths)
@@ -420,14 +416,10 @@ class SnapshotCatalog:
         return any(gen > 0 for gen, _tomb, _paths in legs)
 
     def _leaf_entries(self, cur: dict) -> list[tuple[int, int]]:
-        """All (bucket, modulus) leaves of a bucketed table."""
-        base = cur["n_buckets"]
-        seen = {
-            self._entry_bucket_mod(k, base) for k in cur.get("buckets", {})
-        }
-        for canon in self._delta_map(cur):
-            seen.add(self._entry_bucket_mod(canon, base))
-        return sorted(seen)
+        """All (bucket, modulus) leaves of a table."""
+        return sorted(
+            {self._entry_bucket_mod(k) for k in (*cur["buckets"], *cur["deltas"])}
+        )
 
     def leaves_for_base_buckets(
         self, name: str, base_ids: set[int] | list[int]
@@ -440,7 +432,7 @@ class SnapshotCatalog:
         arithmetic themselves. Feed the result to
         :meth:`read_stage_pruned`'s ``leaves``."""
         cur = self.current_snapshot(name)
-        if cur is None or not cur.get("bucket_key"):
+        if cur is None:
             return []
         base = cur["n_buckets"]
         wanted = {int(b) for b in base_ids}
@@ -460,40 +452,29 @@ class SnapshotCatalog:
         laden buckets pay the newest-generation-wins merge. The split keeps
         the MoR read tax proportional to un-compacted data, not table
         size."""
-        base = cur["n_buckets"]
-        deltas = self._delta_map(cur)
-        pairs = self._schema_pairs(cur)
         pure_paths, merged_entries = [], []
         for b, m in entries:
-            canon = self._entry_for(b, m)
-            snap = self._base_lookup(cur, b, m, base)
-            if deltas.get(canon):
+            entry = self._entry_for(b, m)
+            snap = cur["buckets"].get(entry)
+            if cur["deltas"].get(entry):
                 merged_entries.append((b, m))
             elif snap is not None:
-                key = canon if canon in cur["buckets"] else str(b)
-                pure_paths.append(str(self._entry_path(name, snap, key)))
+                pure_paths.append(str(self._entry_path(name, snap, entry)))
         if not pure_paths and not merged_entries:
             return None
-        if pairs is None:
-            # legacy manifest without recorded dtypes: pin the schema from
-            # one base file so every generation unions consistently
-            sample = (
-                pure_paths[0]
-                if pure_paths
-                else self._leaf_groups(name, cur, merged_entries)[0][2][0]
-            )
-            pairs = [[c, t] for c, t in spark.read.parquet(sample).dtypes]
-        ddl = self._schema_ddl(pairs)
         parts = []
         if pure_paths:
-            parts.append(spark.read.schema(ddl).parquet(*pure_paths))
+            parts.append(
+                spark.read.schema(self._schema_ddl(cur["columns"]))
+                .parquet(*pure_paths)
+            )
         if merged_entries:
             parts.append(
                 self._merge_generations(
                     spark,
                     self._leaf_groups(name, cur, merged_entries),
                     list(cur["bucket_key"]),
-                    pairs,
+                    cur["columns"],
                 )
             )
         out = parts[0]
@@ -526,28 +507,10 @@ class SnapshotCatalog:
             )
 
     @staticmethod
-    def _schema_pairs(cur: dict) -> list[list[str]] | None:
-        """Manifest ``columns`` as (name, dtype) pairs, or None when the
-        manifest predates dtype recording (legacy: names only)."""
-        cols = cur.get("columns")
-        if cols and all(isinstance(c, (list, tuple)) and len(c) == 2 for c in cols):
-            return [list(c) for c in cols]
-        return None
-
-    @staticmethod
     def _schema_ddl(pairs: list[list[str]]) -> str:
         """DDL schema string from manifest (name, dtype) pairs — the dtype
         strings come from ``DataFrame.dtypes`` and are valid DDL types."""
         return ", ".join(f"`{c}` {t}" for c, t in pairs)
-
-    @staticmethod
-    def _column_names(cur: dict) -> list[str] | None:
-        cols = cur.get("columns")
-        if not cols:
-            return None
-        if all(isinstance(c, str) for c in cols):
-            return list(cols)
-        return [c[0] for c in cols]
 
     # ----------------------------------------------------------------- api
 
@@ -555,8 +518,7 @@ class SnapshotCatalog:
         self,
         df: DataFrame,
         name: str,
-        meta: dict | None = None,
-        bucket_key: str | list[str] | None = None,
+        bucket_key: str | list[str],
         n_buckets: int | str = 32,
         target_rows_per_bucket: int = 1_000_000,
     ) -> dict:
@@ -566,7 +528,7 @@ class SnapshotCatalog:
         :meth:`upsert`); a crash before ``_publish`` leaves the previous
         snapshot as the readable state — rerunning the stage is safe.
 
-        With ``bucket_key`` the data is laid out in key-hash buckets so later
+        The data is laid out in ``bucket_key``-hash buckets so later
         :meth:`upsert` calls rewrite only touched buckets. ``n_buckets`` is a
         SCALE decision made at creation: pass an explicit count sized for the
         table's expected volume, or ``"auto"`` to size it from the batch
@@ -576,54 +538,57 @@ class SnapshotCatalog:
         cur = self.current_snapshot(name)
         expected = cur["snapshot"] if cur else None
         snap_id = self._reserve_snap(name, (cur["snapshot"] + 1) if cur else 0)
-        path = self.root / name / f"snap-{snap_id}"
-        extra = dict(meta or {})
-        if bucket_key is not None:
-            keys = [bucket_key] if isinstance(bucket_key, str) else list(bucket_key)
-            persisted_here = False
-            if n_buckets == "auto":
-                df = df.persist()
-                persisted_here = True
-                n_buckets = self._choose_n_buckets(df.count(), target_rows_per_bucket)
-            written = self._write_buckets(df, name, snap_id, keys, n_buckets)
-            if persisted_here:
-                df.unpersist()
-            extra.update(
-                bucket_key=keys,
-                n_buckets=n_buckets,
-                bucket_mods={},
-                # the table schema every upsert must match: names AND dtypes
-                # (a drifted type would write mixed-type parquet across
-                # bucket snapshots that multi-path reads resolve arbitrarily)
-                columns=[[c, t] for c, t in df.dtypes],
-                buckets={
-                    self._entry_for(b, m): f"snap-{snap_id}" for b, m in written
-                },
-            )
-        else:
-            df.write.mode("overwrite").parquet(str(path))
-        self._publish(name, snap_id, extra, expected=expected)
+        keys = [bucket_key] if isinstance(bucket_key, str) else list(bucket_key)
+        persisted_here = False
+        if n_buckets == "auto":
+            df = df.persist()
+            persisted_here = True
+            n_buckets = self._choose_n_buckets(df.count(), target_rows_per_bucket)
+        written = self._write_buckets(df, name, snap_id, keys, n_buckets)
+        if persisted_here:
+            df.unpersist()
+        meta = {
+            "bucket_key": keys,
+            "n_buckets": n_buckets,
+            "bucket_mods": {},
+            # the table schema every upsert must match: names AND dtypes
+            # (a drifted type would write mixed-type parquet across
+            # bucket snapshots that multi-path reads resolve arbitrarily)
+            "columns": [[c, t] for c, t in df.dtypes],
+            "buckets": {
+                self._entry_for(b, m): f"snap-{snap_id}" for b, m in written
+            },
+            "deltas": {},
+        }
+        self._publish(name, snap_id, meta, expected=expected)
+        return self.current_snapshot(name)
+
+    def _commit_over(self, name: str, cur: dict, snap_id: int, **changes) -> dict:
+        """Publish ``cur``'s manifest with ``changes`` applied as snapshot
+        ``snap_id`` (CAS on ``cur``'s snapshot; empty delta lists dropped);
+        return the new manifest."""
+        meta = {
+            k: v for k, v in cur.items()
+            if k not in ("format", "snapshot", "committed_at")
+        }
+        meta.update(changes)
+        meta["deltas"] = {k: v for k, v in meta["deltas"].items() if v}
+        self._publish(name, snap_id, meta, expected=cur["snapshot"])
         return self.current_snapshot(name)
 
     def read_stage(self, spark: SparkSession, name: str) -> DataFrame | None:
         cur = self.current_snapshot(name)
-        if cur is None:
-            return None
-        if cur.get("buckets"):
-            pairs = self._schema_pairs(cur)
-            if not self._delta_map(cur):
-                # explicit manifest schema: columns added by a schema-evolving
-                # upsert are read as NULL from bucket files written before the
-                # evolution (Iceberg add-column semantics), and multi-snapshot
-                # reads never depend on which file Spark samples for inference
-                reader = spark.read
-                if pairs is not None:
-                    reader = reader.schema(self._schema_ddl(pairs))
-                return reader.parquet(*self._bucket_paths(name, cur))
+        if cur is None or not cur["buckets"]:
+            return None  # absent, or committed but empty
+        if cur["deltas"]:
             return self._read_entries(spark, name, cur, self._leaf_entries(cur))
-        if cur.get("buckets") == {}:  # bucketed but empty table
-            return None
-        return spark.read.parquet(str(self.root / name / f"snap-{cur['snapshot']}"))
+        # explicit manifest schema: columns added by a schema-evolving upsert
+        # are read as NULL from bucket files written before the evolution
+        # (Iceberg add-column semantics), and multi-snapshot reads never
+        # depend on which file Spark samples for inference
+        return spark.read.schema(self._schema_ddl(cur["columns"])).parquet(
+            *self._bucket_paths(name, cur)
+        )
 
     def read_stage_pruned(
         self,
@@ -647,23 +612,18 @@ class SnapshotCatalog:
         deltas merged where present. With Iceberg this is bucket-transform
         partition pruning on a join/IN predicate."""
         cur = self.current_snapshot(name)
-        if cur is None or not cur.get("bucket_key"):
-            return None if cur is None else self.read_stage(spark, name)
+        if cur is None:
+            return None
         if leaves is None:
             if keys_df is None:
                 raise ValueError("read_stage_pruned needs keys_df or leaves")
-            pairs = self._schema_pairs(cur)
-            if pairs is not None:
-                self._check_key_dtypes(
-                    pairs, keys_df, list(cur["bucket_key"]),
-                    name, "read_stage_pruned",
-                )
-            base = cur["n_buckets"]
-            bucket_mods = {
-                int(k): int(v) for k, v in (cur.get("bucket_mods") or {}).items()
-            }
             keys = list(cur["bucket_key"])
-            mod, bucket = self._assignment_exprs(keys, base, bucket_mods)
+            self._check_key_dtypes(
+                cur["columns"], keys_df, keys, name, "read_stage_pruned"
+            )
+            mod, bucket = self._assignment_exprs(
+                keys, cur["n_buckets"], self._bucket_mods(cur)
+            )
             leaves = sorted(
                 (r["b"], r["m"])
                 for r in keys_df.select(
@@ -710,12 +670,12 @@ class SnapshotCatalog:
             done = done.where(F.col(updated_col) >= F.lit(redo_older_than))
         return input_df.join(done.select(*keys).distinct(), keys, "left_anti")
 
+    @staticmethod
     def _check_schema(
-        self, spark, df: DataFrame, name: str, cur: dict,
-        allow_new_columns: bool = False,
+        df: DataFrame, name: str, cur: dict, allow_new_columns: bool = False,
     ) -> tuple[list[str], list[tuple[str, str]]]:
         """Enforce the table schema contract on an upsert batch: exact column
-        NAME set, and — when the manifest records dtypes — exact dtypes too.
+        NAME set and exact dtypes.
 
         With ``allow_new_columns`` the batch may carry a SUPERSET of the
         table's columns (Iceberg add-column evolution): existing columns are
@@ -726,9 +686,7 @@ class SnapshotCatalog:
 
         Returns ``(ordered table columns incl. additions, new (name, dtype)
         pairs)``."""
-        expected = self._column_names(cur) or spark.read.parquet(
-            self._bucket_paths(name, cur)[0]
-        ).columns
+        expected = [c for c, _t in cur["columns"]]
         batch_dtypes = dict(df.dtypes)
         new_cols: list[tuple[str, str]] = []
         if allow_new_columns and set(df.columns) > set(expected):
@@ -745,23 +703,21 @@ class SnapshotCatalog:
                 f"upsert batch columns {sorted(df.columns)} != table columns "
                 f"{sorted(expected)} for {name!r}{hint}"
             )
-        pairs = self._schema_pairs(cur)
-        if pairs is not None:
-            want = dict((c, t) for c, t in pairs)
-            got = dict(df.dtypes)
-            drift = {
-                c: (want[c], got[c]) for c in want if got.get(c) != want[c]
-            }
-            if drift:
-                detail = ", ".join(
-                    f"{c}: table={w} batch={g}" for c, (w, g) in sorted(drift.items())
-                )
-                raise ValueError(
-                    f"upsert batch dtype drift for {name!r}: {detail} — a "
-                    "drifted type would write mixed-type parquet files "
-                    "across bucket snapshots; cast the batch explicitly"
-                )
-        return list(expected) + [c for c, _t in new_cols], new_cols
+        drift = {
+            c: (t, batch_dtypes[c])
+            for c, t in cur["columns"]
+            if batch_dtypes[c] != t
+        }
+        if drift:
+            detail = ", ".join(
+                f"{c}: table={w} batch={g}" for c, (w, g) in sorted(drift.items())
+            )
+            raise ValueError(
+                f"upsert batch dtype drift for {name!r}: {detail} — a "
+                "drifted type would write mixed-type parquet files "
+                "across bucket snapshots; cast the batch explicitly"
+            )
+        return expected + [c for c, _t in new_cols], new_cols
 
     def upsert(
         self,
@@ -795,12 +751,10 @@ class SnapshotCatalog:
         and rewritten into the new snapshot directory. Every other bucket is
         carried forward in the manifest by reference — its files are not
         reread, rewritten, or even opened, so upsert IO is O(batch + touched
-        buckets), not O(table). A table first written without buckets is
-        converted to the bucketed layout on its first upsert (one full
-        rewrite, then incremental forever). ``n_buckets`` only applies when
-        this call CREATES the layout (first write / flat conversion — pass
-        ``"auto"`` to size from the data); afterwards it comes from the
-        manifest and per-bucket growth is handled by :meth:`split_buckets`.
+        buckets), not O(table). ``n_buckets`` only applies when this call
+        CREATES the table (pass ``"auto"`` to size from the data);
+        afterwards it comes from the manifest and per-bucket growth is
+        handled by :meth:`split_buckets`.
 
         ``allow_new_columns`` permits additive schema evolution: batch
         columns not yet in the table become table columns, and pre-evolution
@@ -823,11 +777,7 @@ class SnapshotCatalog:
                     raise
 
     def delete_keys(
-        self,
-        spark: SparkSession,
-        keys_df: DataFrame,
-        name: str,
-        commit_retries: int = 0,
+        self, keys_df: DataFrame, name: str, commit_retries: int = 0
     ) -> dict:
         """Retract every committed row whose bucket key appears in
         ``keys_df`` — Iceberg's EQUALITY DELETE, written merge-on-read.
@@ -848,39 +798,19 @@ class SnapshotCatalog:
         re-insert (``llacie/db.py:650-665``)."""
         for attempt in range(commit_retries + 1):
             try:
-                return self._delete_keys_once(spark, keys_df, name)
+                return self._delete_keys_once(keys_df, name)
             except CommitConflict:
                 if attempt == commit_retries:
                     raise
 
-    def _delete_keys_once(
-        self, spark: SparkSession, keys_df: DataFrame, name: str
-    ) -> dict:
+    def _delete_keys_once(self, keys_df: DataFrame, name: str) -> dict:
         cur = self.current_snapshot(name)
         if cur is None:
             raise ValueError(f"delete_keys: no committed table {name!r}")
-        if not cur.get("bucket_key"):
-            # flat table: no bucket layout to tombstone into — one CoW
-            # rewrite (same cost class as any flat-table mutation)
-            existing = self.read_stage(spark, name)
-            keys = [c for c, _t in keys_df.dtypes]
-            kept = existing.join(keys_df.select(*keys).distinct(), keys, "left_anti")
-            return self.write_stage(kept, name)
         keys = list(cur["bucket_key"])
         base = cur["n_buckets"]
-        bucket_mods = {
-            int(k): int(v) for k, v in (cur.get("bucket_mods") or {}).items()
-        }
-        pairs = self._schema_pairs(cur)
-        if pairs is None:
-            # legacy manifest without a column record: tombstone resolution
-            # needs the full schema to pad key-only rows, so stamp it now
-            # from one committed file (same pinning _read_entries applies)
-            sample = self._bucket_paths(name, cur)
-            if not sample:
-                return cur  # nothing committed, nothing to delete
-            pairs = [[c, t] for c, t in spark.read.parquet(sample[0]).dtypes]
-        self._check_key_dtypes(pairs, keys_df, keys, name, "delete_keys")
+        bucket_mods = self._bucket_mods(cur)
+        self._check_key_dtypes(cur["columns"], keys_df, keys, name, "delete_keys")
         kdf = keys_df.select(*keys).distinct().persist()
         try:
             mod, bucket = self._assignment_exprs(keys, base, bucket_mods)
@@ -894,7 +824,7 @@ class SnapshotCatalog:
             live = [
                 (b, m)
                 for b, m in touched
-                if self._base_lookup(cur, b, m, base) is not None
+                if self._entry_for(b, m) in cur["buckets"]
                 or deltas.get(self._entry_for(b, m))
             ]
             if not live:
@@ -919,20 +849,7 @@ class SnapshotCatalog:
                 deltas.setdefault(self._entry_for(b, m), []).append(
                     {"snap": f"snap-{snap_id}", "tombstone": True}
                 )
-        self._publish(
-            name,
-            snap_id,
-            {
-                "bucket_key": keys,
-                "n_buckets": base,
-                "bucket_mods": {str(k): v for k, v in bucket_mods.items()},
-                "columns": [list(p) for p in pairs],
-                "buckets": dict(cur["buckets"]),
-                "deltas": {k: v for k, v in deltas.items() if v},
-            },
-            expected=cur["snapshot"],
-        )
-        return self.current_snapshot(name)
+        return self._commit_over(name, cur, snap_id, deltas=deltas)
 
     def _upsert_once(
         self,
@@ -951,34 +868,14 @@ class SnapshotCatalog:
                 df, name, bucket_key=keys, n_buckets=n_buckets,
                 target_rows_per_bucket=target_rows_per_bucket,
             )
-        if not cur.get("bucket_key"):
-            # legacy flat table: one-time conversion to the bucketed layout
-            existing = self.read_stage(spark, name)
-            # same schema contract as the bucketed path: a batch MISSING
-            # table columns must fail here too, not be silently null-filled
-            # by unionByName (ADVICE r5); flat manifests predate recorded
-            # columns, so the contract is checked against the file schema
-            self._check_schema(
-                spark, df, name,
-                {"columns": [[c, t] for c, t in existing.dtypes]},
-                allow_new_columns=allow_new_columns,
-            )
-            kept = existing.join(df.select(*keys).distinct(), keys, "left_anti")
-            # with schema evolution the kept rows lack the new columns;
-            # unionByName null-fills them (same semantics as the bucketed path)
-            merged = kept.unionByName(df, allowMissingColumns=allow_new_columns)
-            return self.write_stage(
-                merged, name, bucket_key=keys, n_buckets=n_buckets,
-                target_rows_per_bucket=target_rows_per_bucket,
-            )
         if cur["bucket_key"] != keys:
             raise ValueError(
                 f"table {name!r} is bucketed by {cur['bucket_key']}, upsert key {keys}"
             )
         base = cur["n_buckets"]
-        bucket_mods = {int(k): int(v) for k, v in (cur.get("bucket_mods") or {}).items()}
+        bucket_mods = self._bucket_mods(cur)
         expected, new_cols = self._check_schema(
-            spark, df, name, cur, allow_new_columns=allow_new_columns
+            df, name, cur, allow_new_columns=allow_new_columns
         )
         df = df.select(*expected)
         # one evaluation of the batch feeds the touched-bucket collect AND
@@ -1004,12 +901,9 @@ class SnapshotCatalog:
                 merged = df
             else:
                 legs = self._leaf_groups(name, cur, touched)
-                pairs = self._schema_pairs(cur)
-                full = None
-                if pairs is not None:
-                    # explicit full schema (old columns + any additions):
-                    # pre-evolution files read the new columns as NULL
-                    full = [list(p) for p in pairs] + [[c, t] for c, t in new_cols]
+                # explicit full schema (old columns + any additions):
+                # pre-evolution files read the new columns as NULL
+                full = cur["columns"] + [[c, t] for c, t in new_cols]
                 if self._has_merge_work(legs):
                     # touched buckets carry pending MoR deltas: the CoW
                     # rewrite must fold them in (reading only the base would
@@ -1019,18 +913,12 @@ class SnapshotCatalog:
                         spark, legs, keys, full
                     )
                 elif legs:
-                    reader = spark.read
-                    if full is not None:
-                        reader = reader.schema(self._schema_ddl(full))
-                    old_touched = reader.parquet(*legs[0][2])
+                    old_touched = spark.read.schema(
+                        self._schema_ddl(full)
+                    ).parquet(*legs[0][2])
                 else:
                     old_touched = None
                 if old_touched is not None:
-                    if pairs is None:
-                        for c, t in new_cols:  # legacy manifest: no dtype record
-                            old_touched = old_touched.withColumn(
-                                c, F.lit(None).cast(t)
-                            )
                     kept = old_touched.join(
                         df.select(*keys).distinct(), keys, "left_anti"
                     )
@@ -1050,34 +938,21 @@ class SnapshotCatalog:
             )
         buckets = dict(cur["buckets"])
         deltas = self._delta_map(cur)
-        if merge_on_read:
-            for b, m in written:
-                entry = self._entry_for(b, m)
-                if self._base_lookup(cur, b, m, base) is not None:
-                    deltas.setdefault(entry, []).append(f"snap-{snap_id}")
-                else:
-                    buckets[entry] = f"snap-{snap_id}"  # first touch: a base
-        else:
-            for b, m in written:
-                entry = self._entry_for(b, m)
+        for b, m in written:
+            entry = self._entry_for(b, m)
+            if merge_on_read and entry in buckets:
+                deltas.setdefault(entry, []).append(f"snap-{snap_id}")
+            else:
+                # CoW rewrite (folds this bucket's deltas), or a MoR first
+                # touch: either way the new files are the bucket's base
                 buckets[entry] = f"snap-{snap_id}"
-                if m == base:
-                    buckets.pop(str(b), None)  # upgrade superseded legacy entry
-                deltas.pop(entry, None)  # CoW rewrite folded this bucket's deltas
-        self._publish(
-            name,
-            snap_id,
-            {
-                "bucket_key": keys,
-                "n_buckets": base,
-                "bucket_mods": {str(k): v for k, v in bucket_mods.items()},
-                "columns": [[c, t] for c, t in merged.select(*expected).dtypes],
-                "buckets": buckets,
-                "deltas": {k: v for k, v in deltas.items() if v},
-            },
-            expected=cur["snapshot"],
+                deltas.pop(entry, None)
+        return self._commit_over(
+            name, cur, snap_id,
+            columns=[[c, t] for c, t in merged.select(*expected).dtypes],
+            buckets=buckets,
+            deltas=deltas,
         )
-        return self.current_snapshot(name)
 
     def split_buckets(
         self,
@@ -1103,56 +978,46 @@ class SnapshotCatalog:
         if factor < 2 or factor & (factor - 1):
             raise ValueError(f"factor must be a power of two >= 2, got {factor}")
         cur = self.current_snapshot(name)
-        if not cur or not cur.get("bucket_key"):
-            raise ValueError(f"table {name!r} is not a committed bucketed table")
+        if cur is None:
+            raise ValueError(f"no committed table {name!r}")
         base = cur["n_buckets"]
         keys = cur["bucket_key"]
-        bucket_mods = {int(k): int(v) for k, v in (cur.get("bucket_mods") or {}).items()}
+        bucket_mods = self._bucket_mods(cur)
         base_ids = sorted(set(int(b) for b in base_ids))
         bad = [b for b in base_ids if not (0 <= b < base)]
         if bad:
             raise ValueError(f"base bucket ids out of range [0,{base}): {bad}")
+        buckets = dict(cur["buckets"])
         deltas = self._delta_map(cur)
         new_mods = dict(bucket_mods)
-        old_entry_keys: list[str] = []
-        consumed_delta_keys: list[str] = []
         leaves: list[tuple[int, int]] = []
         for b in base_ids:
             m = bucket_mods.get(b, base)
             new_mods[b] = m * factor
-            # leaf buckets under base bucket b at modulus m; a leaf may be
-            # recorded under either key form — read the FIRST match only
-            # (reading both would duplicate rows into the children)
+            # leaf buckets under base bucket b at modulus m; a split is also
+            # a compaction of its leaves: the merged (base + deltas) rows fan
+            # into the children as pure base
             for c in range(b, m, base):
-                canon = self._entry_for(c, m)
-                has_base = False
-                for entry in (canon, str(c) if m == base else None):
-                    if entry is not None and entry in cur["buckets"]:
-                        old_entry_keys.append(entry)
-                        has_base = True
-                        break
-                if has_base or deltas.get(canon):
+                entry = self._entry_for(c, m)
+                if entry in buckets or deltas.get(entry):
                     leaves.append((c, m))
-                if deltas.get(canon):
-                    # a split is also a compaction of its leaves: the merged
-                    # (base + deltas) rows fan into the children as pure base
-                    consumed_delta_keys.append(canon)
+                buckets.pop(entry, None)
+                deltas.pop(entry, None)
         snap_id = self._reserve_snap(name, cur["snapshot"] + 1)
         written: list[tuple[int, int]] = []
         if leaves:
-            pairs = self._schema_pairs(cur)
             # manifest schema, not file-sampled inference: after additive
             # schema evolution the leaf files disagree on columns, and a
             # sampled pre-evolution file would silently drop the new
             # column from every post-evolution row being migrated
+            pairs = cur["columns"]
             legs = self._leaf_groups(name, cur, leaves)
             if self._has_merge_work(legs):
                 rows = self._merge_generations(spark, legs, keys, pairs)
             else:
-                reader = spark.read
-                if pairs is not None:
-                    reader = reader.schema(self._schema_ddl(pairs))
-                rows = reader.parquet(*legs[0][2])
+                rows = spark.read.schema(self._schema_ddl(pairs)).parquet(
+                    *legs[0][2]
+                )
             written = self._write_buckets(rows, name, snap_id, keys, base, new_mods)
             stray = [bm for bm in written if bm[0] % base not in base_ids]
             if stray:
@@ -1160,27 +1025,14 @@ class SnapshotCatalog:
                     f"split rewrote buckets {stray} outside the split set "
                     f"{base_ids}; manifest NOT updated"
                 )
-        buckets = dict(cur["buckets"])
-        for entry in old_entry_keys:
-            buckets.pop(entry, None)
-        for key in consumed_delta_keys:
-            deltas.pop(key, None)
         for b, m in written:
             buckets[self._entry_for(b, m)] = f"snap-{snap_id}"
-        self._publish(
-            name,
-            snap_id,
-            {
-                "bucket_key": keys,
-                "n_buckets": base,
-                "bucket_mods": {str(k): v for k, v in new_mods.items()},
-                "columns": cur.get("columns"),
-                "buckets": buckets,
-                "deltas": {k: v for k, v in deltas.items() if v},
-            },
-            expected=cur["snapshot"],
+        return self._commit_over(
+            name, cur, snap_id,
+            bucket_mods={str(k): v for k, v in new_mods.items()},
+            buckets=buckets,
+            deltas=deltas,
         )
-        return self.current_snapshot(name)
 
     def compact(
         self,
@@ -1220,7 +1072,7 @@ class SnapshotCatalog:
         self, spark: SparkSession, name: str, min_deltas: int
     ) -> list[str]:
         cur = self.current_snapshot(name)
-        if not cur or not cur.get("bucket_key"):
+        if cur is None:
             return []
         deltas = self._delta_map(cur)
         targets = sorted(k for k, v in deltas.items() if len(v) >= min_deltas)
@@ -1228,14 +1080,14 @@ class SnapshotCatalog:
             return []
         base = cur["n_buckets"]
         keys = list(cur["bucket_key"])
-        bucket_mods = {int(k): int(v) for k, v in (cur.get("bucket_mods") or {}).items()}
-        entries = [self._entry_bucket_mod(k, base) for k in targets]
-        pairs = self._schema_pairs(cur)
+        entries = [self._entry_bucket_mod(k) for k in targets]
         merged = self._merge_generations(
-            spark, self._leaf_groups(name, cur, entries), keys, pairs
+            spark, self._leaf_groups(name, cur, entries), keys, cur["columns"]
         )
         snap_id = self._reserve_snap(name, cur["snapshot"] + 1)
-        written = self._write_buckets(merged, name, snap_id, keys, base, bucket_mods)
+        written = self._write_buckets(
+            merged, name, snap_id, keys, base, self._bucket_mods(cur)
+        )
         stray = [bm for bm in written if self._entry_for(*bm) not in targets]
         if stray:
             raise RuntimeError(
@@ -1243,36 +1095,14 @@ class SnapshotCatalog:
                 f"{targets}; table {name!r} manifest NOT updated"
             )
         buckets = dict(cur["buckets"])
-        for b, m in written:
-            entry = self._entry_for(b, m)
-            buckets[entry] = f"snap-{snap_id}"
-            if m == base:
-                buckets.pop(str(b), None)
-            deltas.pop(entry, None)
-        written_set = set(written)
         for entry in targets:
-            b, m = self._entry_bucket_mod(entry, base)
-            if (b, m) not in written_set:
-                # every key in this bucket was tombstoned: the merge left it
-                # empty, so drop the base pointer (under either key form)
-                # along with the consumed deltas
-                buckets.pop(entry, None)
-                if m == base:
-                    buckets.pop(str(b), None)
-                deltas.pop(entry, None)
-        self._publish(
-            name,
-            snap_id,
-            {
-                "bucket_key": keys,
-                "n_buckets": base,
-                "bucket_mods": {str(k): v for k, v in bucket_mods.items()},
-                "columns": cur.get("columns"),
-                "buckets": buckets,
-                "deltas": {k: v for k, v in deltas.items() if v},
-            },
-            expected=cur["snapshot"],
-        )
+            # a target the merge left empty (every key tombstoned) loses its
+            # base pointer; every target's consumed deltas go
+            buckets.pop(entry, None)
+            deltas.pop(entry, None)
+        for b, m in written:
+            buckets[self._entry_for(b, m)] = f"snap-{snap_id}"
+        self._commit_over(name, cur, snap_id, buckets=buckets, deltas=deltas)
         return targets
 
     def maybe_split(
@@ -1296,9 +1126,9 @@ class SnapshotCatalog:
         accounting sees post-merge bytes and split children are born
         delta-free."""
         cur = self.current_snapshot(name)
-        if not cur or not cur.get("bucket_key"):
+        if cur is None:
             return []
-        if compact_min_deltas and self._delta_map(cur):
+        if compact_min_deltas and cur["deltas"]:
             self.compact(
                 spark, name, min_deltas=compact_min_deltas,
                 commit_retries=commit_retries,
@@ -1307,7 +1137,7 @@ class SnapshotCatalog:
         base = cur["n_buckets"]
         per_base: dict[int, int] = {}
         for entry, size in self.bucket_sizes(name).items():
-            b, _m = self._entry_bucket_mod(entry, base)
+            b, _m = self._entry_bucket_mod(entry)
             per_base[b % base] = per_base.get(b % base, 0) + size
         oversized = sorted(
             b for b, sz in per_base.items() if sz > 2 * target_bucket_bytes
@@ -1321,7 +1151,7 @@ class SnapshotCatalog:
         input (split every bucket over ~2× the target size). Driver-side
         directory stat, no Spark job."""
         cur = self.current_snapshot(name)
-        if not cur or not cur.get("buckets"):
+        if not cur or not cur["buckets"]:
             return {}
 
         def _dir_bytes(p: Path) -> int:
@@ -1334,27 +1164,18 @@ class SnapshotCatalog:
         out = {}
         for entry, snap in cur["buckets"].items():
             out[entry] = _dir_bytes(self._entry_path(name, snap, entry))
-        base = cur["n_buckets"]
-        for canon, snaps in self._delta_map(cur).items():
+        for entry, snaps in cur["deltas"].items():
             # MoR delta bytes count toward the bucket's size: they are rows
-            # the bucket logically holds, and the split decision must see
-            # them (keyed under the canonical entry even when the base
-            # pointer uses the legacy key form)
-            b, m = self._entry_bucket_mod(canon, base)
-            key = canon if canon in out else (
-                str(b) if m == base and str(b) in out else canon
-            )
-            out[key] = out.get(key, 0) + sum(
+            # the bucket logically holds, and the split decision must see them
+            out[entry] = out.get(entry, 0) + sum(
                 _dir_bytes(
-                    self._entry_path(name, self._delta_snap(d)[0], canon)
+                    self._entry_path(name, self._delta_snap(d)[0], entry)
                 )
                 for d in snaps
             )
         return out
 
-    def drop_columns(
-        self, spark: SparkSession, name: str, cols: str | list[str]
-    ) -> list[str]:
+    def drop_columns(self, name: str, cols: str | list[str]) -> list[str]:
         """Metadata-only column drop — Iceberg ``ALTER TABLE ... DROP
         COLUMN``. No data files are touched: the columns are removed from
         the manifest schema, and :meth:`read_stage`'s explicit-schema read
@@ -1363,43 +1184,30 @@ class SnapshotCatalog:
         WITHOUT the dropped columns — the migration path for a stage that
         stops persisting a re-derivable column (ADVICE r5: ``note_text``).
 
-        Bucketed tables only (flat snapshots read with inferred schema, so a
-        manifest-only drop could not take effect). Bucket-key columns cannot
-        be dropped. Returns the columns actually removed (empty if none were
-        present — the call is idempotent). Commits via the same CAS as every
-        other writer; concurrent-commit losers raise
-        :class:`CommitConflict`."""
+        Bucket-key columns cannot be dropped. Returns the columns actually
+        removed (empty if none were present — the call is idempotent).
+        Commits via the same CAS as every other writer; concurrent-commit
+        losers raise :class:`CommitConflict`."""
         cur = self.current_snapshot(name)
         if cur is None:
             raise ValueError(f"no such table: {name!r}")
-        if not cur.get("bucket_key"):
-            raise ValueError(
-                f"table {name!r} is a flat snapshot — drop_columns requires "
-                "the bucketed layout (flat reads infer schema from files)"
-            )
         drop = [cols] if isinstance(cols, str) else list(cols)
         hit = set(drop) & set(cur["bucket_key"])
         if hit:
             raise ValueError(
                 f"cannot drop bucket-key column(s) {sorted(hit)} of {name!r}"
             )
-        pairs = self._schema_pairs(cur)
-        if pairs is None:
-            # pre-dtype manifest: record the file schema first, minus drops
-            sample = spark.read.parquet(self._bucket_paths(name, cur)[0])
-            pairs = [[c, t] for c, t in sample.dtypes]
-        removed = [c for c, _t in pairs if c in drop]
+        removed = [c for c, _t in cur["columns"] if c in drop]
         if not removed:
             return []
-        meta = {
-            k: v for k, v in cur.items() if k not in ("snapshot", "committed_at")
-        }
-        meta["columns"] = [[c, t] for c, t in pairs if c not in drop]
         # fresh snapshot id (atomic mkdir reservation) so the commit is a
         # real CAS step other writers observe; the reserved dir stays empty —
         # every bucket pointer still references its existing data dirs
         snap_id = self._reserve_snap(name, cur["snapshot"] + 1)
-        self._publish(name, snap_id, meta, expected=cur["snapshot"])
+        self._commit_over(
+            name, cur, snap_id,
+            columns=[[c, t] for c, t in cur["columns"] if c not in drop],
+        )
         return removed
 
     def vacuum(self, name: str, older_than_s: float | None = None) -> list[str]:
@@ -1437,12 +1245,12 @@ class SnapshotCatalog:
                 return []
             live = (
                 {f"snap-{cur['snapshot']}"}
-                | {snap for snap in cur.get("buckets", {}).values()}
+                | set(cur["buckets"].values())
                 # MoR delta snapshots (data or tombstone) are live until
                 # compacted
                 | {
                     self._delta_snap(s)[0]
-                    for lst in (cur.get("deltas") or {}).values()
+                    for lst in cur["deltas"].values()
                     for s in lst
                 }
             )
@@ -1482,9 +1290,3 @@ def write_bucketed(
         w = w.sortBy(sort_col)
     w.saveAsTable(table)
 
-
-def with_runtime_metrics(df: DataFrame, started_at: float) -> DataFrame:
-    """Attach the per-row share of stage wall-clock (the reference's
-    ``strategy_runtime`` accounting, abstract_vllm_or_lcp.py:204-205) —
-    cheap approximation: stage elapsed so far at write time."""
-    return df.withColumn("batch_runtime_s", F.lit(time.time() - started_at))

@@ -40,6 +40,8 @@ from pathlib import Path
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 
+from llacie_spark.io import SnapshotCatalog  # noqa: E402
+
 TOTAL_DOCS = int(sys.argv[1]) if len(sys.argv) > 1 else 1_000_000
 N_BATCHES = int(sys.argv[2]) if len(sys.argv) > 2 else 4
 KILL_BATCH = 3          # 1-based: this batch's process gets SIGKILL'd
@@ -167,9 +169,7 @@ def main() -> None:
             rows.append(r)
             print(json.dumps(r), flush=True)
 
-        manifest = json.loads(
-            (Path(inc_root) / "extracted/_SNAPSHOT.json").read_text()
-        )
+        manifest = SnapshotCatalog(inc_root).current_snapshot("extracted")
         one_root, one_out = f"{work}/one_stages", f"{work}/one_graph"
         r = invoke(TOTAL_DOCS, one_root, one_out)
         r["label"], r["docs_visible"] = "one-shot twin", TOTAL_DOCS
@@ -217,7 +217,7 @@ def main() -> None:
             "final_manifest": {
                 "snapshot": manifest["snapshot"],
                 "n_buckets": manifest["n_buckets"],
-                "bucket_mods": manifest.get("bucket_mods"),
+                "bucket_mods": manifest["bucket_mods"],
             },
             "phase_share": share,
             "rows": rows,

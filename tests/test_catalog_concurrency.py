@@ -144,6 +144,13 @@ def test_schema_evolution_add_column_null_fills(spark, tmp_path):
         cat.upsert(
             spark, spark.createDataFrame([(1, 5)], "id long, v long"), "t", "id"
         )
+    # allow_new_columns covers ADDITIONS only — a batch missing a column
+    # still fails instead of being null-filled
+    with pytest.raises(ValueError, match="columns"):
+        cat.upsert(
+            spark, spark.createDataFrame([(1, 5)], "id long, v long"), "t", "id",
+            allow_new_columns=True,
+        )
 
     # a later full-schema upsert works, and a bucket split after evolution
     # migrates heterogeneous files without dropping the evolved column
@@ -162,6 +169,24 @@ def test_schema_evolution_add_column_null_fills(spark, tmp_path):
     rows = {r.id: (r.v, r.lineage) for r in cat.read_stage(spark, "t").collect()}
     assert len(rows) == 1000
     assert rows[7] == (-1, "runA") and rows[8] == (-2, "runB")
+
+
+def test_bucket_write_keeps_the_reserved_snapshot_dir(spark, tmp_path, cat):
+    """_write_buckets writes INTO the directory _reserve_snap just created.
+    A static overwrite would delete that directory before the job writes,
+    leaving a window in which a concurrent writer's mkdir claims the same
+    snapshot id and one writer's overwrite deletes the other's committed
+    leaves. The write must leave what is already in the directory alone."""
+    snap_id = cat._reserve_snap("t", 1)
+    marker = tmp_path / "t" / f"snap-{snap_id}" / "marker"
+    marker.write_text("reserved")
+    batch = spark.createDataFrame([(1, "A"), (2, "B")], "id long, v string")
+    written = cat._write_buckets(batch, "t", snap_id, ["id"], 8)
+    assert marker.read_text() == "reserved"
+    assert written and all(
+        cat._entry_path("t", f"snap-{snap_id}", cat._entry_for(b, m)).is_dir()
+        for b, m in written
+    )
 
 
 def test_parallel_upserts_with_retries_all_land(spark, tmp_path):
@@ -276,7 +301,7 @@ def test_drop_columns_metadata_only(spark, tmp_path):
         return out
 
     before = data_files()
-    assert cat.drop_columns(spark, "t", "fat") == ["fat"]
+    assert cat.drop_columns("t", "fat") == ["fat"]
     # metadata-only: every data file untouched (same paths, same mtimes)
     assert data_files() == before
 
@@ -285,8 +310,8 @@ def test_drop_columns_metadata_only(spark, tmp_path):
     assert got.count() == 200
 
     # idempotent; unknown columns are a no-op too
-    assert cat.drop_columns(spark, "t", "fat") == []
-    assert cat.drop_columns(spark, "t", ["nope"]) == []
+    assert cat.drop_columns("t", "fat") == []
+    assert cat.drop_columns("t", ["nope"]) == []
 
     # the upsert contract now expects the NEW schema: a batch carrying the
     # dropped column is an (opt-in) addition, a batch without it is exact
@@ -294,40 +319,9 @@ def test_drop_columns_metadata_only(spark, tmp_path):
     rows = {r.id: r.v for r in cat.read_stage(spark, "t").collect()}
     assert rows[7] == "new" and len(rows) == 200
 
-    # guard rails: bucket-key columns and flat tables refuse
+    # guard rail: bucket-key columns refuse
     with pytest.raises(ValueError, match="bucket-key"):
-        cat.drop_columns(spark, "t", "id")
-    cat.write_stage(base, "flat")
-    with pytest.raises(ValueError, match="flat"):
-        cat.drop_columns(spark, "flat", "fat")
-
-
-def test_flat_conversion_enforces_schema_contract(spark, tmp_path):
-    """The legacy flat→bucketed conversion path must enforce the same
-    schema contract as the bucketed path: a batch MISSING existing table
-    columns fails instead of being silently null-filled by unionByName
-    (ADVICE r5)."""
-    cat = SnapshotCatalog(str(tmp_path))
-    cat.write_stage(spark.range(0, 50).withColumn("v", F.lit("base")), "t")
-
-    short = spark.createDataFrame([(1,)], "id long")
-    with pytest.raises(ValueError, match="columns"):
-        cat.upsert(spark, short, "t", "id")
-    # allow_new_columns covers ADDITIONS only — a missing column still fails
-    with pytest.raises(ValueError, match="columns"):
-        cat.upsert(spark, short, "t", "id", allow_new_columns=True)
-    # dtype drift is caught on the conversion path too
-    with pytest.raises(ValueError, match="dtype drift"):
-        cat.upsert(
-            spark,
-            spark.createDataFrame([(1, 5)], "id long, v long"),
-            "t", "id",
-        )
-
-    # the well-formed conversion still works
-    cat.upsert(spark, spark.createDataFrame([(1, "A")], "id long, v string"), "t", "id")
-    got = {r.id: r.v for r in cat.read_stage(spark, "t").collect()}
-    assert got[1] == "A" and len(got) == 50
+        cat.drop_columns("t", "id")
 
 
 def test_publish_refuses_after_concurrent_vacuum_reclaims_snapshot(

@@ -265,7 +265,7 @@ def test_delete_keys_tombstone_basic(spark, tmp_path):
         "t", bucket_key="id", n_buckets=4,
     )
     before = _base_files(cat)
-    cat.delete_keys(spark, spark.range(0, 100, 10).select("id"), "t")
+    cat.delete_keys(spark.range(0, 100, 10).select("id"), "t")
     assert _base_files(cat) == before  # O(keys) write: no base rewritten
     cur = cat.current_snapshot("t")
     assert any(
@@ -283,7 +283,7 @@ def test_delete_then_reinsert_newest_wins(spark, tmp_path):
         spark.createDataFrame([(1, "a"), (2, "b")], "id long, v string"),
         "t", bucket_key="id", n_buckets=2,
     )
-    cat.delete_keys(spark, spark.createDataFrame([(1,)], "id long"), "t")
+    cat.delete_keys(spark.createDataFrame([(1,)], "id long"), "t")
     assert _sorted_rows(cat, spark) == [(2, "b")]
     cat.upsert(
         spark, spark.createDataFrame([(1, "back")], "id long, v string"),
@@ -291,7 +291,7 @@ def test_delete_then_reinsert_newest_wins(spark, tmp_path):
     )
     assert _sorted_rows(cat, spark) == [(1, "back"), (2, "b")]
     # and the reverse order: upsert then delete -> gone
-    cat.delete_keys(spark, spark.createDataFrame([(1,)], "id long"), "t")
+    cat.delete_keys(spark.createDataFrame([(1,)], "id long"), "t")
     assert _sorted_rows(cat, spark) == [(2, "b")]
 
 
@@ -304,7 +304,7 @@ def test_delete_multirow_key_removes_row_set(spark, tmp_path):
         ),
         "t", bucket_key="id", n_buckets=2,
     )
-    cat.delete_keys(spark, spark.createDataFrame([(1,)], "id long"), "t")
+    cat.delete_keys(spark.createDataFrame([(1,)], "id long"), "t")
     assert _sorted_rows(cat, spark) == [(2, "z")]
 
 
@@ -314,7 +314,7 @@ def test_compact_folds_tombstones(spark, tmp_path):
         spark.range(0, 100).withColumn("v", F.lit("base")),
         "t", bucket_key="id", n_buckets=4,
     )
-    cat.delete_keys(spark, spark.range(0, 100, 3).select("id"), "t")
+    cat.delete_keys(spark.range(0, 100, 3).select("id"), "t")
     before = _sorted_rows(cat, spark)
     assert cat.compact(spark, "t")
     cur = cat.current_snapshot("t")
@@ -336,7 +336,7 @@ def test_compact_drops_fully_tombstoned_bucket(spark, tmp_path):
         "t", bucket_key="id", n_buckets=2,
     )
     # delete EVERY key -> both buckets empty after compaction
-    cat.delete_keys(spark, spark.range(0, 40).select("id"), "t")
+    cat.delete_keys(spark.range(0, 40).select("id"), "t")
     assert _sorted_rows(cat, spark) == []
     cat.compact(spark, "t")
     cur = cat.current_snapshot("t")
@@ -359,7 +359,7 @@ def test_cow_upsert_folds_tombstones(spark, tmp_path):
         spark.range(0, 20).withColumn("v", F.lit("base")),
         "t", bucket_key="id", n_buckets=1,
     )
-    cat.delete_keys(spark, spark.createDataFrame([(3,), (4,)], "id long"), "t")
+    cat.delete_keys(spark.createDataFrame([(3,), (4,)], "id long"), "t")
     cat.upsert(
         spark, spark.createDataFrame([(5, "cow")], "id long, v string"),
         "t", "id", merge_on_read=False,
@@ -375,7 +375,7 @@ def test_split_consumes_tombstones(spark, tmp_path):
         spark.range(0, 200).withColumn("v", F.lit("base")),
         "t", bucket_key="id", n_buckets=2,
     )
-    cat.delete_keys(spark, spark.range(0, 200, 4).select("id"), "t")
+    cat.delete_keys(spark.range(0, 200, 4).select("id"), "t")
     before = _sorted_rows(cat, spark)
     cat.split_buckets(spark, "t", [0, 1])
     cur = cat.current_snapshot("t")
@@ -391,15 +391,7 @@ def test_delete_keys_dtype_drift_raises(spark, tmp_path):
     )
     drifted = spark.createDataFrame([("3",)], "id string")
     with pytest.raises(ValueError, match="dtype drift"):
-        cat.delete_keys(spark, drifted, "t")
-
-
-def test_delete_keys_flat_table_cow_fallback(spark, tmp_path):
-    cat = SnapshotCatalog(str(tmp_path))
-    cat.write_stage(spark.range(0, 10).withColumn("v", F.lit("x")), "t")
-    cat.delete_keys(spark, spark.createDataFrame([(1,), (2,)], "id long"), "t")
-    got = sorted(r.id for r in cat.read_stage(spark, "t").collect())
-    assert got == [0] + list(range(3, 10))
+        cat.delete_keys(drifted, "t")
 
 
 def test_vacuum_keeps_live_tombstone_snaps(spark, tmp_path):
@@ -408,7 +400,7 @@ def test_vacuum_keeps_live_tombstone_snaps(spark, tmp_path):
         spark.range(0, 50).withColumn("v", F.lit("base")),
         "t", bucket_key="id", n_buckets=2,
     )
-    cat.delete_keys(spark, spark.range(0, 50, 5).select("id"), "t")
+    cat.delete_keys(spark.range(0, 50, 5).select("id"), "t")
     cur = cat.current_snapshot("t")
     tomb_snaps = {
         d["snap"] for v in cur["deltas"].values() for d in v
@@ -454,7 +446,7 @@ def test_read_stage_pruned_sees_deltas_and_tombstones(spark, tmp_path):
         spark, spark.createDataFrame([(7, "new")], "id long, v string"),
         "t", "id", merge_on_read=True,
     )
-    cat.delete_keys(spark, spark.createDataFrame([(9,)], "id long"), "t")
+    cat.delete_keys(spark.createDataFrame([(9,)], "id long"), "t")
     keys = spark.createDataFrame([(7,), (9,)], "id long")
     pruned = cat.read_stage_pruned(spark, "t", keys_df=keys)
     got = {r.id: r.v for r in pruned.collect()}
@@ -472,15 +464,6 @@ def test_read_stage_pruned_dtype_drift_raises(spark, tmp_path):
         cat.read_stage_pruned(
             spark, "t", keys_df=spark.createDataFrame([("1",)], "id string")
         )
-
-
-def test_read_stage_pruned_flat_table_falls_back_to_full(spark, tmp_path):
-    cat = SnapshotCatalog(str(tmp_path))
-    cat.write_stage(spark.range(0, 10).withColumn("v", F.lit("x")), "t")
-    df = cat.read_stage_pruned(
-        spark, "t", keys_df=spark.createDataFrame([(1,)], "id long")
-    )
-    assert df.count() == 10  # flat layout: no pruning possible, full read
 
 
 def test_compact_retries_past_concurrent_delta_commit(spark, tmp_path):

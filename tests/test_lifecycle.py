@@ -85,52 +85,6 @@ def test_batched_ingest_with_midbatch_failure_equals_oneshot(
     assert inc_edges and inc_edges == one_edges
 
 
-def test_pre_upgrade_stage_root_with_note_text_migrates(
-    spark, tmp_path, capsys, monkeypatch
-):
-    """A stage root written BEFORE note_text was dropped from the persisted
-    stage must keep working: run_kg performs a one-time metadata-only
-    column drop instead of hard-failing _check_schema on the now-subset
-    batch (ADVICE r5, medium)."""
-    import pyspark.sql as pys
-    from pyspark.sql import functions as F
-
-    import jobs.run_kg as job
-    from llacie_spark.io import SnapshotCatalog
-
-    monkeypatch.setattr(pys.SparkSession, "stop", lambda self: None)
-
-    inc = [
-        "--out", str(tmp_path / "graph"),
-        "--stage-root", str(tmp_path / "stages"),
-        "--stage-buckets", "auto",
-    ]
-
-    def run(docs):
-        job.main(["--docs", str(docs), *inc])
-        return json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-
-    assert run(40)["resumed_docs"] == 40
-
-    # simulate the pre-upgrade layout: evolve note_text back INTO the
-    # committed table (all rows), as every pre-change stage root has it
-    cat = SnapshotCatalog(str(tmp_path / "stages"))
-    old = cat.read_stage(spark, "extracted").withColumn(
-        "note_text", F.lit("legacy payload")
-    )
-    cat.upsert(spark, old, "extracted", "doc_id", allow_new_columns=True)
-    assert "note_text" in [
-        c for c, _t in cat.current_snapshot("extracted")["columns"]
-    ]
-
-    # next incremental run migrates (drops the column) and resumes cleanly;
-    # without the migration this raises ValueError on _check_schema
-    assert run(80)["resumed_docs"] == 40
-    cols = [c for c, _t in cat.current_snapshot("extracted")["columns"]]
-    assert "note_text" not in cols
-    assert cat.read_stage(spark, "extracted").count() == 80
-
-
 def test_pending_log_kept_when_run_cannot_cover_it(
     spark, tmp_path, capsys, monkeypatch
 ):

@@ -70,11 +70,11 @@ def test_snapshot_write_read_roundtrip(spark, tmp_path):
 
     cat = SnapshotCatalog(str(tmp_path))
     df = spark.range(0, 10).withColumn("v", F.col("id") * 2)
-    snap = cat.write_stage(df, "t1")
+    snap = cat.write_stage(df, "t1", bucket_key="id", n_buckets=4)
     assert snap["snapshot"] == 0
     back = cat.read_stage(spark, "t1")
     assert back.count() == 10
-    snap2 = cat.write_stage(df.where("id < 5"), "t1")
+    snap2 = cat.write_stage(df.where("id < 5"), "t1", bucket_key="id", n_buckets=4)
     assert snap2["snapshot"] == 1
     assert cat.read_stage(spark, "t1").count() == 5
 
@@ -87,7 +87,9 @@ def test_unfinished_anti_join_resume(spark, tmp_path):
     # nothing committed: everything unfinished
     assert cat.unfinished(spark, inp, "stage1", "doc_id").count() == 100
     # commit half, resume picks up the rest
-    cat.write_stage(inp.where("doc_id < 60"), "stage1")
+    cat.write_stage(
+        inp.where("doc_id < 60"), "stage1", bucket_key="doc_id", n_buckets=4
+    )
     rest = cat.unfinished(spark, inp, "stage1", "doc_id")
     assert rest.count() == 40
     assert rest.agg(F.min("doc_id")).first()[0] == 60
@@ -98,7 +100,7 @@ def test_upsert_replaces_by_key(spark, tmp_path):
 
     cat = SnapshotCatalog(str(tmp_path))
     v1 = spark.createDataFrame([(1, "a"), (2, "b")], "k long, v string")
-    cat.write_stage(v1, "t")
+    cat.write_stage(v1, "t", bucket_key="k", n_buckets=4)
     v2 = spark.createDataFrame([(2, "B"), (3, "c")], "k long, v string")
     cat.upsert(spark, v2, "t", "k")
     got = {r.k: r.v for r in cat.read_stage(spark, "t").collect()}
@@ -155,24 +157,9 @@ def test_upsert_rewrites_only_touched_buckets(spark, tmp_path):
     assert (tmp_path / "t" / "snap-0").exists()
 
 
-def test_upsert_converts_flat_table_then_goes_incremental(spark, tmp_path):
-    from llacie_spark.io import SnapshotCatalog
-
-    cat = SnapshotCatalog(str(tmp_path))
-    cat.write_stage(spark.range(0, 50).withColumn("v", F.lit("x")), "t")  # flat
-    cat.upsert(spark, spark.createDataFrame([(3, "y")], "id long, v string"), "t", "id")
-    assert cat.current_snapshot("t")["bucket_key"] == ["id"]  # converted
-    cat.upsert(spark, spark.createDataFrame([(4, "z")], "id long, v string"), "t", "id")
-    snap = cat.current_snapshot("t")
-    assert sorted(set(snap["buckets"].values())) == ["snap-1", "snap-2"]
-    got = {r.id: r.v for r in cat.read_stage(spark, "t").collect()}
-    assert len(got) == 50 and got[3] == "y" and got[4] == "z"
-
-
 def test_bucketed_upsert_crash_before_publish_is_invisible(spark, tmp_path):
     """A crash after bucket files are written but before the manifest
-    publish must leave the previous snapshot as the readable state — the
-    same commit contract the flat layout has."""
+    publish must leave the previous snapshot as the readable state."""
     import shutil
 
     from llacie_spark.io import SnapshotCatalog
@@ -314,60 +301,64 @@ def test_split_buckets_rewrites_only_split_bucket(spark, tmp_path):
     assert {r.id: r.v for r in cat.read_stage(spark, "t").collect()} == got
 
 
-def test_upsert_reads_and_upgrades_legacy_manifest(spark, tmp_path):
-    """Tables committed before the split feature used `snap/_bucket=b`
-    paths, bare "b" manifest keys, and names-only columns. The new code
-    must read them transparently, upsert incrementally against them, and
-    upgrade touched entries to the "b@m" form — untouched legacy files
-    byte-identical."""
+@pytest.mark.parametrize("shape", ["pre_split_names_only", "wrong_format"])
+def test_manifest_of_another_format_is_refused(spark, tmp_path, shape):
+    """The catalog reads one manifest format. A manifest of another shape —
+    the pre-split form (bare "b" keys at `snap/_bucket=b`, names-only
+    columns, no bucket_mods, no format) or a wrong `format` number — makes
+    read_stage, upsert and vacuum raise ValueError naming the table, with
+    every file left as it was; drop still clears the table."""
     import hashlib
     import json as _json
     import shutil
 
-    from llacie_spark.io import SnapshotCatalog
+    from llacie_spark.io import MANIFEST_FORMAT, SnapshotCatalog
 
     cat = SnapshotCatalog(str(tmp_path))
     cat.write_stage(spark.range(0, 400).withColumn("v", F.col("id") * 2), "t",
                     bucket_key="id", n_buckets=8)
-    # rewrite the committed snapshot into the legacy layout
     t = tmp_path / "t"
-    snap0 = t / "snap-0"
-    for bdir in list(snap0.glob("_mod=8/_bucket=*")):
-        shutil.move(str(bdir), str(snap0 / bdir.name))
-    (snap0 / "_mod=8").rmdir()
     m = _json.loads((t / "_SNAPSHOT.json").read_text())
-    m["buckets"] = {k.split("@")[0]: v for k, v in m["buckets"].items()}
-    m["columns"] = [c for c, _ in m["columns"]]  # names-only, r3 style
-    del m["bucket_mods"]
+    if shape == "pre_split_names_only":
+        snap0 = t / "snap-0"
+        for bdir in list(snap0.glob("_mod=8/_bucket=*")):
+            shutil.move(str(bdir), str(snap0 / bdir.name))
+        (snap0 / "_mod=8").rmdir()
+        m["buckets"] = {k.split("@")[0]: v for k, v in m["buckets"].items()}
+        m["columns"] = [c for c, _ in m["columns"]]
+        del m["bucket_mods"], m["format"]
+    else:
+        m["format"] = MANIFEST_FORMAT + 1
     (t / "_SNAPSHOT.json").write_text(_json.dumps(m))
+    (t / "snap-7").mkdir()  # an orphan dir vacuum would otherwise reclaim
 
-    assert cat.read_stage(spark, "t").count() == 400  # legacy paths resolve
-
-    def digests():
+    def files():
         return {
-            str(p.relative_to(t)): hashlib.md5(p.read_bytes()).hexdigest()
-            for p in snap0.rglob("*.parquet")
+            str(p.relative_to(t)): (
+                hashlib.md5(p.read_bytes()).hexdigest() if p.is_file() else None
+            )
+            for p in t.rglob("*")
         }
 
-    before = digests()
-    cat.upsert(spark, spark.createDataFrame([(7, -1)], "id long, v long"), "t", "id")
-    snap = cat.current_snapshot("t")
-    moved = {k for k, s in snap["buckets"].items() if s == "snap-1"}
-    assert len(moved) == 1 and "@8" in next(iter(moved))  # upgraded key form
-    legacy_left = {k for k in snap["buckets"] if "@" not in k}
-    assert len(legacy_left) == 7  # untouched entries stay legacy
-    assert digests() == before  # legacy files never rewritten
-    got = {r.id: r.v for r in cat.read_stage(spark, "t").collect()}
-    assert len(got) == 400 and got[7] == -1 and got[8] == 16
-    # a split over the legacy table also works (touches one base bucket)
-    cat.split_buckets(spark, "t", [0])
-    assert cat.read_stage(spark, "t").count() == 400
+    before = files()
+    batch = spark.createDataFrame([(7, -1)], "id long, v long")
+    for op in (
+        lambda: cat.read_stage(spark, "t"),
+        lambda: cat.upsert(spark, batch, "t", "id"),
+        lambda: cat.vacuum("t"),
+    ):
+        with pytest.raises(ValueError, match="'t'.*format.*rebuild"):
+            op()
+        assert files() == before
+    cat.drop("t")
+    assert not t.exists() and cat.current_snapshot("t") is None
 
 
 def test_split_crash_before_publish_leaves_old_layout(spark, tmp_path):
     """A crash after the split wrote its new bucket files but before the
     manifest publish must leave the pre-split layout committed and a retry
-    must succeed cleanly (same snapshot id, overwrite)."""
+    must succeed cleanly: the torn attempt's snap-1 is never reused (the
+    retry reserves snap-2) and stays an orphan for vacuum."""
     import pytest
 
     from llacie_spark.io import SnapshotCatalog
@@ -386,12 +377,13 @@ def test_split_crash_before_publish_leaves_old_layout(spark, tmp_path):
     snap = cat.current_snapshot("t")
     assert snap["snapshot"] == 0 and not snap.get("bucket_mods")  # old layout
     assert {r.id: r.v for r in cat.read_stage(spark, "t").collect()} == rows
-    # retry succeeds; orphan files from the torn attempt are overwritten
+    # retry succeeds in a fresh snapshot dir; the torn attempt's is an orphan
     cat.split_buckets(spark, "t", [2])
-    assert cat.current_snapshot("t")["bucket_mods"] == {"2": 16}
+    snap = cat.current_snapshot("t")
+    assert snap["snapshot"] == 2 and snap["bucket_mods"] == {"2": 16}
     assert {r.id: r.v for r in cat.read_stage(spark, "t").collect()} == rows
-    # vacuum never touches the now-live snap-1
-    cat.vacuum("t")
+    # vacuum reclaims the torn attempt's snap-1, never the live snap-2
+    assert cat.vacuum("t") == ["snap-1"]
     assert {r.id: r.v for r in cat.read_stage(spark, "t").collect()} == rows
 
 
@@ -457,7 +449,7 @@ def test_unfinished_rejects_malformed_cutoff(spark, tmp_path):
     cat = SnapshotCatalog(str(tmp_path))
     inp = spark.range(0, 5).withColumnRenamed("id", "doc_id")
     done = inp.withColumn("updated_at", F.current_timestamp())
-    cat.write_stage(done, "t")
+    cat.write_stage(done, "t", bucket_key="doc_id", n_buckets=4)
     with pytest.raises(ValueError, match="ISO timestamp"):
         cat.unfinished(spark, inp, "t", "doc_id", redo_older_than="2026-13-01")
 
@@ -467,7 +459,7 @@ def test_torn_manifest_is_invisible(spark, tmp_path):
 
     cat = SnapshotCatalog(str(tmp_path))
     df = spark.range(0, 3)
-    cat.write_stage(df, "t")
+    cat.write_stage(df, "t", bucket_key="id", n_buckets=4)
     (tmp_path / "t" / "_SNAPSHOT.json").write_text("{not json")
     assert cat.current_snapshot("t") is None
     assert cat.read_stage(spark, "t") is None  # uncommitted => invisible
@@ -487,7 +479,9 @@ def test_pipeline_resume_end_to_end(spark, vocab, tmp_path):
 
     # "crashed" first run: only 30 docs worth of extraction committed
     part1 = assemble_text(docs.where(F.col("doc_id") <= "doc-000030"))
-    cat.write_stage(fused_extract(part1, vocab), "extracted")
+    cat.write_stage(
+        fused_extract(part1, vocab), "extracted", bucket_key="doc_id", n_buckets=8
+    )
 
     # resume: anti-join finds the rest, upsert completes the table
     todo = cat.unfinished(spark, docs, "extracted", "doc_id")
@@ -540,7 +534,7 @@ def test_unfinished_redo_older_than(spark, tmp_path):
          (3, datetime.datetime(2026, 6, 1)), (4, datetime.datetime(2026, 6, 1))],
         "doc_id long, updated_at timestamp",
     )
-    cat.write_stage(done, "extracted")
+    cat.write_stage(done, "extracted", bucket_key="doc_id", n_buckets=4)
     inp = spark.range(1, 6).select(F.col("id").alias("doc_id"))
 
     fresh = {r.doc_id for r in cat.unfinished(spark, inp, "extracted", "doc_id").collect()}
