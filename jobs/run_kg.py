@@ -73,10 +73,19 @@ def main(argv: list[str]) -> None:
         "compact in the --stage-maintenance slot",
     )
     args = p.parse_args(argv)
-    if args.incremental_derive and not args.stage_root:
-        # silently falling through to the full-derivation path would never
-        # create the catalog graph tables a later --stage-root run expects
-        p.error("--incremental-derive needs --stage-root")
+    # a flag whose prerequisite is missing would otherwise be ignored: a
+    # "redo" run without a catalog is a fresh full build reported as success,
+    # and --incremental-derive without one never creates the catalog graph
+    # tables a later --stage-root run expects
+    for flag, given, needs, present in (
+        ("--incremental-derive", args.incremental_derive, "--stage-root", args.stage_root),
+        ("--redo-older-than", args.redo_older_than, "--stage-root", args.stage_root),
+        ("--stage-maintenance", args.stage_maintenance, "--stage-root", args.stage_root),
+        ("--stage-merge-on-read", args.stage_merge_on_read, "--stage-root", args.stage_root),
+        ("--no-export", args.no_export, "--incremental-derive", args.incremental_derive),
+    ):
+        if given and not present:
+            p.error(f"{flag} needs {needs}")
 
     from pyspark.sql import SparkSession
 

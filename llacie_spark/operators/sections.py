@@ -9,18 +9,14 @@ being ignored) to guarantee span-level parity with the reference's
 ``note_sections`` output. Everything around them — cleaning, vectorized
 execution — is new Spark-first code.
 
-These run as Arrow-batched pandas UDFs (Python ``re`` semantics don't map 1:1
-to Java regex, so we deliberately stay in Python here; the UDF is the only
-Python hop in the section stage and operates on a single projected column).
+These are plain Python functions: Python ``re`` semantics don't map 1:1 to
+Java regex, so they run inside ``pipeline.fused_extract``'s one Arrow-batched
+UDF rather than as Spark column expressions.
 """
 
 from __future__ import annotations
 
 import re
-
-import pandas as pd
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import StringType
 
 # Start-of-HPI markers (reference regex.py:21-33).
 HPI_START_REGEX = re.compile(
@@ -107,23 +103,3 @@ def extract_short_hpi(note_text: str) -> str | None:
     stop = end.start(0) + begin if end is not None else None
     return note_text[begin:stop].strip(_SECTION_STRIP_CHARS)
 
-
-# --------------------------------------------------------------------- Spark
-
-
-@pandas_udf(StringType())
-def clean_note_text_udf(texts: pd.Series) -> pd.Series:
-    return texts.map(lambda t: clean_note_text(t) if t is not None else None)
-
-
-@pandas_udf(StringType())
-def extract_short_hpi_udf(texts: pd.Series) -> pd.Series:
-    """Cleaned note text -> short-HPI section (null when not extractable)."""
-
-    def _one(t):
-        if t is None:
-            return None
-        hpi = extract_short_hpi(t)
-        return hpi if hpi else None  # empty extraction counts as failure
-
-    return texts.map(_one)

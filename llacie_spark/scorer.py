@@ -31,7 +31,7 @@ Both consume/produce plain Python batches so the Spark integration is a thin
 from __future__ import annotations
 
 import re
-from collections.abc import Callable, Iterable, Sequence
+from collections.abc import Callable, Sequence
 from types import SimpleNamespace
 
 MAX_MENTIONS = 10  # reference JSON schema: maxItems 10 (llama3_8b.py:32-45)
@@ -733,18 +733,6 @@ class LLMScorer:
         from .operators.listclean import cleanup_mention_list
 
         return [cleanup_mention_list(raw) or [] for raw in out]
-
-
-def iter_score(scorer, text_iter: Iterable[str | None], batch_size: int = 256):
-    """Batch an iterator of texts through a scorer (used by mapInPandas)."""
-    batch: list[str | None] = []
-    for t in text_iter:
-        batch.append(t)
-        if len(batch) >= batch_size:
-            yield from scorer.score_batch(batch)
-            batch = []
-    if batch:
-        yield from scorer.score_batch(batch)
 
 
 # ------------------------------------------------------------------ registry

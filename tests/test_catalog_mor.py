@@ -87,6 +87,32 @@ def test_mor_does_not_rewrite_base_files(spark, tmp_path):
     assert len(got) == 1000
 
 
+def test_cow_uniform_batch_rewrites_every_bucket_mor_writes_the_batch(spark, pair):
+    """The write-amplification gap MoR exists for: a batch whose keys hash
+    into every bucket makes CoW rewrite the whole table, while MoR writes
+    only the batch's rows."""
+    cat = pair
+    batch = spark.range(0, 200, 5).withColumn("v", F.lit("u"))
+    mor_base = _base_files(cat, "mor")
+    cat.upsert(spark, batch, "cow", "id")
+    cat.upsert(spark, batch, "mor", "id", merge_on_read=True)
+
+    def rows_in(name, snaps):
+        return spark.read.parquet(*(str(cat.root / name / s) for s in snaps)).count()
+
+    cow = cat.current_snapshot("cow")
+    cow_new = set(cow["buckets"].values()) - {"snap-0"}
+    assert len(cow["buckets"]) == 8 and set(cow["buckets"].values()) == cow_new
+    assert rows_in("cow", cow_new) == 200  # every row rewritten
+    mor = cat.current_snapshot("mor")
+    assert len(mor["deltas"]) == 8  # every bucket touched ...
+    assert _base_files(cat, "mor") == mor_base  # ... no base rewritten
+    delta_snaps = {s for v in mor["deltas"].values() for s in v}
+    assert rows_in("mor", delta_snaps) == batch.count()  # only the batch
+    cow_rows, mor_rows = _twin_rows(cat, spark)
+    assert cow_rows == mor_rows
+
+
 def test_mor_multirow_keys_replaced_as_a_set(spark, tmp_path):
     # the edges-table shape: many rows per key; an upsert replaces the
     # key's whole row set (old rows gone even when the new set is smaller)

@@ -408,6 +408,35 @@ def test_maybe_split_splits_only_oversized_buckets(spark, tmp_path):
     assert cat.maybe_split(spark, "t", target_bucket_bytes=1 << 40) == []
 
 
+def test_split_halves_the_next_hot_upsert(spark, tmp_path):
+    """Recovery of a mis-sized table: a hot-key upsert rewrites its whole
+    base bucket; after ``split_buckets`` the same upsert rewrites only the
+    key's child leaf, about half the rows, without rewriting the table."""
+    from llacie_spark.io import SnapshotCatalog
+
+    cat = SnapshotCatalog(str(tmp_path))
+    base = spark.range(0, 4000).withColumn("v", F.col("id"))
+    cat.write_stage(base, "t", bucket_key="id", n_buckets=8)
+    probe = base.where(F.pmod(F.xxhash64("id"), F.lit(8)) == 3).first()["id"]
+    hot = spark.createDataFrame([(probe, -1)], "id long, v long")
+
+    def rows_written_by(upsert):
+        upsert()
+        snap = cat.current_snapshot("t")["snapshot"]
+        return spark.read.parquet(str(tmp_path / "t" / f"snap-{snap}")).count()
+
+    bucket_rows = base.where(F.pmod(F.xxhash64("id"), F.lit(8)) == 3).count()
+    assert rows_written_by(lambda: cat.upsert(spark, hot, "t", "id")) == bucket_rows
+
+    cat.split_buckets(spark, "t", [3])
+    leaf = base.where(
+        F.pmod(F.xxhash64("id"), F.lit(16)) == F.pmod(F.xxhash64(F.lit(probe).cast("long")), F.lit(16))
+    ).count()
+    assert rows_written_by(lambda: cat.upsert(spark, hot, "t", "id")) == leaf
+    assert 0.3 < leaf / bucket_rows < 0.7
+    assert cat.read_stage(spark, "t").count() == 4000
+
+
 def test_write_stage_auto_buckets_and_sizes(spark, tmp_path):
     """n_buckets='auto' sizes the layout from the batch (power of two,
     floor 8); bucket_sizes reports per-bucket bytes for split decisions."""

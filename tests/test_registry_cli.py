@@ -47,6 +47,34 @@ def test_filter_terms_list_and_dataframe(spark):
     assert "BroadcastHashJoin" in plan and "LeftSemi" in plan
 
 
+@pytest.mark.parametrize(
+    "extra, message",
+    [
+        (["--redo-older-than", "2024-01-01 00:00:00"], "--redo-older-than needs --stage-root"),
+        (["--stage-maintenance"], "--stage-maintenance needs --stage-root"),
+        (["--stage-merge-on-read"], "--stage-merge-on-read needs --stage-root"),
+        (["--stage-root", "unused", "--no-export"], "--no-export needs --incremental-derive"),
+    ],
+    ids=["redo_older_than", "stage_maintenance", "stage_merge_on_read", "no_export"],
+)
+def test_run_kg_rejects_flag_without_prerequisite(extra, message, capsys, monkeypatch):
+    """A flag whose prerequisite is missing used to be ignored (a "redo" run
+    without a catalog did a fresh full build and reported success). The job
+    must refuse the combination before any session starts."""
+    import pyspark.sql as pys
+
+    import jobs.run_kg as job
+
+    def no_session(self):
+        raise AssertionError("a session started before the arguments were checked")
+
+    monkeypatch.setattr(pys.SparkSession.Builder, "getOrCreate", no_session)
+    with pytest.raises(SystemExit) as exc:
+        job.main(["--out", "unused", *extra])
+    assert exc.value.code == 2
+    assert message in capsys.readouterr().err
+
+
 def test_run_kg_job_with_scorer_and_redo(spark, tmp_path, capsys, monkeypatch):
     """The spark-submit entrypoint end-to-end in-process: fresh run, then a
     no-op resume, then a --redo-older-than re-extraction of everything."""
