@@ -54,17 +54,18 @@ def main(argv: list[str]) -> None:
     )
     p.add_argument(
         "--incremental-derive", action="store_true",
-        help="maintain the graph as catalog tables updated per batch "
-        "(episode-scoped triple recompute + merge-on-read edge upsert + "
-        "tombstone retraction) instead of re-deriving the full graph each "
-        "run; needs --stage-root. --out then renders a full export after "
-        "the batch commit (pass --no-export to skip it on intermediate "
-        "batches)",
+        help="maintain the graph as the catalog table `edges`, updated per "
+        "batch (episode-scoped triple recompute + merge-on-read edge upsert "
+        "+ tombstone retraction) instead of re-deriving the full graph each "
+        "run; needs --stage-root. --out then renders a full export (nodes "
+        "and metrics derived from the edges) after the batch commit (pass "
+        "--no-export to skip it on intermediate batches)",
     )
     p.add_argument(
         "--no-export", action="store_true",
         help="with --incremental-derive: skip the full parquet export "
-        "(the catalog tables are the product; export on the final batch)",
+        "(the catalog table `edges` is the product; export on the final "
+        "batch)",
     )
     p.add_argument(
         "--stage-merge-on-read", action="store_true",
@@ -75,8 +76,8 @@ def main(argv: list[str]) -> None:
     args = p.parse_args(argv)
     # a flag whose prerequisite is missing would otherwise be ignored: a
     # "redo" run without a catalog is a fresh full build reported as success,
-    # and --incremental-derive without one never creates the catalog graph
-    # tables a later --stage-root run expects
+    # and --incremental-derive without one never creates the catalog edges
+    # table a later --stage-root run expects
     for flag, given, needs, present in (
         ("--incremental-derive", args.incremental_derive, "--stage-root", args.stage_root),
         ("--redo-older-than", args.redo_older_than, "--stage-root", args.stage_root),
@@ -229,10 +230,7 @@ def main(argv: list[str]) -> None:
                 else:
                     clear_pending(consumed)
             else:
-                dstats = {
-                    "episodes": 0, "edges": 0, "retracted": 0,
-                    "metric_buckets": 0,
-                }
+                dstats = {"episodes": 0, "edges": 0, "retracted": 0}
             phases["derive_s"] = round(time.time() - t, 2)
             if args.stage_maintenance:
                 t = time.time()

@@ -10,27 +10,20 @@ never paid it — its episode-label stage ran only unfinished ids
 (``llacie/db.py:492-508``), and its per-note write was a DELETE-then-INSERT
 touching only conflicting rows (``llacie/db.py:650-665``).
 
-This module maintains the graph as FOUR catalog tables, each updated with
-work proportional to the batch:
-
-- ``edges``      keyed by ``subj`` (merge-on-read upsert; equality-delete
-                 tombstones for episodes recomputed to zero triples);
-- ``episode_nodes`` keyed by ``node_id`` (an episode node exists iff the
-                 episode has ≥1 edge — maintained exactly);
-- ``concept_nodes`` keyed by ``node_id`` (global liveness recomputed from
-                 the per-bucket ``objs`` sets in ``edge_metrics`` — a
-                 vocab-bounded table, so the recompute is O(buckets), not
-                 O(edges));
-- ``edge_metrics`` keyed by (pred, subj_bucket), recomputed ONLY for the
-                 buckets the batch's episodes hash into, read back via the
-                 catalog's bucket-pruned scan.
+This module maintains ONE catalog table, ``edges``, keyed by ``subj``: a
+merge-on-read upsert of the batch's recomputed edges plus equality-delete
+tombstones for episodes recomputed to zero triples. Like the reference,
+which stores only its episode labels (``episode_labels``,
+``llacie/sql/schema.sql:148-168``), nothing derived from the edges is
+stored: nodes and per-partition metrics are derived from them by
+``materialize.write_graph`` when :func:`export_graph` renders the graph.
 
 Scale shape: a batch of D docs in E episodes causes (a) a bucket-pruned
 re-read of the extracted stage restricted to those episodes' docs, (b) an
-argmin over that slice only, (c) an O(new edges) MoR write + O(retracted
-keys) tombstones, and (d) a metrics recompute over the ≤min(E, B) touched
-subj-buckets. Nothing scans the full table; compaction of the accumulated
-deltas rides the normal maintenance slot (``maybe_split``/``compact``).
+argmin over that slice only, and (c) an O(new edges) MoR write + O(retracted
+keys) tombstones — at most two commits. Nothing scans the full table;
+compaction of the accumulated deltas rides the normal maintenance slot
+(:func:`maintain_graph`).
 
 Episode-granularity recompute is required for correctness, not a shortcut:
 a new note can displace its episode's argmin winner (earlier qualifying
@@ -46,14 +39,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .io import SnapshotCatalog
-from .materialize import build_edges, edge_partition_metrics, write_graph
+from .materialize import build_edges, write_graph
 from .pipeline import episode_triples
 
 EDGES = "edges"
-EPISODE_NODES = "episode_nodes"
-CONCEPT_NODES = "concept_nodes"
-EDGE_METRICS = "edge_metrics"
-_META_BUCKETS = 4  # vocab- / bucket-bounded tables: tiny by construction
 
 
 def _episode_subj(col: str = "episode_id"):
@@ -81,16 +70,16 @@ def derive_batch(
     doc_meta: DataFrame,
     n_buckets: int = 64,
 ) -> dict:
-    """Recompute + commit the graph contribution of one ingest batch.
+    """Recompute + commit the edges of one ingest batch's episodes.
 
     Returns counters: episodes recomputed, edges written, subjects
-    retracted, metric buckets touched. Idempotent per batch (re-running
-    with the same batch converges to the same table state — upserts
-    replace, tombstones re-delete)."""
+    retracted. Idempotent per batch (re-running with the same batch
+    converges to the same table state — upserts replace, tombstones
+    re-delete)."""
     eps, adocs = affected_docs(new_doc_ids, doc_meta)
     slice_df = cat.read_stage_pruned(spark, "extracted", keys_df=adocs)
     if slice_df is None:
-        return {"episodes": 0, "edges": 0, "retracted": 0, "metric_buckets": 0}
+        return {"episodes": 0, "edges": 0, "retracted": 0}
     # pruned read returns whole buckets (a superset); restrict to the
     # affected episodes' docs before the argmin
     slice_df = slice_df.join(adocs, "doc_id", "semi")
@@ -118,8 +107,9 @@ def derive_batch(
         cur = cat.current_snapshot(EDGES)
         if cur is not None and cur["n_buckets"] != n_buckets:
             raise ValueError(
-                f"edges table bucketed at base {cur['n_buckets']} != graph "
-                f"n_buckets {n_buckets}: metrics-bucket/leaf alignment broken"
+                f"edges table bucketed at {cur['n_buckets']} != n_buckets "
+                f"{n_buckets}: subj_bucket must stay consistent across the "
+                "batches of one edges table"
             )
         if n_new:
             cat.upsert(
@@ -131,113 +121,10 @@ def derive_batch(
             n_retracted = retracted.count()
             if n_retracted:
                 cat.delete_keys(retracted, EDGES)
-        # ---- episode nodes: exact (present iff ≥1 edge) -------------------
-        ep_nodes = new_edges.select(
-            F.col("subj").alias("node_id"),
-            F.lit("episode").alias("kind"),
-            F.expr("substring(subj, 9)").alias("name"),
-        ).distinct()
-        if n_new:
-            cat.upsert(
-                spark, ep_nodes, EPISODE_NODES, "node_id",
-                n_buckets=n_buckets, merge_on_read=True,
-            )
-        if n_retracted and cat.current_snapshot(EPISODE_NODES) is not None:
-            cat.delete_keys(
-                retracted.select(F.col("subj").alias("node_id")),
-                EPISODE_NODES,
-            )
-        # ---- metrics: recompute ONLY the touched subj-buckets ------------
-        # base == graph n_buckets (asserted above) makes catalog leaves a
-        # refinement of subj_bucket (leaf b at modulus m holds hash%m == b,
-        # and m is base·2^k, so leaf → subj_bucket is b % base): the leaves
-        # with b % base in the touched set are EXACTLY those buckets' rows.
-        touched_g = {
-            r["g"]
-            for r in new_edges.select(F.col("subj_bucket").alias("g"))
-            .union(
-                retracted.select(
-                    F.pmod(F.xxhash64("subj"), F.lit(n_buckets))
-                    .cast("int")
-                    .alias("g")
-                )
-            )
-            .distinct()
-            .collect()  # bounded: ≤ n_buckets values
-        }
     finally:
         new_edges.unpersist()
         retracted.unpersist()
-    n_metric_buckets = 0
-    if touched_g and cat.current_snapshot(EDGES) is not None:
-        # catalog base == graph n_buckets (asserted above), so the catalog
-        # owns the leaf↔base-bucket arithmetic
-        leaves = cat.leaves_for_base_buckets(EDGES, touched_g)
-        bucket_rows = (
-            cat.read_stage_pruned(spark, EDGES, leaves=leaves)
-            if leaves
-            else None
-        )
-        new_metrics = (
-            edge_partition_metrics(bucket_rows).persist()
-            if bucket_rows is not None
-            else None
-        )
-        try:
-            if new_metrics is not None and new_metrics.count():
-                cat.upsert(
-                    spark, new_metrics, EDGE_METRICS,
-                    ["pred", "subj_bucket"], n_buckets=_META_BUCKETS,
-                )
-            old_metrics = cat.read_stage(spark, EDGE_METRICS)
-            if old_metrics is not None:
-                dead = old_metrics.select("pred", "subj_bucket").where(
-                    F.col("subj_bucket").isin(sorted(touched_g))
-                )
-                if new_metrics is not None:
-                    dead = dead.join(
-                        new_metrics.select("pred", "subj_bucket"),
-                        ["pred", "subj_bucket"], "left_anti",
-                    )
-                cat.delete_keys(dead, EDGE_METRICS)
-        finally:
-            if new_metrics is not None:
-                new_metrics.unpersist()
-        n_metric_buckets = len(touched_g)
-    # ---- concept nodes: global liveness from the tiny metrics table ------
-    metrics_now = cat.read_stage(spark, EDGE_METRICS)
-    if metrics_now is not None:
-        live = (
-            metrics_now.select(F.explode("objs").alias("node_id"))
-            .distinct()
-            .select(
-                "node_id",
-                F.lit("concept").alias("kind"),
-                F.expr("substring(node_id, 9)").alias("name"),
-            )
-            .persist()
-        )
-        try:
-            if live.count():
-                cat.upsert(
-                    spark, live, CONCEPT_NODES, "node_id",
-                    n_buckets=_META_BUCKETS,
-                )
-            old_concepts = cat.read_stage(spark, CONCEPT_NODES)
-            if old_concepts is not None:
-                gone = old_concepts.select("node_id").join(
-                    live.select("node_id"), "node_id", "left_anti"
-                )
-                cat.delete_keys(gone, CONCEPT_NODES)
-        finally:
-            live.unpersist()
-    n_eps = eps.count()
-    return {
-        "episodes": n_eps,
-        "edges": n_new,
-        "retracted": n_retracted,
-        "metric_buckets": n_metric_buckets,
-    }
+    return {"episodes": eps.count(), "edges": n_new, "retracted": n_retracted}
 
 
 def record_pending(ids_df: DataFrame, stage_root: str) -> str:
@@ -251,7 +138,7 @@ def record_pending(ids_df: DataFrame, stage_root: str) -> str:
     a previous batch); :func:`read_pending` unions everything outstanding,
     and because :func:`derive_batch` is idempotent at episode granularity,
     re-deriving a crashed batch's ids together with the new batch converges
-    to the same tables. Iceberg analog: the derivation's source-snapshot
+    to the same table. Iceberg analog: the derivation's source-snapshot
     watermark kept in table properties."""
     import os
     import uuid
@@ -295,49 +182,30 @@ def maintain_graph(
     vacuum_older_than_s: float = 600,
     commit_retries: int = 4,
 ) -> dict:
-    """The graph tables' maintenance slot: compact accumulated MoR deltas /
+    """The edges table's maintenance slot: compact accumulated MoR deltas /
     tombstones, split overgrown buckets, expire dead snapshots — same
     service an Iceberg table-maintenance job provides. ``commit_retries``
     defaults on: maintenance runs beside the very writers whose deltas it
     folds, so losing a CAS to one of them must retry, not crash the job."""
-    out = {}
-    for name in (EDGES, EPISODE_NODES, CONCEPT_NODES, EDGE_METRICS):
-        if cat.current_snapshot(name) is None:
-            continue
-        split = cat.maybe_split(
-            spark, name, target_bucket_bytes=target_bucket_bytes,
-            compact_min_deltas=compact_min_deltas,
-            commit_retries=commit_retries,
-        )
-        expired = cat.vacuum(name, older_than_s=vacuum_older_than_s)
-        out[name] = {"split": split, "expired": len(expired)}
-    return out
+    if cat.current_snapshot(EDGES) is None:
+        return {}
+    split = cat.maybe_split(
+        spark, EDGES, target_bucket_bytes=target_bucket_bytes,
+        compact_min_deltas=compact_min_deltas,
+        commit_retries=commit_retries,
+    )
+    expired = cat.vacuum(EDGES, older_than_s=vacuum_older_than_s)
+    return {EDGES: {"split": split, "expired": len(expired)}}
 
 
 def export_graph(spark: SparkSession, cat: SnapshotCatalog, out_dir: str) -> dict:
-    """Render the catalog graph tables to the plain-parquet graph layout
-    ``materialize_graph`` writes (nodes/, edges/ partitioned by
-    (pred, subj_bucket), metrics/) — a full-table write, so an explicit
-    step (final export / downstream handoff), NOT part of the per-batch
-    loop. Returns the same counters dict as ``materialize_graph``."""
+    """Render the catalog ``edges`` table, with the nodes and metrics
+    derived from it, to the plain-parquet graph layout ``materialize_graph``
+    writes (nodes/, edges/ partitioned by (pred, subj_bucket), metrics/) —
+    a full-table write, so an explicit step (final export / downstream
+    handoff), NOT part of the per-batch loop. Returns the same counters
+    dict as ``materialize_graph``."""
     edges = cat.read_stage(spark, EDGES)
     if edges is None:
         raise ValueError("export_graph: no committed edges table")
-    ep = cat.read_stage(spark, EPISODE_NODES)
-    cn = cat.read_stage(spark, CONCEPT_NODES)
-    nodes = ep if cn is None else (cn if ep is None else ep.unionByName(cn))
-    metrics = cat.read_stage(spark, EDGE_METRICS)
-    if nodes is None or metrics is None:
-        # a derive_batch crash between its table commits can leave edges
-        # committed but nodes/metrics absent; the pending-derive log will
-        # re-derive them — exporting now would write a torn graph
-        missing = [
-            n for n, df in ((EPISODE_NODES, nodes), (EDGE_METRICS, metrics))
-            if df is None
-        ]
-        raise ValueError(
-            f"export_graph: edges committed but {missing} missing — a "
-            "derivation is incomplete; re-run the incremental derive (the "
-            "pending log re-covers it) before exporting"
-        )
-    return write_graph(nodes, edges, metrics, out_dir)
+    return write_graph(edges, out_dir)

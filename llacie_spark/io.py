@@ -421,25 +421,6 @@ class SnapshotCatalog:
             {self._entry_bucket_mod(k) for k in (*cur["buckets"], *cur["deltas"])}
         )
 
-    def leaves_for_base_buckets(
-        self, name: str, base_ids: set[int] | list[int]
-    ) -> list[tuple[int, int]]:
-        """The (bucket, modulus) leaves whose BASE bucket is in ``base_ids``
-        — the public face of the split-refinement invariant (a leaf b at
-        modulus base·2^k refines base bucket b % base), so consumers that
-        think in base buckets (e.g. incremental metric recompute keyed by
-        ``pmod(xxhash64(key), n_buckets)``) never re-derive the layout
-        arithmetic themselves. Feed the result to
-        :meth:`read_stage_pruned`'s ``leaves``."""
-        cur = self.current_snapshot(name)
-        if cur is None:
-            return []
-        base = cur["n_buckets"]
-        wanted = {int(b) for b in base_ids}
-        return [
-            (b, m) for b, m in self._leaf_entries(cur) if b % base in wanted
-        ]
-
     def _read_entries(
         self,
         spark: SparkSession,
@@ -591,20 +572,16 @@ class SnapshotCatalog:
         )
 
     def read_stage_pruned(
-        self,
-        spark: SparkSession,
-        name: str,
-        keys_df: DataFrame | None = None,
-        leaves: list[tuple[int, int]] | None = None,
+        self, spark: SparkSession, name: str, keys_df: DataFrame
     ) -> DataFrame | None:
         """Bucket-pruned read — the catalog-layout analog of partition
         pruning: scan ONLY the leaf buckets that ``keys_df``'s keys hash
-        into (or an explicit ``leaves`` list of (bucket, modulus) pairs).
-        Returns the FULL content of those buckets — a superset of the keys'
-        rows; callers still filter or join. This is what keeps per-batch
-        incremental derivation IO proportional to the touched buckets, not
-        to the table: re-deriving the episodes of a 250k-doc batch reads the
-        batch's bucket fan-out of the extracted stage instead of all of it.
+        into. Returns the FULL content of those buckets — a superset of the
+        keys' rows; callers still filter or join. This is what keeps
+        per-batch incremental derivation IO proportional to the touched
+        buckets, not to the table: re-deriving the episodes of a 250k-doc
+        batch reads the batch's bucket fan-out of the extracted stage
+        instead of all of it.
 
         Cost: one bounded driver collect of distinct (bucket, modulus)
         assignments (at most one pair per leaf — the same collect upsert's
@@ -614,23 +591,20 @@ class SnapshotCatalog:
         cur = self.current_snapshot(name)
         if cur is None:
             return None
-        if leaves is None:
-            if keys_df is None:
-                raise ValueError("read_stage_pruned needs keys_df or leaves")
-            keys = list(cur["bucket_key"])
-            self._check_key_dtypes(
-                cur["columns"], keys_df, keys, name, "read_stage_pruned"
-            )
-            mod, bucket = self._assignment_exprs(
-                keys, cur["n_buckets"], self._bucket_mods(cur)
-            )
-            leaves = sorted(
-                (r["b"], r["m"])
-                for r in keys_df.select(
-                    bucket.alias("b"), mod.alias("m")
-                ).distinct().collect()
-            )
-        return self._read_entries(spark, name, cur, list(leaves))
+        keys = list(cur["bucket_key"])
+        self._check_key_dtypes(
+            cur["columns"], keys_df, keys, name, "read_stage_pruned"
+        )
+        mod, bucket = self._assignment_exprs(
+            keys, cur["n_buckets"], self._bucket_mods(cur)
+        )
+        leaves = sorted(
+            (r["b"], r["m"])
+            for r in keys_df.select(
+                bucket.alias("b"), mod.alias("m")
+            ).distinct().collect()
+        )
+        return self._read_entries(spark, name, cur, leaves)
 
     def unfinished(
         self,
@@ -639,12 +613,11 @@ class SnapshotCatalog:
         name: str,
         key: str | list[str],
         redo_older_than=None,
-        updated_col: str = "updated_at",
     ) -> DataFrame:
         """Input rows not yet present in the committed output (J1-J3).
 
         ``redo_older_than`` (datetime or ISO string) marks committed rows
-        whose ``updated_col`` predates the cutoff as stale: they no longer
+        whose ``updated_at`` predates the cutoff as stale: they no longer
         count as done, so the stale subset is re-extracted — the reference's
         ``--redo-older-than`` staleness reprocessing after a strategy
         upgrade (``llacie/scripts/llacie.py:114-116``; ``llacie/db.py:
@@ -667,7 +640,7 @@ class SnapshotCatalog:
                     raise ValueError(
                         f"redo_older_than is not an ISO timestamp: {redo_older_than!r}"
                     ) from e
-            done = done.where(F.col(updated_col) >= F.lit(redo_older_than))
+            done = done.where(F.col("updated_at") >= F.lit(redo_older_than))
         return input_df.join(done.select(*keys).distinct(), keys, "left_anti")
 
     @staticmethod
@@ -959,24 +932,21 @@ class SnapshotCatalog:
         spark: SparkSession,
         name: str,
         base_ids: list[int],
-        factor: int = 2,
     ) -> dict:
-        """Double (``factor``-fold) the modulus of the given BASE buckets,
-        rewriting only their files — the layout migration that keeps upserts
-        O(batch) as a table grows past its creation-time bucket sizing.
+        """Double the modulus of the given BASE buckets, rewriting only
+        their files — the layout migration that keeps upserts O(batch) as a
+        table grows past its creation-time bucket sizing.
 
         Extendible hashing: base bucket ``b`` currently at modulus ``m``
         holds keys with ``hash % base == b``; after the split those keys
-        re-land at ``hash % (m*factor)``, fanning out into ``factor``× as
-        many leaf buckets. Files of every other bucket are untouched
+        re-land at ``hash % (2m)``, fanning out into twice as many leaf
+        buckets. Files of every other bucket are untouched
         (byte-identical across the migration — tested) and the manifest
         update is the same atomic publish as any commit, so a crash
         mid-split leaves the old layout committed. Iceberg's analog is file-
         granularity MERGE; the reference's upsert touches only conflicting
         rows (``llacie/db.py:650-665``) — this brings the parquet layout's
         granularity arbitrarily close to that as data grows."""
-        if factor < 2 or factor & (factor - 1):
-            raise ValueError(f"factor must be a power of two >= 2, got {factor}")
         cur = self.current_snapshot(name)
         if cur is None:
             raise ValueError(f"no committed table {name!r}")
@@ -993,7 +963,7 @@ class SnapshotCatalog:
         leaves: list[tuple[int, int]] = []
         for b in base_ids:
             m = bucket_mods.get(b, base)
-            new_mods[b] = m * factor
+            new_mods[b] = m * 2
             # leaf buckets under base bucket b at modulus m; a split is also
             # a compaction of its leaves: the merged (base + deltas) rows fan
             # into the children as pure base
@@ -1110,13 +1080,11 @@ class SnapshotCatalog:
         spark: SparkSession,
         name: str,
         target_bucket_bytes: int = 256 << 20,
-        factor: int = 2,
         compact_min_deltas: int = 4,
         commit_retries: int = 0,
     ) -> list[int]:
         """The split-decision loop: find base buckets whose on-disk leaf
-        total exceeds ``2 * target_bucket_bytes`` and split them ``factor``-
-        fold. Returns the base bucket ids split (empty = layout healthy).
+        total exceeds ``2 * target_bucket_bytes`` and split them in two. Returns the base bucket ids split (empty = layout healthy).
         Run after large upserts — the same maintenance slot as vacuum.
         The 2x hysteresis keeps a bucket from oscillating around the target
         (post-split halves sit at ~target, comfortably below the trigger).
@@ -1143,7 +1111,7 @@ class SnapshotCatalog:
             b for b, sz in per_base.items() if sz > 2 * target_bucket_bytes
         )
         if oversized:
-            self.split_buckets(spark, name, oversized, factor=factor)
+            self.split_buckets(spark, name, oversized)
         return oversized
 
     def bucket_sizes(self, name: str) -> dict[str, int]:
@@ -1174,41 +1142,6 @@ class SnapshotCatalog:
                 for d in snaps
             )
         return out
-
-    def drop_columns(self, name: str, cols: str | list[str]) -> list[str]:
-        """Metadata-only column drop — Iceberg ``ALTER TABLE ... DROP
-        COLUMN``. No data files are touched: the columns are removed from
-        the manifest schema, and :meth:`read_stage`'s explicit-schema read
-        simply stops projecting them (parquet readers ignore file columns
-        absent from the requested schema). Later upserts then expect batches
-        WITHOUT the dropped columns — the migration path for a stage that
-        stops persisting a re-derivable column (ADVICE r5: ``note_text``).
-
-        Bucket-key columns cannot be dropped. Returns the columns actually
-        removed (empty if none were present — the call is idempotent).
-        Commits via the same CAS as every other writer; concurrent-commit
-        losers raise :class:`CommitConflict`."""
-        cur = self.current_snapshot(name)
-        if cur is None:
-            raise ValueError(f"no such table: {name!r}")
-        drop = [cols] if isinstance(cols, str) else list(cols)
-        hit = set(drop) & set(cur["bucket_key"])
-        if hit:
-            raise ValueError(
-                f"cannot drop bucket-key column(s) {sorted(hit)} of {name!r}"
-            )
-        removed = [c for c, _t in cur["columns"] if c in drop]
-        if not removed:
-            return []
-        # fresh snapshot id (atomic mkdir reservation) so the commit is a
-        # real CAS step other writers observe; the reserved dir stays empty —
-        # every bucket pointer still references its existing data dirs
-        snap_id = self._reserve_snap(name, cur["snapshot"] + 1)
-        self._commit_over(
-            name, cur, snap_id,
-            columns=[[c, t] for c, t in cur["columns"] if c not in drop],
-        )
-        return removed
 
     def vacuum(self, name: str, older_than_s: float | None = None) -> list[str]:
         """Delete snapshot directories no longer referenced by the current

@@ -25,19 +25,21 @@ from .schemas import PRED_HAS_SYMPTOM
 DEFAULT_BUCKETS = 64
 
 
-def build_nodes(triples: DataFrame) -> DataFrame:
-    """Node table: episode subjects + concept objects, deduplicated."""
-    subjects = triples.select(
-        F.concat(F.lit("episode:"), F.col("episode_id")).alias("node_id"),
-        F.lit("episode").alias("kind"),
-        F.col("episode_id").cast("string").alias("name"),
+def build_nodes(edges: DataFrame) -> DataFrame:
+    """Node table derived from the edges: an episode node per ``subj``, a
+    concept node per ``obj``, the name being the text after the prefix."""
+
+    def side(col: str, kind: str) -> DataFrame:
+        prefix = f"{kind}:"
+        return edges.select(
+            F.col(col).alias("node_id"),
+            F.lit(kind).alias("kind"),
+            F.expr(f"substring({col}, {len(prefix) + 1})").alias("name"),
+        )
+
+    return side("subj", "episode").unionByName(side("obj", "concept")).dropDuplicates(
+        ["node_id"]
     )
-    objects = triples.select(
-        F.concat(F.lit("concept:"), F.col("label_name")).alias("node_id"),
-        F.lit("concept").alias("kind"),
-        F.col("label_name").alias("name"),
-    )
-    return subjects.unionByName(objects).dropDuplicates(["node_id"])
 
 
 def build_edges(triples: DataFrame, n_buckets: int = DEFAULT_BUCKETS) -> DataFrame:
@@ -62,11 +64,8 @@ def build_edges(triples: DataFrame, n_buckets: int = DEFAULT_BUCKETS) -> DataFra
 def edge_partition_metrics(edges: DataFrame) -> DataFrame:
     """Per-(pred, bucket) quality metrics — the queryable runtime footprint.
 
-    ``objs`` (the bucket's distinct object ids, vocab-bounded so ≤ a few
-    hundred strings per row) makes global concept liveness derivable from
-    this TINY table instead of a full edges scan — what lets incremental
-    derivation retract a concept node whose last referencing edge
-    disappeared without reading the whole edges table.
+    ``objs`` lists the bucket's distinct object ids (vocab-bounded, so at
+    most a few hundred strings per row).
 
     ``n_subjects`` is the size of a set, not ``countDistinct``: a distinct
     aggregate plans as two more aggregations and one more exchange (measured
@@ -81,31 +80,40 @@ def edge_partition_metrics(edges: DataFrame) -> DataFrame:
     )
 
 
-def write_graph(nodes: DataFrame, edges: DataFrame, metrics: DataFrame, out_dir: str) -> dict:
-    """Write nodes/, edges/ (partitioned by pred, subj_bucket), metrics/ —
-    each once, none read back: the row counts are observed on the writes
-    (an ``Observation`` is bound to its own DataFrame, so concurrent calls
-    cannot mix counts). Returns the counts. With an Iceberg catalog these
-    become three ``writeTo(...).partitionedBy(...)`` commits."""
-    obs = {k: Observation() for k in ("nodes", "edges", "partitions")}
-    rows = F.count(F.lit(1)).alias("rows")
-    nodes.observe(obs["nodes"], rows).write.mode("overwrite").parquet(f"{out_dir}/nodes")
-    # hash ON the partition columns first, so each (pred, bucket) leaf is
-    # one task's and gets one file — without it every input task opens a
-    # writer for every leaf it sees (measured: 32 tasks × 64 buckets = 2048
-    # tiny files at 60k docs), the layout io._write_buckets and Iceberg's
-    # hash write-distribution avoid. The partition count is explicit, one
-    # task per core: AQE coalesced the bare repartition to ONE task that
-    # wrote all 64 leaves one after another (measured on 59k edges, 4
-    # cores: edges write 1.01 s -> 0.51 s).
-    parts = edges.sparkSession.sparkContext.defaultParallelism
-    edges.repartition(parts, "pred", "subj_bucket").observe(obs["edges"], rows).write.mode(
-        "overwrite"
-    ).partitionBy("pred", "subj_bucket").parquet(f"{out_dir}/edges")
-    metrics.observe(obs["partitions"], rows).write.mode("overwrite").parquet(
-        f"{out_dir}/metrics"
-    )
-    return {k: o.get["rows"] for k, o in obs.items()} | {"preds": [PRED_HAS_SYMPTOM]}
+def write_graph(edges: DataFrame, out_dir: str) -> dict:
+    """Write nodes/, edges/ (partitioned by pred, subj_bucket) and metrics/,
+    all three derived from ``edges``. The edges are persisted once, so their
+    upstream plan runs once; nothing is read back: the row counts are
+    observed on the writes (an ``Observation`` is bound to its own
+    DataFrame, so concurrent calls cannot mix counts). Returns the counts.
+    With an Iceberg catalog these become three
+    ``writeTo(...).partitionedBy(...)`` commits."""
+    edges = edges.persist()
+    try:
+        obs = {k: Observation() for k in ("nodes", "edges", "partitions")}
+        rows = F.count(F.lit(1)).alias("rows")
+        build_nodes(edges).observe(obs["nodes"], rows).write.mode("overwrite").parquet(
+            f"{out_dir}/nodes"
+        )
+        # hash ON the partition columns first, so each (pred, bucket) leaf
+        # is one task's and gets one file — without it every input task
+        # opens a writer for every leaf it sees (measured: 32 tasks × 64
+        # buckets = 2048 tiny files at 60k docs), the layout
+        # io._write_buckets and Iceberg's hash write-distribution avoid. The
+        # partition count is explicit, one task per core: AQE coalesced the
+        # bare repartition to ONE task that wrote all 64 leaves one after
+        # another (measured on 59k edges, 4 cores: edges write 1.01 s ->
+        # 0.51 s).
+        parts = edges.sparkSession.sparkContext.defaultParallelism
+        edges.repartition(parts, "pred", "subj_bucket").observe(obs["edges"], rows).write.mode(
+            "overwrite"
+        ).partitionBy("pred", "subj_bucket").parquet(f"{out_dir}/edges")
+        edge_partition_metrics(edges).observe(obs["partitions"], rows).write.mode(
+            "overwrite"
+        ).parquet(f"{out_dir}/metrics")
+        return {k: o.get["rows"] for k, o in obs.items()} | {"preds": [PRED_HAS_SYMPTOM]}
+    finally:
+        edges.unpersist()
 
 
 def materialize_graph(
@@ -113,29 +121,12 @@ def materialize_graph(
     out_dir: str,
     n_buckets: int = DEFAULT_BUCKETS,
 ) -> dict:
-    """Build nodes, edges and per-partition metrics from the triples and
-    ``write_graph`` them. Returns row counts."""
-    # persist: all three tables consume triples — without this the full
-    # upstream plan (including the Python extraction UDF) would execute
-    # once per write. The metrics aggregate the same in-memory edges, not
-    # the written files, so the pipeline runs exactly once and nothing is
-    # read back.
-    #
-    # Persist ONLY the slim projection nodes/edges read. Triples deliberately
-    # carry the full `spans` payload (the per-row span-sequence invariant
-    # rides through every stage), but neither output table stores it —
-    # caching it too meant ~6 KB/row of dead weight (measured at 60k docs:
-    # ~2.3 GB cached, 8-18 s of GC-thrashed persist swinging 3x run-to-run,
-    # and an OOM'd executor at 1M docs). Column-pruning the cache is the
-    # same rule as pruning a scan: never materialize columns the consumer
-    # doesn't read.
-    slim = [
-        "episode_id", "pred", "label_name", "label_value", "line_number",
-        "doc_id", "stage", "strategy", "strategy_version", "updated_at",
-    ]
-    triples = triples.select(*[c for c in slim if c in triples.columns]).persist()
-    try:
-        edges = build_edges(triples, n_buckets)
-        return write_graph(build_nodes(triples), edges, edge_partition_metrics(edges), out_dir)
-    finally:
-        triples.unpersist()
+    """``write_graph`` the edges built from the triples. Returns row counts.
+
+    The persisted edges are a projection of the triples, so the cache holds
+    only the columns the graph stores: triples carry the full ``spans``
+    payload, and caching it too meant ~6 KB/row of dead weight (measured at
+    60k docs: ~2.3 GB cached, 8-18 s of GC-thrashed persist swinging 3x
+    run-to-run, and an OOM'd executor at 1M docs). The upstream plan,
+    including the Python extraction UDF, runs exactly once."""
+    return write_graph(build_edges(triples, n_buckets), out_dir)

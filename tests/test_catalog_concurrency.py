@@ -279,51 +279,6 @@ def test_parallel_mor_upserts_all_deltas_land(spark, tmp_path):
     assert _rows(cat, spark) == got
 
 
-def test_drop_columns_metadata_only(spark, tmp_path):
-    """Iceberg ALTER TABLE DROP COLUMN semantics (ADVICE r5 note_text
-    migration): the drop rewrites NO data files — only the manifest schema
-    — and later upserts expect batches without the dropped column."""
-    import os
-
-    cat = SnapshotCatalog(str(tmp_path))
-    base = spark.range(0, 200).withColumn("v", F.lit("keep")).withColumn(
-        "fat", F.lit("x" * 64)
-    )
-    cat.write_stage(base, "t", bucket_key="id", n_buckets=8)
-
-    def data_files():
-        out = {}
-        for root, _dirs, files in os.walk(tmp_path / "t"):
-            for f in files:
-                if f.endswith(".parquet"):
-                    p = os.path.join(root, f)
-                    out[p] = os.stat(p).st_mtime_ns
-        return out
-
-    before = data_files()
-    assert cat.drop_columns("t", "fat") == ["fat"]
-    # metadata-only: every data file untouched (same paths, same mtimes)
-    assert data_files() == before
-
-    got = cat.read_stage(spark, "t")
-    assert got.columns == ["id", "v"]  # the column no longer projects
-    assert got.count() == 200
-
-    # idempotent; unknown columns are a no-op too
-    assert cat.drop_columns("t", "fat") == []
-    assert cat.drop_columns("t", ["nope"]) == []
-
-    # the upsert contract now expects the NEW schema: a batch carrying the
-    # dropped column is an (opt-in) addition, a batch without it is exact
-    cat.upsert(spark, spark.createDataFrame([(7, "new")], "id long, v string"), "t", "id")
-    rows = {r.id: r.v for r in cat.read_stage(spark, "t").collect()}
-    assert rows[7] == "new" and len(rows) == 200
-
-    # guard rail: bucket-key columns refuse
-    with pytest.raises(ValueError, match="bucket-key"):
-        cat.drop_columns("t", "id")
-
-
 def test_publish_refuses_after_concurrent_vacuum_reclaims_snapshot(
     spark, tmp_path, cat
 ):

@@ -1,8 +1,11 @@
-"""Every runnable file has a documented caller (Spark-free).
+"""Every runnable file has a documented caller, and every public catalog
+and incremental-derivation entry point a program caller (Spark-free).
 
 A script that nothing names is a harness nobody re-runs: it rots while the
 code under it moves. These checks keep the runnable surface equal to what
-README's "Running" block, ``bench.py`` and the tests say it is.
+README's "Running" block, ``bench.py`` and the tests say it is. A public
+method only tests call is the same kind of rot one level down: code kept
+alive by its own tests.
 """
 
 import ast
@@ -73,3 +76,76 @@ def test_bench_keeps_the_steal_probes_other_harnesses_import():
 
     before = _cpu_stat()
     assert 0.0 <= _steal_pct(before, _cpu_stat()) <= 100.0
+
+
+
+# where a program caller may live: everything runnable except the tests
+CALLER_FILES = [
+    *(REPO / "llacie_spark").rglob("*.py"),
+    *(REPO / "jobs").glob("*.py"),
+    *(REPO / "scripts").glob("*.py"),
+    *(REPO / "perfbench").glob("*.py"),
+    REPO / "bench.py",
+    REPO / "__spark_entry__.py",
+]
+# the receivers a SnapshotCatalog goes by in the caller files (``self``
+# inside io.py, whose one class with methods is the catalog). Matching the
+# receiver keeps a DataFrame call of the same name (``df.drop``) from
+# counting as a catalog caller.
+CATALOG_RECEIVERS = {"cat", "catalog", "SnapshotCatalog"}
+# public methods with no program caller on purpose, and why
+OPERATOR_ONLY = {
+    "drop": "an operator's command: the rebuild the manifest-format error "
+    "asks for, and the way to clear tables nothing reads any more",
+}
+
+
+def _public_defs(path: Path, cls: str | None = None) -> set[str]:
+    body = ast.parse(path.read_text()).body
+    if cls is not None:
+        body = next(n for n in body if isinstance(n, ast.ClassDef) and n.name == cls).body
+    return {
+        n.name for n in body
+        if isinstance(n, ast.FunctionDef) and not n.name.startswith("_")
+    }
+
+
+def _receiver(node: ast.expr) -> str | None:
+    """Last name of a call's receiver: ``cat`` for ``self.cat.f()``,
+    ``SnapshotCatalog`` for ``SnapshotCatalog(root).f()``."""
+    if isinstance(node, ast.Call):
+        node = node.func
+    if isinstance(node, ast.Attribute):
+        return node.attr
+    return getattr(node, "id", None)
+
+
+def _called_names(catalog_only: bool) -> set[str]:
+    """Names called in the caller files, ``f(...)`` and ``x.f(...)``; with
+    ``catalog_only``, only methods called on a catalog."""
+    names: set[str] = set()
+    for path in CALLER_FILES:
+        receivers = CATALOG_RECEIVERS | ({"self"} if path == REPO / "llacie_spark/io.py" else set())
+        for node in ast.walk(ast.parse(path.read_text())):
+            if not isinstance(node, ast.Call):
+                continue
+            f = node.func
+            if isinstance(f, ast.Attribute):
+                if not catalog_only or _receiver(f.value) in receivers:
+                    names.add(f.attr)
+            elif isinstance(f, ast.Name) and not catalog_only:
+                names.add(f.id)
+    return names
+
+
+def test_every_catalog_method_has_a_program_caller():
+    methods = _public_defs(REPO / "llacie_spark/io.py", "SnapshotCatalog")
+    uncalled = methods - _called_names(catalog_only=True) - set(OPERATOR_ONLY)
+    assert uncalled == set(), f"SnapshotCatalog methods only tests call: {sorted(uncalled)}"
+    assert set(OPERATOR_ONLY) <= methods
+
+
+def test_every_incremental_function_has_a_program_caller():
+    funcs = _public_defs(REPO / "llacie_spark/incremental.py")
+    uncalled = funcs - _called_names(catalog_only=False)
+    assert uncalled == set(), f"incremental functions only tests call: {sorted(uncalled)}"

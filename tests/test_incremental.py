@@ -1,40 +1,38 @@
 """Batch-incremental graph derivation (VERDICT r6 directive #1).
 
-The contract: after any sequence of batches, the four catalog graph tables
-equal what full derivation over the whole staged table would produce —
-including the two hard cases full-table recompute gets for free:
+The contract: after any sequence of batches, ``export_graph`` of the
+catalog ``edges`` table writes the graph ``materialize_graph`` writes from
+a full derivation over the whole staged table — including the two hard
+cases full-table recompute gets for free:
 
 - WINNER DISPLACEMENT: a later batch adds an earlier qualifying note to an
   existing episode; the episode's edges must be REPLACED (merge-on-read
   multi-row-key upsert);
 - RETRACTION: the new winner carries zero matches, so the episode's
   previously committed edges must DISAPPEAR (equality-delete tombstones),
-  its episode node must drop, and a concept referenced only by that episode
-  must drop from the concept nodes.
+  and with them its episode node and any concept only that episode
+  referenced.
+
+``derive_batch`` commits the ``edges`` table only: nodes and metrics are
+derived from it at export.
 """
 
 import glob
+import uuid
+from collections import Counter
 from datetime import datetime
 
 import pytest
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from llacie_spark.incremental import (
-    CONCEPT_NODES,
-    EDGE_METRICS,
     EDGES,
-    EPISODE_NODES,
     derive_batch,
     export_graph,
     maintain_graph,
 )
 from llacie_spark.io import SnapshotCatalog
-from llacie_spark.materialize import (
-    build_edges,
-    build_nodes,
-    edge_partition_metrics,
-)
+from llacie_spark.materialize import materialize_graph
 from llacie_spark.pipeline import episode_triples
 
 N_BUCKETS = 8
@@ -143,61 +141,64 @@ def _edges_set(cat, spark):
     return {(r.subj, r.obj, r.line_number) for r in df.collect()}
 
 
-def _full_reference(cat, spark, meta):
-    """Full derivation over the WHOLE staged table — the ground truth."""
-    staged = cat.read_stage(spark, "extracted")
-    triples = episode_triples(staged, meta)
-    edges = build_edges(triples, N_BUCKETS)
-    nodes = build_nodes(triples)
-    metrics = edge_partition_metrics(edges)
-    return edges, nodes, metrics
-
-
-def _assert_matches_full(cat, spark, meta):
-    ref_edges, ref_nodes, ref_metrics = _full_reference(cat, spark, meta)
-    got_edges = cat.read_stage(spark, EDGES)
-    ecols = [c for c in ref_edges.columns if c != "updated_at"]
-    want = {tuple(r) for r in ref_edges.select(*ecols).collect()}
-    got = (
-        set()
-        if got_edges is None
-        else {tuple(r) for r in got_edges.select(*ecols).collect()}
-    )
-    assert got == want
-    ep = cat.read_stage(spark, EPISODE_NODES)
-    cn = cat.read_stage(spark, CONCEPT_NODES)
-    got_nodes = set()
-    for df in (ep, cn):
-        if df is not None:
-            got_nodes |= {tuple(r) for r in df.select("node_id", "kind", "name").collect()}
-    want_nodes = {tuple(r) for r in ref_nodes.collect()}
-    assert got_nodes == want_nodes
-    mcols = [c for c in ref_metrics.columns if c != "last_updated"]
-    got_m = cat.read_stage(spark, EDGE_METRICS)
-    want_m = {tuple(map(_freeze, r)) for r in ref_metrics.select(*mcols).collect()}
-    got_mset = (
-        set()
-        if got_m is None
-        else {tuple(map(_freeze, r)) for r in got_m.select(*mcols).collect()}
-    )
-    assert got_mset == want_m
+def _derive(spark, cat, ids, meta):
+    """``derive_batch`` at the test bucket count, checking that it commits
+    only the ``edges`` table and advances it by at most two commits (the
+    upsert and the tombstones)."""
+    before = (cat.current_snapshot(EDGES) or {"snapshot": -1})["snapshot"]
+    stats = derive_batch(spark, cat, ids, meta, n_buckets=N_BUCKETS)
+    after = (cat.current_snapshot(EDGES) or {"snapshot": -1})["snapshot"]
+    assert after - before <= 2
+    assert {p.name for p in cat.root.iterdir()} <= {"extracted", EDGES}
+    return stats
 
 
 def _freeze(v):
     return tuple(v) if isinstance(v, list) else v
 
 
+def _read_graph(spark, out):
+    """(nodes, edges, metrics) rows of a written graph, without the
+    timestamp columns each derivation stamps with its own run time."""
+
+    def rows(table, stamp=None):
+        df = spark.read.parquet(f"{out}/{table}")
+        cols = sorted(c for c in df.columns if c != stamp)
+        return Counter(tuple(map(_freeze, r)) for r in df.select(*cols).collect())
+
+    return rows("nodes"), rows("edges", "updated_at"), rows("metrics", "last_updated")
+
+
+def _assert_matches_full(cat, spark, meta):
+    """The exported catalog graph equals ``materialize_graph`` over a full
+    derivation of the WHOLE staged table — the ground truth."""
+    out = cat.root.parent / f"compare-{uuid.uuid4().hex}"
+    export_graph(spark, cat, str(out / "export"))
+    full = episode_triples(cat.read_stage(spark, "extracted"), meta)
+    materialize_graph(full, str(out / "full"), n_buckets=N_BUCKETS)
+    got_nodes, got_edges, got_metrics = _read_graph(spark, str(out / "export"))
+    want_nodes, want_edges, want_metrics = _read_graph(spark, str(out / "full"))
+    assert got_edges == want_edges
+    assert got_nodes == want_nodes
+    assert got_metrics == want_metrics
+
+
+def _exported_node_ids(spark, cat, out):
+    export_graph(spark, cat, str(out))
+    return {r.node_id for r in spark.read.parquet(f"{out}/nodes").collect()}
+
+
 def test_batches_match_full_derivation(spark, world):
     cat, b1, b2, meta = world
     _stage(cat, spark, b1)
-    derive_batch(spark, cat, _ids(b1), meta, n_buckets=N_BUCKETS)
+    _derive(spark, cat, _ids(b1), meta)
     _assert_matches_full(cat, spark, meta)
     e1 = _edges_set(cat, spark)
     assert ("episode:1", "concept:fever", 3) in e1
     assert ("episode:2", "concept:pain", 2) in e1
 
     _stage(cat, spark, b2)
-    derive_batch(spark, cat, _ids(b2), meta, n_buckets=N_BUCKETS)
+    _derive(spark, cat, _ids(b2), meta)
     _assert_matches_full(cat, spark, meta)
     e2 = _edges_set(cat, spark)
     # displacement: d2 (30 min) beat d1 (60 min); ep1's old edges replaced
@@ -209,31 +210,30 @@ def test_batches_match_full_derivation(spark, world):
     assert ("episode:3", "concept:fever", 1) in e2
 
 
-def test_retraction_drops_nodes_and_concepts(spark, world):
+def test_retraction_drops_nodes_and_concepts(spark, world, tmp_path):
     cat, b1, b2, meta = world
     _stage(cat, spark, b1)
-    derive_batch(spark, cat, _ids(b1), meta, n_buckets=N_BUCKETS)
-    nodes1 = {r.node_id for r in cat.read_stage(spark, EPISODE_NODES).collect()}
-    conc1 = {r.node_id for r in cat.read_stage(spark, CONCEPT_NODES).collect()}
-    assert "episode:2" in nodes1 and "concept:pain" in conc1
+    _derive(spark, cat, _ids(b1), meta)
+    nodes1 = _exported_node_ids(spark, cat, tmp_path / "g1")
+    assert "episode:2" in nodes1 and "concept:pain" in nodes1
 
     _stage(cat, spark, b2)
-    derive_batch(spark, cat, _ids(b2), meta, n_buckets=N_BUCKETS)
-    nodes2 = {r.node_id for r in cat.read_stage(spark, EPISODE_NODES).collect()}
-    conc2 = {r.node_id for r in cat.read_stage(spark, CONCEPT_NODES).collect()}
+    _derive(spark, cat, _ids(b2), meta)
+    nodes2 = _exported_node_ids(spark, cat, tmp_path / "g2")
     assert "episode:2" not in nodes2          # episode node retracted
-    assert "concept:pain" not in conc2        # orphaned concept retracted
-    assert "concept:chills" in conc2 and "episode:1" in nodes2
+    assert "concept:pain" not in nodes2       # orphaned concept retracted
+    assert "concept:chills" in nodes2 and "episode:1" in nodes2
+    _assert_matches_full(cat, spark, meta)
 
 
 def test_derive_batch_idempotent(spark, world):
     cat, b1, b2, meta = world
     _stage(cat, spark, b1)
-    derive_batch(spark, cat, _ids(b1), meta, n_buckets=N_BUCKETS)
+    _derive(spark, cat, _ids(b1), meta)
     _stage(cat, spark, b2)
-    s1 = derive_batch(spark, cat, _ids(b2), meta, n_buckets=N_BUCKETS)
+    s1 = _derive(spark, cat, _ids(b2), meta)
     before = _edges_set(cat, spark)
-    s2 = derive_batch(spark, cat, _ids(b2), meta, n_buckets=N_BUCKETS)
+    s2 = _derive(spark, cat, _ids(b2), meta)
     assert _edges_set(cat, spark) == before
     assert s1["episodes"] == s2["episodes"]
     _assert_matches_full(cat, spark, meta)
@@ -242,9 +242,9 @@ def test_derive_batch_idempotent(spark, world):
 def test_maintenance_compacts_and_preserves(spark, world):
     cat, b1, b2, meta = world
     _stage(cat, spark, b1)
-    derive_batch(spark, cat, _ids(b1), meta, n_buckets=N_BUCKETS)
+    _derive(spark, cat, _ids(b1), meta)
     _stage(cat, spark, b2)
-    derive_batch(spark, cat, _ids(b2), meta, n_buckets=N_BUCKETS)
+    _derive(spark, cat, _ids(b2), meta)
     before = _edges_set(cat, spark)
     maintain_graph(spark, cat, compact_min_deltas=1, vacuum_older_than_s=0)
     assert not (cat.current_snapshot(EDGES) or {}).get("deltas")
@@ -258,7 +258,7 @@ def test_first_seen_zero_triple_episode_writes_no_tombstone(spark, world):
     read of its bucket would pay a no-op generation until compaction)."""
     cat, b1, _b2, meta = world
     _stage(cat, spark, b1)
-    derive_batch(spark, cat, _ids(b1), meta, n_buckets=N_BUCKETS)
+    _derive(spark, cat, _ids(b1), meta)
     deltas_before = dict(
         (cat.current_snapshot(EDGES) or {}).get("deltas") or {}
     )
@@ -269,10 +269,8 @@ def test_first_seen_zero_triple_episode_writes_no_tombstone(spark, world):
         spark.createDataFrame([_meta("d99", 99, 5)], META_SCHEMA)
     )
     _stage(cat, spark, new_doc)
-    stats = derive_batch(spark, cat, _ids(new_doc), new_meta, n_buckets=N_BUCKETS)
-    assert stats == {
-        "episodes": 1, "edges": 0, "retracted": 0, "metric_buckets": 0,
-    }
+    stats = _derive(spark, cat, _ids(new_doc), new_meta)
+    assert stats == {"episodes": 1, "edges": 0, "retracted": 0}
     deltas_after = dict(
         (cat.current_snapshot(EDGES) or {}).get("deltas") or {}
     )
@@ -283,14 +281,13 @@ def test_first_seen_zero_triple_episode_writes_no_tombstone(spark, world):
 def test_split_between_batches_preserves_derivation(spark, world):
     """Mid-sequence layout migration: between two derive batches BOTH the
     staged table and the edges table split buckets (extendible hashing).
-    derive_batch's bucket-pruned stage read and its metric-bucket
-    leaf-refinement (leaf b at modulus m belongs to base bucket b % base)
-    must keep working across the finer layout — a broken alignment here
-    silently recomputes metrics for the wrong buckets or misses staged
-    docs, which no single-layout test can catch."""
+    derive_batch's bucket-pruned reads of the stage (the episodes' docs)
+    and of the edges (the subjects to retract) must keep working across
+    the finer layout — a broken alignment here silently misses staged docs
+    or committed edges, which no single-layout test can catch."""
     cat, b1, b2, meta = world
     _stage(cat, spark, b1)
-    derive_batch(spark, cat, _ids(b1), meta, n_buckets=N_BUCKETS)
+    _derive(spark, cat, _ids(b1), meta)
     _assert_matches_full(cat, spark, meta)
 
     # migrate: split every base bucket of the stage table and every
@@ -303,19 +300,33 @@ def test_split_between_batches_preserves_derivation(spark, world):
     assert cat.current_snapshot(EDGES)["bucket_mods"]  # finer layout live
 
     _stage(cat, spark, b2)
-    derive_batch(spark, cat, _ids(b2), meta, n_buckets=N_BUCKETS)
+    _derive(spark, cat, _ids(b2), meta)
     _assert_matches_full(cat, spark, meta)
     e2 = _edges_set(cat, spark)
     assert ("episode:1", "concept:chills", 7) in e2   # displacement survived
     assert not any(s == "episode:2" for s, _o, _l in e2)  # retraction survived
 
 
+def test_derive_batch_refuses_a_second_bucket_count(spark, world):
+    """``subj_bucket`` is hashed at the batch's ``n_buckets``: a batch at
+    another count would mix two bucketings in one edges table, so it is
+    refused before anything commits."""
+    cat, b1, b2, meta = world
+    _stage(cat, spark, b1)
+    _derive(spark, cat, _ids(b1), meta)
+    snap = cat.current_snapshot(EDGES)["snapshot"]
+    _stage(cat, spark, b2)
+    with pytest.raises(ValueError, match="subj_bucket must stay consistent"):
+        derive_batch(spark, cat, _ids(b2), meta, n_buckets=N_BUCKETS * 2)
+    assert cat.current_snapshot(EDGES)["snapshot"] == snap
+
+
 def test_export_matches_materialize_layout(spark, world, tmp_path, forbid_parquet_reads):
     cat, b1, b2, meta = world
     _stage(cat, spark, b1)
-    derive_batch(spark, cat, _ids(b1), meta, n_buckets=N_BUCKETS)
+    _derive(spark, cat, _ids(b1), meta)
     _stage(cat, spark, b2)
-    derive_batch(spark, cat, _ids(b2), meta, n_buckets=N_BUCKETS)
+    _derive(spark, cat, _ids(b2), meta)
     out = str(tmp_path / "graph")
     with forbid_parquet_reads(out):  # written once, never read back
         stats = export_graph(spark, cat, out)
@@ -334,13 +345,11 @@ def test_export_matches_materialize_layout(spark, world, tmp_path, forbid_parque
 def test_empty_batch_is_cheap_noop(spark, world):
     cat, b1, _b2, meta = world
     _stage(cat, spark, b1)
-    derive_batch(spark, cat, _ids(b1), meta, n_buckets=N_BUCKETS)
+    _derive(spark, cat, _ids(b1), meta)
     before = _edges_set(cat, spark)
     empty = spark.createDataFrame([], "doc_id string")
-    stats = derive_batch(spark, cat, empty, meta, n_buckets=N_BUCKETS)
-    assert stats == {
-        "episodes": 0, "edges": 0, "retracted": 0, "metric_buckets": 0,
-    }
+    stats = _derive(spark, cat, empty, meta)
+    assert stats == {"episodes": 0, "edges": 0, "retracted": 0}
     assert _edges_set(cat, spark) == before
 
 
@@ -360,7 +369,7 @@ def test_pending_log_survives_extract_derive_crash(spark, world, tmp_path):
     record_pending(_ids(b1), root)
     _stage(cat, spark, b1)
     pending, consumed = read_pending(spark, root)
-    derive_batch(spark, cat, pending, meta, n_buckets=N_BUCKETS)
+    _derive(spark, cat, pending, meta)
     clear_pending(consumed)
     assert read_pending(spark, root) == (None, [])
     # batch 2: extraction commits, then the process "dies" before deriving
@@ -370,7 +379,7 @@ def test_pending_log_survives_extract_derive_crash(spark, world, tmp_path):
     pending, consumed = read_pending(spark, root)
     assert pending is not None
     assert {r.doc_id for r in pending.collect()} == {"d2", "d4"}
-    derive_batch(spark, cat, pending, meta, n_buckets=N_BUCKETS)
+    _derive(spark, cat, pending, meta)
     clear_pending(consumed)
     _assert_matches_full(cat, spark, meta)
 

@@ -105,7 +105,7 @@ def test_edges_lineage_carried(spark, vocab):
 
 def test_nodes_shapes(spark, vocab):
     triples = run_pipeline(reference_documents(spark), reference_doc_meta(spark), vocab)
-    nodes = build_nodes(triples)
+    nodes = build_nodes(build_edges(triples, n_buckets=4))
     eps = nodes.where("kind = 'episode'").count()
     cons = nodes.where("kind = 'concept'").count()
     assert eps > 0 and cons > 0
