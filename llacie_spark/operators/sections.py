@@ -10,8 +10,9 @@ being ignored) to guarantee span-level parity with the reference's
 execution — is new Spark-first code.
 
 These are plain Python functions: Python ``re`` semantics don't map 1:1 to
-Java regex, so they run inside ``pipeline.fused_extract``'s one Arrow-batched
-UDF rather than as Spark column expressions.
+Java regex, so they run inside Arrow-batched UDFs (``pipeline.run_pipeline``'s
+section UDF and ``pipeline.fused_extract``'s one UDF) rather than as Spark
+column expressions.
 """
 
 from __future__ import annotations
@@ -74,6 +75,15 @@ HPI_END_REGEX = re.compile(
     re.VERBOSE | re.IGNORECASE,
 )
 
+# What every HPI_START_REGEX match begins with after its zero-width ``\b``:
+# the first letter and the rest of HPI / History / Central / Brief, under
+# the same case folding. No hit can begin inside another (none of the
+# letters after the first is h, c or b, nor folds to one), so scanning the
+# hits in order and trying the full regex at each finds the leftmost match,
+# the one ``search`` finds, without running the full pattern at every
+# position of a note that has no HPI.
+_START_CANDIDATE = re.compile(r"[hcb](?:pi|istory|entral|rief)", re.VERBOSE | re.IGNORECASE)
+
 _SECTION_STRIP_CHARS = ":?-_ \xa0\n"
 
 
@@ -89,13 +99,24 @@ def clean_note_text(text: str) -> str:
     return text.strip()
 
 
+def find_hpi_start(note_text: str) -> re.Match | None:
+    """``HPI_START_REGEX.search(note_text)``, tried only where a start
+    marker can begin. ``match(text, pos)`` sees the character before
+    ``pos``, so ``\\b`` reads as it does inside ``search``."""
+    for hit in _START_CANDIDATE.finditer(note_text):
+        start = HPI_START_REGEX.match(note_text, hit.start())
+        if start is not None:
+            return start
+    return None
+
+
 def extract_short_hpi(note_text: str) -> str | None:
     """Return the short-HPI span of a cleaned note, or None if no start marker.
 
     Semantics-equal to reference regex.py:85-97: first start marker, first end
     marker *after* it, strip ``:?-_ \\xa0\\n`` from both ends.
     """
-    start = HPI_START_REGEX.search(note_text)
+    start = find_hpi_start(note_text)
     if start is None:
         return None
     begin = start.end(0)

@@ -7,10 +7,17 @@ extract -s pres_sx_eplab2`` (``/root/reference/llacie/app.py:135-220``). The
 reference runs these as driver loops over Postgres batches + Slurm fan-out;
 here each stage is one Spark job:
 
-- the whole Python portion (section regex → scorer → vocabulary linking) is
-  ONE scalar Arrow-batched pandas UDF over the single projected
-  ``note_text`` column (``fused_extract``) — all other columns (including
-  the ``spans`` payload with media refs) never leave the JVM;
+- the one-shot ``run_pipeline`` is winner-first: ``doc_meta`` is cut to
+  F1/F2/F4 and joined to the documents before any Python runs, a section
+  UDF (clean + HPI regex) runs over those notes only, the rank-1 window
+  picks each episode's earliest sectioned note, and a score-and-link UDF
+  scores those winners only. Each UDF is Arrow-batched over one projected
+  column, so all other columns (including the ``spans`` payload with
+  media refs) never leave the JVM;
+- ``fused_extract`` is the per-note feature store of staged runs: ONE UDF
+  runs the same two per-batch bodies (``_sections``, ``_score_and_link``)
+  on every note, because a staged note may win its episode in a later
+  batch;
 - the vocabulary is broadcast once per job (``llacie/vocab.py:55-74``'s
   pickle cache analog);
 - lineage + metrics columns (stage, strategy, version, partition, runtime
@@ -70,71 +77,87 @@ def with_lineage(df: DataFrame, stage: str, strategy: str, version: str) -> Data
     )
 
 
-def fused_extract(documents_with_text: DataFrame, vocab: Vocab, scorer=None) -> DataFrame:
-    """sections+mentions+linking as ONE pandas UDF returning a struct.
+_MATCHES = T.ArrayType(
+    T.StructType(
+        [
+            T.StructField("label_name", T.StringType(), False),
+            T.StructField("line_number", T.LongType(), False),
+        ]
+    )
+)
 
-    Three chained ArrowEvalPython nodes would each get their own Python
-    worker pool per task slot (3x workers, poor reuse, 3 Arrow round-trips);
-    one node means one worker pool, one Arrow round-trip, and the text
-    crosses the JVM/Python boundary exactly once. Null ``section_text`` is
-    an extraction failure (kept, so the anti-join resume can retry it —
-    reference regex.py:118-122). Python regex semantics are kept
-    deliberately (SURVEY.md §7.3). A custom (LLM) scorer may be injected.
+
+def _sections(texts) -> list[str | None]:
+    """The per-batch section body: clean + short-HPI regex per note. An
+    empty or missing section is None, an extraction failure (kept, so the
+    anti-join resume can retry it — reference regex.py:118-122). Python
+    regex semantics are kept deliberately (SURVEY.md §7.3)."""
+    out = []
+    for t in texts:
+        sec = extract_short_hpi(clean_note_text(t)) if t is not None else None
+        out.append(sec or None)
+    return out
+
+
+def _score_and_link(sections: list, vocab_dicts, scorer=None) -> tuple[list, list]:
+    """The per-batch score-and-link body: sections -> (mentions, matches),
+    one entry each per section; a null section gets ``[]`` for both. A
+    custom (LLM) scorer may be injected."""
+    local_vocab = Vocab(ngram_dicts=vocab_dicts)
+    s = scorer or GazetteerScorer(canonicalize=local_vocab.find_terms)
+    # ONE score_batch call per Arrow batch — the batched-scorer contract
+    # (U1; reference scores whole batches per GPU worker). Calling
+    # score_batch([sec]) per row cost a SubprocessScorer one process
+    # spawn per DOCUMENT: measured 191 docs/sec vs 7,600 at 40k docs
+    # (BENCH/SUBPROCESS_SCORER.md). Elementwise scorers (gazetteer,
+    # subprocess line protocol, caching wrapper) return identical
+    # results either way.
+    scored_idx = [i for i, sec in enumerate(sections) if sec]
+    scored = s.score_batch([sections[i] for i in scored_idx]) if scored_idx else []
+    if len(scored) != len(scored_idx):
+        # a misbehaving backend (truncated subprocess stdout, LLM batch
+        # drop) must fail loudly — zip would silently hand trailing
+        # documents empty mentions (ADVICE r5)
+        raise RuntimeError(
+            f"scorer {type(s).__name__} returned {len(scored)} results "
+            f"for a batch of {len(scored_idx)} sections — batched-scorer "
+            "contract violated; refusing to silently drop mentions"
+        )
+    mentions = [[] for _ in sections]
+    for i, ms in zip(scored_idx, scored):
+        mentions[i] = ms
+    matches = [
+        list(local_vocab.find_terms("\n".join(ms)).items()) if ms else []
+        for ms in mentions
+    ]
+    return mentions, matches
+
+
+def fused_extract(documents_with_text: DataFrame, vocab: Vocab, scorer=None) -> DataFrame:
+    """sections+mentions+linking for EVERY note, as ONE pandas UDF
+    returning a struct.
+
+    This is the per-note feature store of staged runs (the ``extracted``
+    table, the analog of llacie's ``features`` table): a staged note may
+    win its episode in a later batch, so each is scored when staged.
+    ``run_pipeline`` runs the same two per-batch bodies as two UDFs with
+    the rank-1 window between them. One UDF node here means one Python
+    worker pool, one Arrow round-trip, and the text crosses the
+    JVM/Python boundary exactly once.
     """
     vocab_dicts = vocab.ngram_dicts
-
     out_type = T.StructType(
         [
             T.StructField("section_text", T.StringType(), True),
             T.StructField("mentions", T.ArrayType(T.StringType()), True),
-            T.StructField(
-                "matches",
-                T.ArrayType(
-                    T.StructType(
-                        [
-                            T.StructField("label_name", T.StringType(), False),
-                            T.StructField("line_number", T.LongType(), False),
-                        ]
-                    )
-                ),
-                True,
-            ),
+            T.StructField("matches", _MATCHES, True),
         ]
     )
 
     @F.pandas_udf(out_type)
     def fused_udf(texts: pd.Series) -> pd.DataFrame:
-        local_vocab = Vocab(ngram_dicts=vocab_dicts)
-        s = scorer or GazetteerScorer(canonicalize=local_vocab.find_terms)
-        sections = []
-        for t in texts:
-            sec = extract_short_hpi(clean_note_text(t)) if t is not None else None
-            sections.append(sec if sec else None)
-        # ONE score_batch call per Arrow batch — the batched-scorer contract
-        # (U1; reference scores whole batches per GPU worker). Calling
-        # score_batch([sec]) per row cost a SubprocessScorer one process
-        # spawn per DOCUMENT: measured 191 docs/sec vs 7,600 at 40k docs
-        # (BENCH/SUBPROCESS_SCORER.md). Elementwise scorers (gazetteer,
-        # subprocess line protocol, caching wrapper) return identical
-        # results either way.
-        scored_idx = [i for i, sec in enumerate(sections) if sec]
-        scored = s.score_batch([sections[i] for i in scored_idx]) if scored_idx else []
-        if len(scored) != len(scored_idx):
-            # a misbehaving backend (truncated subprocess stdout, LLM batch
-            # drop) must fail loudly — zip would silently hand trailing
-            # documents empty mentions (ADVICE r5)
-            raise RuntimeError(
-                f"scorer {type(s).__name__} returned {len(scored)} results "
-                f"for a batch of {len(scored_idx)} sections — batched-scorer "
-                "contract violated; refusing to silently drop mentions"
-            )
-        mentions = [[] for _ in sections]
-        for i, ms in zip(scored_idx, scored):
-            mentions[i] = ms
-        matches = [
-            list(local_vocab.find_terms("\n".join(ms)).items()) if ms else []
-            for ms in mentions
-        ]
+        sections = _sections(texts)
+        mentions, matches = _score_and_link(sections, vocab_dicts, scorer)
         return pd.DataFrame(
             {"section_text": sections, "mentions": mentions, "matches": matches}
         )
@@ -149,35 +172,30 @@ def fused_extract(documents_with_text: DataFrame, vocab: Vocab, scorer=None) -> 
     return with_lineage(out, "extract", "fused.gazetteer", "2.0.0")
 
 
-def episode_triples(linked: DataFrame, doc_meta: DataFrame) -> DataFrame:
-    """Collapse per-note matches into per-episode (subj, pred, obj) triples.
-
-    Reference semantics (``llacie/db.py:237-275`` + pres_sx_eplab2): among an
-    episode's qualifying notes (cohort flags pass, service within 24 h of
-    episode start — filters F2/F4), take the *earliest* note that produced
-    features (argmin join J4, Postgres ``DISTINCT ON`` ≡ rank-1 over
-    ``(delta, doc_id)``, so ties go to the smaller doc_id), and emit one
-    triple per matched term with the earliest mention line number.
-
-    The rank-1 window carries ``spans`` through the episode exchange: only
-    qualifying notes reach it, and no second scan re-joins the payload.
-    """
-    delta = (
-        F.unix_timestamp("date_of_service_ts") - F.unix_timestamp("episode_start_ts")
-    ).alias("delta")
-    qualifying = (
-        linked.join(doc_meta, "doc_id")
-        .where(F.col("infection_criteria") & ~F.col("excl_st0_combined"))  # F2
+def _qualifying_meta(doc_meta: DataFrame) -> DataFrame:
+    """``doc_meta`` cut to the cohort filters, which read it alone: cohort
+    flags pass (F2), H&P notes (F1), service within 24 h of episode start
+    (F4); with the service ``delta`` the argmin orders by."""
+    delta = F.unix_timestamp("date_of_service_ts") - F.unix_timestamp("episode_start_ts")
+    return (
+        doc_meta.where(F.col("infection_criteria") & ~F.col("excl_st0_combined"))  # F2
         .where(F.col("note_type") == "H&P")  # F1
         .withColumn("delta", delta)
         .where(F.col("delta") < F.lit(SECS_IN_24H))  # F4
-        # J7: qualify on section/feature presence (a scored note with zero
-        # matches still wins the argmin and yields no labels — reference
-        # get_earliest_notes_with_feature semantics, db.py:237-275)
-        .where(F.col("section_text").isNotNull() & F.col("matches").isNotNull())
     )
+
+
+def _earliest(qualifying: DataFrame) -> DataFrame:
+    """Argmin join J4: each episode's earliest qualifying note, Postgres
+    ``DISTINCT ON`` ≡ rank-1 over ``(delta, doc_id)``, so ties go to the
+    smaller doc_id."""
     w = Window.partitionBy("episode_id").orderBy(F.col("delta").asc(), F.col("doc_id").asc())
-    earliest = qualifying.withColumn("rn", F.row_number().over(w)).where("rn = 1")
+    return qualifying.withColumn("rn", F.row_number().over(w)).where("rn = 1")
+
+
+def _triples(earliest: DataFrame) -> DataFrame:
+    """One triple per matched term of each winning note, with the term's
+    earliest mention line number."""
     triples = earliest.select(
         "episode_id",
         "doc_id",
@@ -194,6 +212,26 @@ def episode_triples(linked: DataFrame, doc_meta: DataFrame) -> DataFrame:
         "spans",
     )
     return with_lineage(triples, "triples", "episode_label.pres_sx_eplab2", "1.0.0")
+
+
+def episode_triples(linked: DataFrame, doc_meta: DataFrame) -> DataFrame:
+    """Collapse per-note matches into per-episode (subj, pred, obj) triples.
+
+    Reference semantics (``llacie/db.py:237-275`` + pres_sx_eplab2): among an
+    episode's qualifying notes (F1/F2/F4), take the *earliest* note that
+    produced features (argmin join J4), and emit one triple per matched
+    term with the earliest mention line number.
+
+    The rank-1 window carries ``spans`` through the episode exchange: only
+    qualifying notes reach it, and no second scan re-joins the payload.
+    """
+    qualifying = linked.join(_qualifying_meta(doc_meta), "doc_id").where(
+        # J7: qualify on section/feature presence (a scored note with zero
+        # matches still wins the argmin and yields no labels — reference
+        # get_earliest_notes_with_feature semantics, db.py:237-275)
+        F.col("section_text").isNotNull() & F.col("matches").isNotNull()
+    )
+    return _triples(_earliest(qualifying))
 
 
 def filter_terms(
@@ -233,15 +271,45 @@ def docs_partitions(n_docs: int, cores: int, docs_per_task: int = 1000) -> int:
 
 
 def run_pipeline(documents: DataFrame, doc_meta: DataFrame, vocab: Vocab, scorer=None) -> DataFrame:
-    """documents + doc_meta -> triples, all stages in one plan (the Python
-    portion fused into a single UDF node).
+    """documents + doc_meta -> triples in one plan, winner-first: the
+    scorer sees each episode's winning note only.
 
-    For resumable runs, stage ``fused_extract``'s output with
-    ``SnapshotCatalog.upsert`` and call ``episode_triples`` on the staged
-    table instead (``run_kg --stage-root``).
+    Every qualifying filter but section presence reads ``doc_meta`` alone,
+    and a sectioned note always has ``matches``, so the winner is the
+    earliest F1/F2/F4 note with an HPI section, known before any scorer
+    call. The plan: documents ⋈ ``doc_meta`` cut to F1/F2/F4 (no Python
+    yet) → ``assemble_text`` → section UDF → ``section_text is not null``
+    → the rank-1 window → score-and-link UDF over the winners'
+    ``section_text`` (only ``matches`` comes back) → triples. The window's
+    input is hash-partitioned one task per core and explicitly sized, so
+    AQE cannot coalesce the scoring stage into one task.
+
+    For resumable runs, stage ``fused_extract``'s output (every note
+    scored) with ``SnapshotCatalog.upsert`` and call ``episode_triples`` on
+    the staged table instead (``run_kg --stage-root``).
     """
     from .corpus import assemble_text
 
-    with_text = assemble_text(documents)
-    linked = fused_extract(with_text, vocab, scorer=scorer)
-    return episode_triples(linked, doc_meta)
+    vocab_dicts = vocab.ngram_dicts
+
+    @F.pandas_udf(T.StringType())
+    def section_udf(texts: pd.Series) -> pd.Series:
+        return pd.Series(_sections(texts), dtype=object)
+
+    @F.pandas_udf(_MATCHES)
+    def score_udf(sections: pd.Series) -> pd.Series:
+        _mentions, matches = _score_and_link(list(sections), vocab_dicts, scorer)
+        return pd.Series(matches, dtype=object)
+
+    # nondeterministic: never duplicate the Python work
+    section_udf = section_udf.asNondeterministic()
+    score_udf = score_udf.asNondeterministic()
+    candidates = assemble_text(documents.join(_qualifying_meta(doc_meta), "doc_id"))
+    sectioned = (
+        candidates.withColumn("section_text", section_udf("note_text"))
+        .drop("note_text")
+        .where(F.col("section_text").isNotNull())
+    )
+    parts = documents.sparkSession.sparkContext.defaultParallelism
+    winners = _earliest(sectioned.repartition(parts, "episode_id"))
+    return _triples(winners.withColumn("matches", score_udf("section_text")))

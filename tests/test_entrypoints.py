@@ -149,3 +149,18 @@ def test_every_incremental_function_has_a_program_caller():
     funcs = _public_defs(REPO / "llacie_spark/incremental.py")
     uncalled = funcs - _called_names(catalog_only=False)
     assert uncalled == set(), f"incremental functions only tests call: {sorted(uncalled)}"
+
+
+def test_headline_report_is_written_where_git_ignores_it():
+    """A plain ``python bench.py`` must not overwrite the committed
+    ``BENCH/headline_r*.json`` reports: its report path is git-ignored."""
+    import subprocess
+
+    from bench import HEADLINE_DIR
+
+    path = HEADLINE_DIR / "headline_r0.json"
+    assert HEADLINE_DIR.parent == REPO
+    ignored = subprocess.run(
+        ["git", "check-ignore", "-q", str(path.relative_to(REPO))], cwd=REPO
+    )
+    assert ignored.returncode == 0, f"{path} is not git-ignored"

@@ -204,10 +204,11 @@ def test_fused_udf_batches_scorer_calls(spark, docs, vocab):
     assert any(r.mentions for r in extracted)
 
 
-def test_fused_udf_rejects_length_mismatched_scorer(spark, docs, vocab):
+def test_fused_udf_rejects_length_mismatched_scorer(spark, docs, meta, vocab):
     """A backend returning the wrong number of results (truncated subprocess
-    stdout, LLM batch drop) must fail loudly — pre-r6 the zip silently gave
-    trailing documents empty mentions (ADVICE r5)."""
+    stdout, LLM batch drop) must fail loudly, in both extraction plans —
+    pre-r6 the zip silently gave trailing documents empty mentions (ADVICE
+    r5)."""
 
     class TruncatingScorer:
         name = "feature.presenting_sx.truncating"
@@ -219,3 +220,56 @@ def test_fused_udf_rejects_length_mismatched_scorer(spark, docs, vocab):
     out = fused_extract(assemble_text(docs).coalesce(1), vocab, scorer=TruncatingScorer())
     with pytest.raises(Exception, match="batched-scorer contract"):
         out.select("mentions").collect()
+    # the same check guards run_pipeline's score-and-link UDF
+    with pytest.raises(Exception, match="batched-scorer contract"):
+        run_pipeline(docs, meta, vocab, scorer=TruncatingScorer()).collect()
+
+
+def test_run_pipeline_scores_only_each_episodes_winner(spark, docs, vocab):
+    """Winner-first: on the 100-note fixture, regrouped into 20 episodes
+    of 5 notes with some notes failing F1 or F4, the scorer receives
+    exactly one section per winning episode, in one score_batch call per
+    Arrow batch, and the triples equal the staged path's, which scores
+    every note."""
+    from pyspark.sql import functions as F
+
+    from llacie_spark.pipeline import episode_triples
+    from llacie_spark.scorer import GazetteerScorer
+
+    sections = spark.sparkContext.accumulator(0)
+    calls = spark.sparkContext.accumulator(0)
+    find_terms = vocab.find_terms
+
+    class CountingScorer:
+        name = "feature.presenting_sx.counting"
+        version = "0.0.0"
+
+        def __init__(self):
+            self.inner = GazetteerScorer(canonicalize=find_terms)
+
+        def score_batch(self, texts):
+            calls.add(1)
+            sections.add(len(texts))
+            return self.inner.score_batch(texts)
+
+    n = F.substring("doc_id", 5, 6).cast("int")
+    hours = F.when(n % 7 == 0, 30).otherwise((n * 7) % 23)  # 30 h fails F4
+    meta = (
+        reference_doc_meta(spark)
+        .withColumn("episode_id", (n % 20 + 1).cast("long"))
+        .withColumn("note_type", F.when(n % 3 == 0, "Progress").otherwise("H&P"))  # F1
+        .withColumn(
+            "date_of_service_ts",
+            (F.col("episode_start_ts").cast("long") + hours * 3600).cast("timestamp"),
+        )
+    )
+    cols = ["episode_id", "doc_id", "label_name", "line_number"]
+    got = run_pipeline(docs, meta, vocab, scorer=CountingScorer()).select(*cols).collect()
+    staged = episode_triples(fused_extract(assemble_text(docs), vocab), meta).select(*cols)
+    assert sorted(map(tuple, got)) == sorted(map(tuple, staged.collect()))
+    # every fixture note has a section, so each episode with an F1/F4
+    # survivor has one winner
+    winners = meta.where((n % 3 != 0) & (n % 7 != 0)).select("episode_id").distinct().count()
+    assert winners == 20
+    assert sections.value == winners
+    assert 1 <= calls.value <= spark.sparkContext.defaultParallelism

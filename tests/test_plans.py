@@ -1,6 +1,6 @@
 """Physical-plan assertions: the plans we'd want at 100 TB, not just plans
 that pass. Checks predicate pushdown, column pruning, broadcast joins, and
-single-Python-hop extraction."""
+winner-first extraction."""
 
 import pytest
 
@@ -45,15 +45,27 @@ def test_anti_and_semi_joins_are_hash_joins(spark, entrymod):
         assert "CartesianProduct" not in plan
 
 
-def test_fused_pipeline_single_python_node(spark, vocab):
-    from llacie_spark.corpus import assemble_text, reference_doc_meta, reference_documents
+def test_winner_first_pipeline_plan(spark, vocab):
+    from llacie_spark.corpus import reference_doc_meta, reference_documents
     from llacie_spark.pipeline import run_pipeline
 
     triples = run_pipeline(reference_documents(spark), reference_doc_meta(spark), vocab)
-    plan = plan_of(triples)
-    # exactly one Python hop for the whole extraction; everything else JVM
-    assert plan.count("ArrowEvalPython") == 1
-    assert "BatchEvalPython" not in plan  # no row-at-a-time Python anywhere
+    lines = plan_of(triples).splitlines()
+    # two Python hops, each Arrow-batched: the section UDF over the F1/F2/F4
+    # notes, and the score-and-link UDF over the rank-1 winners only
+    assert sum("ArrowEvalPython" in ln for ln in lines) == 2, lines
+    assert not any("BatchEvalPython" in ln for ln in lines)  # no row-at-a-time Python
+
+    def first(marker):
+        return next(i for i, ln in enumerate(lines) if marker in ln)
+
+    score, section = (first(f"ArrowEvalPython [{u}(") for u in ("score_udf", "section_udf"))
+    # the plan prints parents above children: the scorer runs after the
+    # window, and the cohort filter before any Python
+    cohort = next(i for i, ln in enumerate(lines) if "Filter" in ln and "= H&P" in ln)
+    assert score < first("Window [") < section < cohort
+    # one scoring task per core, whatever AQE would coalesce to
+    assert any("REPARTITION_BY_NUM" in ln for ln in lines[score:section])
 
 
 def test_whole_stage_codegen_on_textstats(spark, entrymod):

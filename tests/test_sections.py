@@ -45,3 +45,69 @@ def test_no_start_marker_returns_none():
 def test_extraction_stops_at_end_marker():
     note = "HPI: fever and chills\nReview of Systems: negative"
     assert extract_short_hpi(note) == "fever and chills"
+
+
+# fragments of start markers, their optional suffixes and near misses
+_MARKERS = [
+    "HPI", "HPI:", "History of", "History of Present Illness", "History of the Presenting Illness",
+    "History of Traumatic Injury", "Central Elements", "Central Elements of the Present Illness",
+    "Brief summary", "Brief summary:", "Chief Complaint:", " Comments: ", " HPI", "hpi",
+    "Historyof", "CentralElements", "Briefsummary", "chpi", "bhistory", "Hentral", "Crief",
+]
+_HAZARDS = "İıſK"
+
+
+def _mixed_case(rng, s):
+    return "".join(c.upper() if rng.random() < 0.5 else c.lower() for c in s)
+
+
+def _with_hazards(rng, s):
+    """Swap letters for the non-ASCII ones IGNORECASE folds onto i, s, k."""
+    swap = {"i": "İı", "I": "İı", "s": "ſ", "S": "ſ", "k": "K", "K": "K"}
+    return "".join(rng.choice(swap[c]) if c in swap and rng.random() < 0.5 else c for c in s)
+
+
+def _mutations(rng, note, n):
+    for _ in range(n):
+        text = note
+        for _ in range(rng.randint(1, 3)):
+            marker = _mixed_case(rng, rng.choice(_MARKERS))
+            if rng.random() < 0.3:
+                marker = _with_hazards(rng, marker)
+            left = rng.choice(["", "x", "7", "_", " ", "\n", "é", "ſ", "K"])
+            right = rng.choice(["", "y", "9", "_", " ", ":", "\n", "ı"])
+            at = rng.randint(0, len(text))
+            text = text[:at] + left + marker + right + text[at:]
+        if rng.random() < 0.3:  # cut, so some notes have no marker left
+            text = text[rng.randint(0, len(text)):]
+        yield text
+
+
+def test_find_hpi_start_equals_search(corpus_notes):
+    """The candidate scan returns what ``HPI_START_REGEX.search`` returns
+    (span and groups, or None) on the fixture notes, seeded mutations that
+    put markers in mixed case beside word characters, and the case-fold
+    hazards İ ı ſ K."""
+    import random
+
+    from llacie_spark.operators.sections import HPI_START_REGEX, find_hpi_start
+
+    rng = random.Random(8)
+    texts = list(corpus_notes) + [clean_note_text(n) for n in corpus_notes]
+    for note in corpus_notes:
+        texts.extend(_mutations(rng, note, 40))
+    for m in _MARKERS:
+        for _ in range(20):
+            texts.append(_with_hazards(rng, _mixed_case(rng, m)) + rng.choice(["", " of x", ":"]))
+    texts += ["HPİ", "Hpı:", "hiſtory of present illneſs", "ſ", "K", "İ", "ı", "xHPI", "HPIx", ""]
+
+    def key(m):
+        return None if m is None else (m.span(), m.groups())
+
+    diffs = [t for t in texts if key(find_hpi_start(t)) != key(HPI_START_REGEX.search(t))]
+    assert not diffs, diffs[:3]
+    # the inputs exercise both outcomes, hazards included
+    hits = sum(HPI_START_REGEX.search(t) is not None for t in texts)
+    assert 0 < hits < len(texts)
+    assert HPI_START_REGEX.search("HPİ") is not None
+    assert HPI_START_REGEX.search("hiſtory of present illneſs") is not None
