@@ -27,7 +27,6 @@ def main(argv: list[str]) -> None:
     p.add_argument("--vocab", default="fixtures/vocab_pres_sx_v2.csv")
     p.add_argument("--out", required=True, help="output dir for nodes/edges/metrics")
     p.add_argument("--stage-root", default=None, help="snapshot checkpoint root (enables resume)")
-    p.add_argument("--buckets", type=int, default=64)
     p.add_argument(
         "--stage-buckets", default="32",
         help="snapshot-catalog upsert bucket count: an int sized for the "
@@ -97,6 +96,7 @@ def main(argv: list[str]) -> None:
         synthetic_doc_meta,
         synthetic_documents,
     )
+    from llacie_spark.incremental import maintain_graph
     from llacie_spark.io import SnapshotCatalog
     from llacie_spark.materialize import materialize_graph
     from llacie_spark.pipeline import episode_triples, fused_extract, run_pipeline
@@ -175,18 +175,18 @@ def main(argv: list[str]) -> None:
             phases["extract_upsert_s"] = round(time.time() - t, 2)
         if args.stage_maintenance:
             t = time.time()
-            split = cat.maybe_split(
-                spark, "extracted",
+            upkeep = maintain_graph(
+                spark, cat, table="extracted",
                 target_bucket_bytes=args.stage_split_target_mb << 20,
-            )
-            expired = cat.vacuum("extracted", older_than_s=600)
+            ).get("extracted", {"split": [], "expired": 0})
             phases["maintenance_s"] = round(time.time() - t, 2)
-            if split or expired:
+            if upkeep["split"] or upkeep["expired"]:
                 print(
-                    f"maintenance: split buckets {split}, expired {expired}",
+                    f"maintenance: split buckets {upkeep['split']}, expired "
+                    f"{upkeep['expired']} snapshots",
                     file=sys.stderr,
                 )
-            phases["split_buckets"] = split
+            phases["split_buckets"] = upkeep["split"]
         if args.incremental_derive:
             # derivation work ∝ the batch's episodes, not the table: the
             # affected episodes recompute from a bucket-pruned re-read of
@@ -196,7 +196,6 @@ def main(argv: list[str]) -> None:
                 clear_pending,
                 derive_batch,
                 export_graph,
-                maintain_graph,
                 read_pending,
             )
 
@@ -216,9 +215,7 @@ def main(argv: list[str]) -> None:
                 n_uncovered = pending.join(
                     meta.select("doc_id"), "doc_id", "left_anti"
                 ).count()
-                dstats = derive_batch(
-                    spark, cat, pending, meta, n_buckets=args.buckets
-                )
+                dstats = derive_batch(spark, cat, pending, meta)
                 if n_uncovered:
                     print(
                         f"WARNING: {n_uncovered} pending-derive doc ids not "
@@ -257,7 +254,7 @@ def main(argv: list[str]) -> None:
         t = time.time()
         triples = run_pipeline(docs, meta, vocab, scorer=scorer)
 
-    stats = materialize_graph(triples, args.out, n_buckets=args.buckets)
+    stats = materialize_graph(triples, args.out)
     phases["triples_materialize_s"] = round(time.time() - t, 2)
     stats["wall_s"] = round(time.time() - t0, 2)
     stats["phases"] = phases

@@ -39,7 +39,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .io import SnapshotCatalog
-from .materialize import build_edges, write_graph
+from .materialize import DEFAULT_BUCKETS, build_edges, write_graph
 from .pipeline import episode_triples
 
 EDGES = "edges"
@@ -68,7 +68,7 @@ def derive_batch(
     cat: SnapshotCatalog,
     new_doc_ids: DataFrame,
     doc_meta: DataFrame,
-    n_buckets: int = 64,
+    n_buckets: int = DEFAULT_BUCKETS,
 ) -> dict:
     """Recompute + commit the edges of one ingest batch's episodes.
 
@@ -181,21 +181,24 @@ def maintain_graph(
     compact_min_deltas: int = 4,
     vacuum_older_than_s: float = 600,
     commit_retries: int = 4,
+    table: str = EDGES,
 ) -> dict:
-    """The edges table's maintenance slot: compact accumulated MoR deltas /
-    tombstones, split overgrown buckets, expire dead snapshots — same
-    service an Iceberg table-maintenance job provides. ``commit_retries``
-    defaults on: maintenance runs beside the very writers whose deltas it
-    folds, so losing a CAS to one of them must retry, not crash the job."""
-    if cat.current_snapshot(EDGES) is None:
+    """A catalog table's maintenance slot (the edges table by default;
+    ``run_kg`` also runs it on ``extracted``): compact accumulated MoR
+    deltas / tombstones, split overgrown buckets, expire dead snapshots —
+    same service an Iceberg table-maintenance job provides.
+    ``commit_retries`` defaults on: maintenance runs beside the very writers
+    whose deltas it folds, so losing a CAS to one of them must retry, not
+    crash the job."""
+    if cat.current_snapshot(table) is None:
         return {}
     split = cat.maybe_split(
-        spark, EDGES, target_bucket_bytes=target_bucket_bytes,
+        spark, table, target_bucket_bytes=target_bucket_bytes,
         compact_min_deltas=compact_min_deltas,
         commit_retries=commit_retries,
     )
-    expired = cat.vacuum(EDGES, older_than_s=vacuum_older_than_s)
-    return {EDGES: {"split": split, "expired": len(expired)}}
+    expired = cat.vacuum(table, older_than_s=vacuum_older_than_s)
+    return {table: {"split": split, "expired": len(expired)}}
 
 
 def export_graph(spark: SparkSession, cat: SnapshotCatalog, out_dir: str) -> dict:

@@ -74,6 +74,18 @@ writer committed since this writer read the manifest, the publish raises
 pointers; the losing attempt's directory is an orphan that :meth:`vacuum`
 reclaims. ``upsert(..., commit_retries=N)`` re-runs the merge against the
 winner's snapshot automatically.
+
+Every operation runs on one leaf reader and two write primitives (a *leaf*
+is one ``b@m`` manifest entry). :meth:`SnapshotCatalog._read_leaves` reads
+delta-free leaves in one plain scan and merges only delta-laden ones; it
+serves ``read_stage``, ``read_stage_pruned``, the copy-on-write upsert's old
+rows, ``compact`` and ``split_buckets``. ``_append_generation`` adds a
+generation to the leaves its keys hash into: a merge-on-read upsert's data
+delta, or ``delete_keys``' tombstone. ``_rewrite_leaves`` writes rows as the
+new base of the leaves they replace: the copy-on-write upsert, ``compact``
+and ``split_buckets``. Both are guarded by ``_write_buckets(allowed=)``
+before any manifest edit, and ``_retrying`` re-runs an attempt that lost its
+compare-and-swap.
 """
 
 from __future__ import annotations
@@ -82,6 +94,7 @@ import json
 import math
 import os
 import time
+from functools import reduce
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
@@ -89,6 +102,8 @@ from pyspark.sql import functions as F
 
 # the one manifest format this catalog writes and reads
 MANIFEST_FORMAT = 1
+# rows per base bucket that n_buckets="auto" sizes a new table for
+TARGET_ROWS_PER_BUCKET = 1_000_000
 
 
 class CommitConflict(RuntimeError):
@@ -259,12 +274,18 @@ class SnapshotCatalog:
         keys: list[str],
         base: int,
         bucket_mods: dict[int, int] | None = None,
+        allowed: list[tuple[int, int]] | None = None,
     ) -> list[tuple[int, int]]:
         """Write ``df`` under ``snap-<id>/_mod=<m>/_bucket=<b>/``; return the
         (bucket, modulus) pairs written. One output file per bucket per
         snapshot (the repartition is on the assignment, so a 1000-executor
         write still produces one file per leaf bucket, not executors ×
-        buckets)."""
+        buckets).
+
+        ``allowed`` — the leaves this write may land in — is the stray-leaf
+        guard: a leaf outside it (nondeterministic keys hashed differently
+        than when the caller collected its leaves) raises before the caller
+        edits the manifest, so the previous snapshot stays committed."""
         bucket_mods = bucket_mods or {}
         path = self.root / name / f"snap-{snap_id}"
         mod, bucket = self._assignment_exprs(keys, base, bucket_mods)
@@ -290,6 +311,16 @@ class SnapshotCatalog:
                 for bdir in mdir.iterdir():
                     if bdir.is_dir() and bdir.name.startswith("_bucket="):
                         written.append((int(bdir.name.split("=", 1)[1]), m))
+        if allowed is not None:
+            allowed = set(allowed)
+            stray = [bm for bm in written if bm not in allowed]
+            if stray:
+                raise RuntimeError(
+                    f"write to {name!r} landed in leaves {sorted(stray)} "
+                    f"outside the {len(allowed)} it may touch — "
+                    "nondeterministic keys; manifest NOT updated (previous "
+                    "snapshot remains committed)"
+                )
         return sorted(written)
 
     def _entry_path(self, name: str, snap: str, entry_key: str) -> Path:
@@ -301,12 +332,6 @@ class SnapshotCatalog:
     def _entry_bucket_mod(entry_key: str) -> tuple[int, int]:
         b, m = entry_key.split("@", 1)
         return int(b), int(m)
-
-    def _bucket_paths(self, name: str, cur: dict) -> list[str]:
-        return [
-            str(self._entry_path(name, snap, k))
-            for k, snap in sorted(cur["buckets"].items())
-        ]
 
     @staticmethod
     def _entry_for(b: int, m: int) -> str:
@@ -353,30 +378,17 @@ class SnapshotCatalog:
         derivation case: an episode recomputed to zero edges must retract
         its old edges). The per-key ``max(_gen)`` window is the MoR read
         tax: one extra shuffle of the delta-laden buckets, paid at scan
-        instead of at write. ``pairs`` is the full (name, dtype) table
-        schema; tombstone rows are padded to it with typed NULLs before the
-        union."""
-        from functools import reduce
-
+        instead of at write. Every leg is read with ``pairs``, the full
+        (name, dtype) table schema, so a tombstone file's missing non-key
+        columns read as NULL — the same explicit-schema read that NULL-fills
+        columns added after a file was written."""
         from pyspark.sql.window import Window
 
-        dfs = []
-        for gen, tomb, paths in legs:
-            if not paths:
-                continue
-            if tomb:
-                key_ddl = self._schema_ddl([p for p in pairs if p[0] in keys])
-                d = spark.read.schema(key_ddl).parquet(*paths)
-                for c, t in pairs:
-                    if c not in keys:
-                        d = d.withColumn(c, F.lit(None).cast(t))
-                d = d.select(*[c for c, _t in pairs])
-            else:
-                d = spark.read.schema(self._schema_ddl(pairs)).parquet(*paths)
-            dfs.append(
-                d.withColumn("_gen", F.lit(gen)).withColumn("_dead", F.lit(tomb))
-            )
-        union = reduce(DataFrame.unionByName, dfs)
+        union = reduce(DataFrame.unionByName, [
+            spark.read.schema(self._schema_ddl(pairs)).parquet(*paths)
+            .withColumn("_gen", F.lit(gen)).withColumn("_dead", F.lit(tomb))
+            for gen, tomb, paths in legs
+        ])
         w = Window.partitionBy(*[F.col(k) for k in keys])
         return (
             union.withColumn("_maxgen", F.max("_gen").over(w))
@@ -411,57 +423,68 @@ class SnapshotCatalog:
             for gen, ((_i, tomb), paths) in enumerate(sorted(acc.items()))
         ]
 
-    @staticmethod
-    def _has_merge_work(legs: list[tuple[int, bool, list[str]]]) -> bool:
-        return any(gen > 0 for gen, _tomb, _paths in legs)
-
     def _leaf_entries(self, cur: dict) -> list[tuple[int, int]]:
         """All (bucket, modulus) leaves of a table."""
         return sorted(
             {self._entry_bucket_mod(k) for k in (*cur["buckets"], *cur["deltas"])}
         )
 
-    def _read_entries(
+    def _touched_leaves(self, cur: dict, df: DataFrame) -> list[tuple[int, int]]:
+        """The (bucket, modulus) leaves ``df``'s keys hash into: a driver-
+        side collect of a bounded, tiny aggregate (never row data) — at most
+        one pair per leaf."""
+        mod, bucket = self._assignment_exprs(
+            list(cur["bucket_key"]), cur["n_buckets"], self._bucket_mods(cur)
+        )
+        return sorted(
+            (r["b"], r["m"])
+            for r in df.select(bucket.alias("b"), mod.alias("m")).distinct().collect()
+        )
+
+    def _read_leaves(
         self,
         spark: SparkSession,
         name: str,
         cur: dict,
-        entries: list[tuple[int, int]],
+        leaves: list[tuple[int, int]],
+        columns: list[list[str]] | None = None,
     ) -> DataFrame | None:
-        """Read the given leaves, resolving MoR deltas only where present:
-        delta-free buckets stream straight from their base files; delta-
-        laden buckets pay the newest-generation-wins merge. The split keeps
-        the MoR read tax proportional to un-compacted data, not table
-        size."""
-        pure_paths, merged_entries = [], []
-        for b, m in entries:
+        """Read the given leaves (None if none holds data), resolving MoR
+        deltas only where present: delta-free leaves stream straight from
+        their base files; delta-laden leaves pay the newest-generation-wins
+        merge. The split keeps the MoR read tax proportional to un-compacted
+        data, not table size.
+
+        Always with an explicit schema — ``columns``, default the manifest's
+        — never file-sampled inference: columns added by a schema-evolving
+        upsert read as NULL from files written before the evolution
+        (Iceberg add-column semantics), and a sampled pre-evolution file
+        cannot drop a new column from the rows being read."""
+        pairs = columns or cur["columns"]
+        pure_paths, merged_leaves = [], []
+        for b, m in leaves:
             entry = self._entry_for(b, m)
-            snap = cur["buckets"].get(entry)
             if cur["deltas"].get(entry):
-                merged_entries.append((b, m))
-            elif snap is not None:
-                pure_paths.append(str(self._entry_path(name, snap, entry)))
-        if not pure_paths and not merged_entries:
-            return None
+                merged_leaves.append((b, m))
+            elif entry in cur["buckets"]:
+                pure_paths.append(
+                    str(self._entry_path(name, cur["buckets"][entry], entry))
+                )
         parts = []
         if pure_paths:
             parts.append(
-                spark.read.schema(self._schema_ddl(cur["columns"]))
-                .parquet(*pure_paths)
+                spark.read.schema(self._schema_ddl(pairs)).parquet(*pure_paths)
             )
-        if merged_entries:
+        if merged_leaves:
             parts.append(
                 self._merge_generations(
                     spark,
-                    self._leaf_groups(name, cur, merged_entries),
+                    self._leaf_groups(name, cur, merged_leaves),
                     list(cur["bucket_key"]),
-                    cur["columns"],
+                    pairs,
                 )
             )
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
+        return reduce(DataFrame.unionByName, parts) if parts else None
 
     @staticmethod
     def _check_key_dtypes(
@@ -501,7 +524,6 @@ class SnapshotCatalog:
         name: str,
         bucket_key: str | list[str],
         n_buckets: int | str = 32,
-        target_rows_per_bucket: int = 1_000_000,
     ) -> dict:
         """Materialize ``df`` as the next snapshot of ``name`` and commit.
 
@@ -514,7 +536,7 @@ class SnapshotCatalog:
         SCALE decision made at creation: pass an explicit count sized for the
         table's expected volume, or ``"auto"`` to size it from the batch
         being written (one extra count of the persisted batch; power of two
-        ≥ rows/``target_rows_per_bucket``). Outgrown buckets are split later
+        ≥ rows/:data:`TARGET_ROWS_PER_BUCKET`). Outgrown buckets are split later
         with :meth:`split_buckets` — no full rewrite ever required."""
         cur = self.current_snapshot(name)
         expected = cur["snapshot"] if cur else None
@@ -524,7 +546,7 @@ class SnapshotCatalog:
         if n_buckets == "auto":
             df = df.persist()
             persisted_here = True
-            n_buckets = self._choose_n_buckets(df.count(), target_rows_per_bucket)
+            n_buckets = self._choose_n_buckets(df.count(), TARGET_ROWS_PER_BUCKET)
         written = self._write_buckets(df, name, snap_id, keys, n_buckets)
         if persisted_here:
             df.unpersist()
@@ -557,19 +579,87 @@ class SnapshotCatalog:
         self._publish(name, snap_id, meta, expected=cur["snapshot"])
         return self.current_snapshot(name)
 
+    @staticmethod
+    def _retrying(commit_retries: int, attempt):
+        """Run ``attempt`` — one whole operation, based on a fresh manifest
+        read — and re-run it on :class:`CommitConflict` up to
+        ``commit_retries`` times (0 = raise to the caller)."""
+        for i in range(commit_retries + 1):
+            try:
+                return attempt()
+            except CommitConflict:
+                if i == commit_retries:
+                    raise
+
+    def _append_generation(
+        self, name: str, cur: dict, df: DataFrame, tombstone: bool = False,
+        **changes,
+    ) -> dict:
+        """Write primitive 1: commit ``df`` as the newest generation of the
+        leaves its keys hash into. On a live leaf (one holding a base or
+        deltas) it is appended to the delta list; a data generation on a
+        leaf's first touch becomes its base. A tombstone (``df`` holds the
+        key columns only) lands on live leaves only: keys whose leaf holds
+        nothing need none, and their written file is never referenced
+        (vacuumed as an orphan). ``changes`` are further manifest fields to
+        commit (an upsert's evolved ``columns``). Returns the new manifest
+        (``cur`` when a tombstone touches no live leaf)."""
+        touched = self._touched_leaves(cur, df)
+        live = set(self._leaf_entries(cur))
+        if tombstone and live.isdisjoint(touched):
+            return cur
+        snap_id = self._reserve_snap(name, cur["snapshot"] + 1)
+        snap = f"snap-{snap_id}"
+        written = self._write_buckets(
+            df, name, snap_id, list(cur["bucket_key"]), cur["n_buckets"],
+            self._bucket_mods(cur), allowed=touched,
+        )
+        buckets, deltas = dict(cur["buckets"]), self._delta_map(cur)
+        for bm in written:
+            entry = self._entry_for(*bm)
+            if bm in live:
+                deltas.setdefault(entry, []).append(
+                    {"snap": snap, "tombstone": True} if tombstone else snap
+                )
+            elif not tombstone:
+                buckets[entry] = snap
+        return self._commit_over(
+            name, cur, snap_id, buckets=buckets, deltas=deltas, **changes
+        )
+
+    def _rewrite_leaves(
+        self, name: str, cur: dict, rows: DataFrame | None,
+        replaced: list[tuple[int, int]],
+        allowed: list[tuple[int, int]] | None = None, **changes,
+    ) -> dict:
+        """Write primitive 2: commit ``rows`` (None = no rows) as the new
+        base of the leaves they land in, dropping the ``replaced`` leaves'
+        base and deltas — a replaced leaf the rows leave empty (every key
+        tombstoned) loses its base pointer. ``allowed``, the leaves the rows
+        may land in, defaults to ``replaced``; a split passes its children
+        and its new ``bucket_mods`` among ``changes``, the further manifest
+        fields to commit. Returns the new manifest."""
+        snap_id = self._reserve_snap(name, cur["snapshot"] + 1)
+        written = [] if rows is None else self._write_buckets(
+            rows, name, snap_id, list(cur["bucket_key"]), cur["n_buckets"],
+            self._bucket_mods({**cur, **changes}),
+            allowed=replaced if allowed is None else allowed,
+        )
+        buckets, deltas = dict(cur["buckets"]), self._delta_map(cur)
+        for bm in replaced:
+            buckets.pop(self._entry_for(*bm), None)
+            deltas.pop(self._entry_for(*bm), None)
+        for bm in written:
+            buckets[self._entry_for(*bm)] = f"snap-{snap_id}"
+        return self._commit_over(
+            name, cur, snap_id, buckets=buckets, deltas=deltas, **changes
+        )
+
     def read_stage(self, spark: SparkSession, name: str) -> DataFrame | None:
         cur = self.current_snapshot(name)
         if cur is None or not cur["buckets"]:
             return None  # absent, or committed but empty
-        if cur["deltas"]:
-            return self._read_entries(spark, name, cur, self._leaf_entries(cur))
-        # explicit manifest schema: columns added by a schema-evolving upsert
-        # are read as NULL from bucket files written before the evolution
-        # (Iceberg add-column semantics), and multi-snapshot reads never
-        # depend on which file Spark samples for inference
-        return spark.read.schema(self._schema_ddl(cur["columns"])).parquet(
-            *self._bucket_paths(name, cur)
-        )
+        return self._read_leaves(spark, name, cur, self._leaf_entries(cur))
 
     def read_stage_pruned(
         self, spark: SparkSession, name: str, keys_df: DataFrame
@@ -595,16 +685,9 @@ class SnapshotCatalog:
         self._check_key_dtypes(
             cur["columns"], keys_df, keys, name, "read_stage_pruned"
         )
-        mod, bucket = self._assignment_exprs(
-            keys, cur["n_buckets"], self._bucket_mods(cur)
+        return self._read_leaves(
+            spark, name, cur, self._touched_leaves(cur, keys_df)
         )
-        leaves = sorted(
-            (r["b"], r["m"])
-            for r in keys_df.select(
-                bucket.alias("b"), mod.alias("m")
-            ).distinct().collect()
-        )
-        return self._read_entries(spark, name, cur, leaves)
 
     def unfinished(
         self,
@@ -646,7 +729,7 @@ class SnapshotCatalog:
     @staticmethod
     def _check_schema(
         df: DataFrame, name: str, cur: dict, allow_new_columns: bool = False,
-    ) -> tuple[list[str], list[tuple[str, str]]]:
+    ) -> list[str]:
         """Enforce the table schema contract on an upsert batch: exact column
         NAME set and exact dtypes.
 
@@ -657,15 +740,12 @@ class SnapshotCatalog:
         explicit-schema read in :meth:`read_stage`). Dropping or renaming a
         column always fails — that is a rewrite, not an evolution.
 
-        Returns ``(ordered table columns incl. additions, new (name, dtype)
-        pairs)``."""
+        Returns the ordered table columns, additions last."""
         expected = [c for c, _t in cur["columns"]]
         batch_dtypes = dict(df.dtypes)
-        new_cols: list[tuple[str, str]] = []
+        new_cols: list[str] = []
         if allow_new_columns and set(df.columns) > set(expected):
-            new_cols = [
-                (c, batch_dtypes[c]) for c in df.columns if c not in expected
-            ]
+            new_cols = [c for c in df.columns if c not in expected]
         elif set(df.columns) != set(expected):
             hint = (
                 " (pass allow_new_columns=True to add the extra columns)"
@@ -690,7 +770,7 @@ class SnapshotCatalog:
                 "drifted type would write mixed-type parquet files "
                 "across bucket snapshots; cast the batch explicitly"
             )
-        return expected + [c for c, _t in new_cols], new_cols
+        return expected + new_cols
 
     def upsert(
         self,
@@ -699,7 +779,6 @@ class SnapshotCatalog:
         name: str,
         key: str | list[str],
         n_buckets: int | str = 32,
-        target_rows_per_bucket: int = 1_000_000,
         allow_new_columns: bool = False,
         commit_retries: int = 0,
         merge_on_read: bool = False,
@@ -739,15 +818,9 @@ class SnapshotCatalog:
         caller); each attempt's work is based on a fresh manifest read, so a
         successful retry loses no rows from either writer."""
         keys = [key] if isinstance(key, str) else list(key)
-        for attempt in range(commit_retries + 1):
-            try:
-                return self._upsert_once(
-                    spark, df, name, keys, n_buckets, target_rows_per_bucket,
-                    allow_new_columns, merge_on_read,
-                )
-            except CommitConflict:
-                if attempt == commit_retries:
-                    raise
+        return self._retrying(commit_retries, lambda: self._upsert_once(
+            spark, df, name, keys, n_buckets, allow_new_columns, merge_on_read,
+        ))
 
     def delete_keys(
         self, keys_df: DataFrame, name: str, commit_retries: int = 0
@@ -769,60 +842,21 @@ class SnapshotCatalog:
         drop a few keys re-creates the write amplification MoR exists to
         avoid. Reference analog: the per-note DELETE that precedes its
         re-insert (``llacie/db.py:650-665``)."""
-        for attempt in range(commit_retries + 1):
-            try:
-                return self._delete_keys_once(keys_df, name)
-            except CommitConflict:
-                if attempt == commit_retries:
-                    raise
+        return self._retrying(
+            commit_retries, lambda: self._delete_keys_once(keys_df, name)
+        )
 
     def _delete_keys_once(self, keys_df: DataFrame, name: str) -> dict:
         cur = self.current_snapshot(name)
         if cur is None:
             raise ValueError(f"delete_keys: no committed table {name!r}")
         keys = list(cur["bucket_key"])
-        base = cur["n_buckets"]
-        bucket_mods = self._bucket_mods(cur)
         self._check_key_dtypes(cur["columns"], keys_df, keys, name, "delete_keys")
         kdf = keys_df.select(*keys).distinct().persist()
         try:
-            mod, bucket = self._assignment_exprs(keys, base, bucket_mods)
-            touched = sorted(
-                (r["b"], r["m"])
-                for r in kdf.select(bucket.alias("b"), mod.alias("m"))
-                .distinct()
-                .collect()
-            )
-            deltas = self._delta_map(cur)
-            live = [
-                (b, m)
-                for b, m in touched
-                if self._entry_for(b, m) in cur["buckets"]
-                or deltas.get(self._entry_for(b, m))
-            ]
-            if not live:
-                return cur  # none of the keys' buckets hold any data
-            snap_id = self._reserve_snap(name, cur["snapshot"] + 1)
-            written = self._write_buckets(
-                kdf, name, snap_id, keys, base, bucket_mods
-            )
+            return self._append_generation(name, cur, kdf, tombstone=True)
         finally:
             kdf.unpersist()
-        stray = [bm for bm in written if bm not in touched]
-        if stray:
-            raise RuntimeError(
-                f"delete_keys wrote buckets {stray} outside the touched set "
-                f"{touched}; table {name!r} manifest NOT updated"
-            )
-        live_set = set(live)
-        for b, m in written:
-            # keys whose bucket holds nothing need no tombstone — their
-            # written file is simply never referenced (vacuumed as an orphan)
-            if (b, m) in live_set:
-                deltas.setdefault(self._entry_for(b, m), []).append(
-                    {"snap": f"snap-{snap_id}", "tombstone": True}
-                )
-        return self._commit_over(name, cur, snap_id, deltas=deltas)
 
     def _upsert_once(
         self,
@@ -831,102 +865,44 @@ class SnapshotCatalog:
         name: str,
         keys: list[str],
         n_buckets: int | str,
-        target_rows_per_bucket: int,
         allow_new_columns: bool,
-        merge_on_read: bool = False,
+        merge_on_read: bool,
     ) -> dict:
         cur = self.current_snapshot(name)
         if cur is None:
-            return self.write_stage(
-                df, name, bucket_key=keys, n_buckets=n_buckets,
-                target_rows_per_bucket=target_rows_per_bucket,
-            )
+            return self.write_stage(df, name, bucket_key=keys, n_buckets=n_buckets)
         if cur["bucket_key"] != keys:
             raise ValueError(
                 f"table {name!r} is bucketed by {cur['bucket_key']}, upsert key {keys}"
             )
-        base = cur["n_buckets"]
-        bucket_mods = self._bucket_mods(cur)
-        expected, new_cols = self._check_schema(
+        expected = self._check_schema(
             df, name, cur, allow_new_columns=allow_new_columns
         )
-        df = df.select(*expected)
-        # one evaluation of the batch feeds the touched-bucket collect AND
+        # one evaluation of the batch feeds the touched-leaf collect AND
         # the bucket write: without the persist, a nondeterministic lineage
-        # could hash keys into a bucket during the write that the touched
-        # set missed — moving that bucket's manifest pointer without
+        # could hash keys into a leaf during the write that the touched
+        # set missed — moving that leaf's manifest pointer without
         # carrying its old rows forward (silent row loss)
-        df = df.persist()
+        batch = df.select(*expected).persist()
+        # the table schema this commit publishes: old columns + additions
+        columns = [[c, t] for c, t in batch.dtypes]
         try:
-            # touched buckets: a driver-side collect of a bounded, tiny
-            # aggregate (never row data) — at most one (bucket, mod) pair
-            # per leaf bucket
-            mod, bucket = self._assignment_exprs(keys, base, bucket_mods)
-            touched = sorted(
-                (r["b"], r["m"])
-                for r in df.select(bucket.alias("b"), mod.alias("m"))
-                .distinct()
-                .collect()
-            )
             if merge_on_read:
-                # MoR: the batch IS the new generation — no old-bucket read,
+                # MoR: the batch IS the new generation — no old-leaf read,
                 # no rewrite; write cost = O(batch) regardless of fan-out
-                merged = df
-            else:
-                legs = self._leaf_groups(name, cur, touched)
-                # explicit full schema (old columns + any additions):
-                # pre-evolution files read the new columns as NULL
-                full = cur["columns"] + [[c, t] for c, t in new_cols]
-                if self._has_merge_work(legs):
-                    # touched buckets carry pending MoR deltas: the CoW
-                    # rewrite must fold them in (reading only the base would
-                    # silently drop every delta-generation row) — this also
-                    # makes the rewrite a compaction of those buckets
-                    old_touched = self._merge_generations(
-                        spark, legs, keys, full
-                    )
-                elif legs:
-                    old_touched = spark.read.schema(
-                        self._schema_ddl(full)
-                    ).parquet(*legs[0][2])
-                else:
-                    old_touched = None
-                if old_touched is not None:
-                    kept = old_touched.join(
-                        df.select(*keys).distinct(), keys, "left_anti"
-                    )
-                    merged = kept.select(*expected).unionByName(df)
-                else:
-                    merged = df
-            snap_id = self._reserve_snap(name, cur["snapshot"] + 1)
-            written = self._write_buckets(merged, name, snap_id, keys, base, bucket_mods)
+                return self._append_generation(name, cur, batch, columns=columns)
+            touched = self._touched_leaves(cur, batch)
+            # the touched leaves' live rows, pending MoR deltas folded in
+            # (reading only the base would silently drop every delta-
+            # generation row), so the rewrite also compacts those leaves;
+            # read with the evolved schema, pre-evolution files give NULLs
+            old = self._read_leaves(spark, name, cur, touched, columns=columns)
+            merged = batch if old is None else old.join(
+                batch.select(*keys).distinct(), keys, "left_anti"
+            ).unionByName(batch)
+            return self._rewrite_leaves(name, cur, merged, touched, columns=columns)
         finally:
-            df.unpersist()
-        unexpected = [bm for bm in written if bm not in touched]
-        if unexpected:
-            raise RuntimeError(
-                f"upsert wrote buckets {unexpected} outside the touched set "
-                f"{touched} — nondeterministic batch keys; table {name!r} "
-                "manifest NOT updated (previous snapshot remains committed)"
-            )
-        buckets = dict(cur["buckets"])
-        deltas = self._delta_map(cur)
-        for b, m in written:
-            entry = self._entry_for(b, m)
-            if merge_on_read and entry in buckets:
-                deltas.setdefault(entry, []).append(f"snap-{snap_id}")
-            else:
-                # CoW rewrite (folds this bucket's deltas), or a MoR first
-                # touch: either way the new files are the bucket's base
-                buckets[entry] = f"snap-{snap_id}"
-                deltas.pop(entry, None)
-        return self._commit_over(
-            name, cur, snap_id,
-            columns=[[c, t] for c, t in merged.select(*expected).dtypes],
-            buckets=buckets,
-            deltas=deltas,
-        )
-
+            batch.unpersist()
     def split_buckets(
         self,
         spark: SparkSession,
@@ -951,57 +927,25 @@ class SnapshotCatalog:
         if cur is None:
             raise ValueError(f"no committed table {name!r}")
         base = cur["n_buckets"]
-        keys = cur["bucket_key"]
         bucket_mods = self._bucket_mods(cur)
         base_ids = sorted(set(int(b) for b in base_ids))
         bad = [b for b in base_ids if not (0 <= b < base)]
         if bad:
             raise ValueError(f"base bucket ids out of range [0,{base}): {bad}")
-        buckets = dict(cur["buckets"])
-        deltas = self._delta_map(cur)
         new_mods = dict(bucket_mods)
-        leaves: list[tuple[int, int]] = []
+        replaced: list[tuple[int, int]] = []
+        children: list[tuple[int, int]] = []
         for b in base_ids:
             m = bucket_mods.get(b, base)
             new_mods[b] = m * 2
-            # leaf buckets under base bucket b at modulus m; a split is also
-            # a compaction of its leaves: the merged (base + deltas) rows fan
-            # into the children as pure base
-            for c in range(b, m, base):
-                entry = self._entry_for(c, m)
-                if entry in buckets or deltas.get(entry):
-                    leaves.append((c, m))
-                buckets.pop(entry, None)
-                deltas.pop(entry, None)
-        snap_id = self._reserve_snap(name, cur["snapshot"] + 1)
-        written: list[tuple[int, int]] = []
-        if leaves:
-            # manifest schema, not file-sampled inference: after additive
-            # schema evolution the leaf files disagree on columns, and a
-            # sampled pre-evolution file would silently drop the new
-            # column from every post-evolution row being migrated
-            pairs = cur["columns"]
-            legs = self._leaf_groups(name, cur, leaves)
-            if self._has_merge_work(legs):
-                rows = self._merge_generations(spark, legs, keys, pairs)
-            else:
-                rows = spark.read.schema(self._schema_ddl(pairs)).parquet(
-                    *legs[0][2]
-                )
-            written = self._write_buckets(rows, name, snap_id, keys, base, new_mods)
-            stray = [bm for bm in written if bm[0] % base not in base_ids]
-            if stray:
-                raise RuntimeError(
-                    f"split rewrote buckets {stray} outside the split set "
-                    f"{base_ids}; manifest NOT updated"
-                )
-        for b, m in written:
-            buckets[self._entry_for(b, m)] = f"snap-{snap_id}"
-        return self._commit_over(
-            name, cur, snap_id,
+            replaced += [(c, m) for c in range(b, m, base)]
+            children += [(c, m * 2) for c in range(b, m * 2, base)]
+        # a split is also a compaction of its leaves: the merged (base +
+        # deltas) rows fan into the children as pure base
+        return self._rewrite_leaves(
+            name, cur, self._read_leaves(spark, name, cur, replaced), replaced,
+            allowed=children,
             bucket_mods={str(k): v for k, v in new_mods.items()},
-            buckets=buckets,
-            deltas=deltas,
         )
 
     def compact(
@@ -1031,12 +975,9 @@ class SnapshotCatalog:
         re-reads the manifest and folds whatever generations now exist —
         the loser's work is wasted but nothing is lost (Iceberg's
         ``rewrite_data_files`` retries the same way)."""
-        for attempt in range(commit_retries + 1):
-            try:
-                return self._compact_once(spark, name, min_deltas)
-            except CommitConflict:
-                if attempt == commit_retries:
-                    raise
+        return self._retrying(
+            commit_retries, lambda: self._compact_once(spark, name, min_deltas)
+        )
 
     def _compact_once(
         self, spark: SparkSession, name: str, min_deltas: int
@@ -1044,35 +985,12 @@ class SnapshotCatalog:
         cur = self.current_snapshot(name)
         if cur is None:
             return []
-        deltas = self._delta_map(cur)
-        targets = sorted(k for k, v in deltas.items() if len(v) >= min_deltas)
-        if not targets:
-            return []
-        base = cur["n_buckets"]
-        keys = list(cur["bucket_key"])
-        entries = [self._entry_bucket_mod(k) for k in targets]
-        merged = self._merge_generations(
-            spark, self._leaf_groups(name, cur, entries), keys, cur["columns"]
-        )
-        snap_id = self._reserve_snap(name, cur["snapshot"] + 1)
-        written = self._write_buckets(
-            merged, name, snap_id, keys, base, self._bucket_mods(cur)
-        )
-        stray = [bm for bm in written if self._entry_for(*bm) not in targets]
-        if stray:
-            raise RuntimeError(
-                f"compact wrote buckets {stray} outside the target set "
-                f"{targets}; table {name!r} manifest NOT updated"
+        targets = sorted(k for k, v in cur["deltas"].items() if len(v) >= min_deltas)
+        if targets:
+            leaves = [self._entry_bucket_mod(k) for k in targets]
+            self._rewrite_leaves(
+                name, cur, self._read_leaves(spark, name, cur, leaves), leaves
             )
-        buckets = dict(cur["buckets"])
-        for entry in targets:
-            # a target the merge left empty (every key tombstoned) loses its
-            # base pointer; every target's consumed deltas go
-            buckets.pop(entry, None)
-            deltas.pop(entry, None)
-        for b, m in written:
-            buckets[self._entry_for(b, m)] = f"snap-{snap_id}"
-        self._commit_over(name, cur, snap_id, buckets=buckets, deltas=deltas)
         return targets
 
     def maybe_split(

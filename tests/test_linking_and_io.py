@@ -438,18 +438,19 @@ def test_split_halves_the_next_hot_upsert(spark, tmp_path):
 
 
 def test_write_stage_auto_buckets_and_sizes(spark, tmp_path):
-    """n_buckets='auto' sizes the layout from the batch (power of two,
-    floor 8); bucket_sizes reports per-bucket bytes for split decisions."""
+    """n_buckets='auto' sizes the layout from the batch (power of two of
+    rows/TARGET_ROWS_PER_BUCKET, floor 8); bucket_sizes reports per-bucket
+    bytes for split decisions."""
     from llacie_spark.io import SnapshotCatalog
 
+    assert SnapshotCatalog._choose_n_buckets(5000, 500) == 16  # next pow2
     cat = SnapshotCatalog(str(tmp_path))
     df = spark.range(0, 5000).withColumn("v", F.col("id"))
-    cat.write_stage(df, "t", bucket_key="id", n_buckets="auto",
-                    target_rows_per_bucket=500)
+    cat.write_stage(df, "t", bucket_key="id", n_buckets="auto")
     snap = cat.current_snapshot("t")
-    assert snap["n_buckets"] == 16  # 5000/500 -> next pow2 = 16
+    assert snap["n_buckets"] == 8  # 5000 rows is far under one bucket's target
     sizes = cat.bucket_sizes("t")
-    assert len(sizes) == 16 and all(v > 0 for v in sizes.values())
+    assert len(sizes) == 8 and all(v > 0 for v in sizes.values())
     assert cat.read_stage(spark, "t").count() == 5000
 
 
