@@ -102,9 +102,22 @@ def _sections(texts) -> list[str | None]:
 def _score_and_link(sections: list, vocab_dicts, scorer=None) -> tuple[list, list]:
     """The per-batch score-and-link body: sections -> (mentions, matches),
     one entry each per section; a null section gets ``[]`` for both. A
-    custom (LLM) scorer may be injected."""
-    local_vocab = Vocab(ngram_dicts=vocab_dicts)
-    s = scorer or GazetteerScorer(canonicalize=local_vocab.find_terms)
+    custom (LLM) scorer may be injected.
+
+    ``find_terms`` is memoized per mention line for this batch only: the
+    gazetteer's ``canonicalize`` calls and the ``matches`` of every section
+    share it (a batch repeats the same short mentions; nothing outlives the
+    batch, so no content cache spans the corpus)."""
+    find_terms = Vocab(ngram_dicts=vocab_dicts).find_terms
+    memo: dict[str, dict[str, int]] = {}
+
+    def link(line: str) -> dict[str, int]:
+        found = memo.get(line)
+        if found is None:
+            found = memo[line] = find_terms(line)
+        return found
+
+    s = scorer or GazetteerScorer(canonicalize=link)
     # ONE score_batch call per Arrow batch — the batched-scorer contract
     # (U1; reference scores whole batches per GPU worker). Calling
     # score_batch([sec]) per row cost a SubprocessScorer one process
@@ -126,10 +139,16 @@ def _score_and_link(sections: list, vocab_dicts, scorer=None) -> tuple[list, lis
     mentions = [[] for _ in sections]
     for i, ms in zip(scored_idx, scored):
         mentions[i] = ms
-    matches = [
-        list(local_vocab.find_terms("\n".join(ms)).items()) if ms else []
-        for ms in mentions
-    ]
+    matches = []
+    for ms in mentions:
+        # find_terms over the newline-joined list: lines last to first, so
+        # the earliest line number wins and dict order is first sight
+        found: dict[str, int] = {}
+        lines = "\n".join(ms).split("\n")
+        for line_no in range(len(lines), 0, -1):
+            for term in link(lines[line_no - 1]):
+                found[term] = line_no
+        matches.append(list(found.items()))
     return mentions, matches
 
 

@@ -30,9 +30,12 @@ Both consume/produce plain Python batches so the Spark integration is a thin
 
 from __future__ import annotations
 
+import functools
 import re
 from collections.abc import Callable, Sequence
 from types import SimpleNamespace
+
+from .triggers import DEAD, Pruner, Triggers, clauses
 
 MAX_MENTIONS = 10  # reference JSON schema: maxItems 10 (llama3_8b.py:32-45)
 
@@ -91,8 +94,8 @@ _NONCLINICAL_ITEM = re.compile(
 
 # A denial cue negates everything to the end of the sentence, except clauses
 # re-opened by an adversative conjunction. The alternatives are factored by
-# prefix (same order, so the same match) because the sentence gate scans
-# for this cue at every position of every sentence.
+# prefix (same order, so the same match), since this cue is searched at
+# every position of most sentences.
 _DENIAL_CUE = re.compile(
     r"\b(?:den(?:ies|ied|ying|y)|neg(?:ative)? for"
     r"|no(?:r| evidence of|t (?:other|new|further))?|without)\b",
@@ -228,8 +231,6 @@ _PARENTHETICAL = re.compile(r"\([^)]*\)")
 
 _URINARY_CONTEXT = re.compile(r"\b(urin|void|dysuria|bladder|urethral|uti)\w*", re.I)
 
-# precompiled _collect helpers (string-pattern re.* calls paid a cache
-# lookup per call — ~190k lookups per 2000 docs in the profile)
 _EXPOSURE_CUT = re.compile(r"\b(?:exposure|exposed|neighbor|roommate)\b.*$", re.I)
 _BECAME_PAINFUL = re.compile(r"\bbecame painful\b", re.I)
 _URGENCY = re.compile(r"\burgency\b", re.I)
@@ -252,26 +253,12 @@ _SITE_CLASS_RX = {
     cls: re.compile(rf"(?:{pat})\Z", re.I) for cls, pat in _SITE_CLASS.items()
 }
 
-_PITTING = re.compile(r"\bpitting edema\b", re.I)
-# precompiled (site-class, symptom-class) adjacency rewrites — built once;
-# rebuilding these f-string patterns per call dominated the scorer profile.
-# Grouped by symptom class with one guard regex each (r07): a rule whose
-# symptom words are absent from the segment cannot match, so skipping its
-# whole group is an exact no-op — the old flat loop ran all 18 subs whenever
-# ANY symptom word was present (~19 regex scans per _collect in the profile).
-_ADJACENT_GROUPS = [
-    (
-        re.compile(rf"\b(?:{syms})\b", re.I),
-        [
-            (re.compile(rf"\b(?:{pat})\b\s+(?:{syms})\b", re.I), f"{cls} {repl}")
-            for cls, pat in _SITE_CLASS.items()
-        ],
-    )
+# adjacency rewrites, in order, the pitting one first; built once, not per call
+_ADJACENT = [(re.compile(r"\bpitting edema\b", re.I), "edema")] + [
+    (re.compile(rf"\b(?:{pat})\b\s+(?:{syms})\b", re.I), f"{cls} {repl}")
     for syms, repl in (("edema|swelling", "swelling"), ("pain|ache", "pain"), ("ulcer|wound", "wound"))
+    for cls, pat in _SITE_CLASS.items()
 ]
-# every adjacency rewrite requires one of these symptom words; segments
-# without any (the common case) skip the whole rule loop
-_ADJACENT_GUARD = re.compile(r"\b(?:edema|swelling|pain|ache|ulcer|wound)\b", re.I)
 
 _SPECIALS = [
     (
@@ -306,53 +293,6 @@ _SPECIALS = [
     ),
     (re.compile(r"\bdifficulty (?:walking|ambulating)\b", re.I), "difficulty walking"),
 ]
-# one boolean scan gates the per-pattern loop: the vast majority of
-# segments match no special, and N searches per segment dominated the
-# scorer profile (re.search was ~25% of per-doc time)
-_SPECIALS_ANY = re.compile("|".join(f"(?:{p.pattern})" for p, _ in _SPECIALS), re.I)
-
-# Union gate over every pattern through which a sentence can produce a
-# mention (r07): _add is reachable only via _RECENT_WOUND, _infer_global
-# (TEMP/RR/NIV), the care path's REASON/WORSENED_TAIL/NOTED (NOTED's verbs
-# are a subset of _CUE), or the affirm path's HR/SAT/O2NEED/REASON/CUE. A
-# sentence with no gate match can therefore add nothing and mutate no
-# state, so skipping it is exact as long as the gate matches the RAW
-# sentence whenever a component matches the text it sees. Two rewrites
-# sit between them:
-# - _SPECULATION.sub and _strip_denials (pieces joined by a space) delete
-#   spans, which can shrink a bounded window until it fits: "presents for
-#   the third time this month denies fever but with leg swelling" matches
-#   _PRESENTS_WITH only once the denial is stripped. So the gate uses
-#   unbounded variants of the windowed patterns (presents-with,
-#   O2-need, the sat reading), which match wherever the originals match
-#   any shortened text.
-# - _strip_denials also splices the text before a denial cue onto the
-#   text after an adversative, which can join the two halves of even a
-#   whitespace-gapped pattern ("Tmax no thermometer but 102"). A sentence
-#   with a denial cue before an adversative therefore always passes.
-# A deletion cannot create a trigger token otherwise: the deleted spans
-# start at a word boundary, and _SPECULATION's ends at [,.;] or the end.
-# Measured: 55% of corpus sentences skip, each saving ~10 pattern scans.
-_SENTENCE_GATE = re.compile(
-    "|".join(
-        f"(?:{p})"
-        for p in (
-            _RECENT_WOUND.pattern,
-            _VITALS_TEMP.pattern,
-            _VITALS_RR.pattern,
-            _NIV.pattern,
-            _VITALS_HR.pattern,
-            _VITALS_SAT.pattern.replace("[^0-9]{0,4}", "[^0-9]*"),
-            _O2_NEED.pattern.replace(".{0,40}", ".*"),
-            _REASON.pattern,
-            _CUE.pattern.replace(_PRESENTS_WITH, r"present(?:s|ed|ing)?.*?\s+w(?:ith|/)"),
-            _WORSENED_TAIL.pattern,
-            rf"{_DENIAL_CUE.pattern}.*?{_ADVERSATIVE.pattern}",
-        )
-    ),
-    re.I,
-)
-
 
 # --------------------------------------------------------------------------
 # case folding: the _EXACT and _FOLDED pattern tables
@@ -377,20 +317,75 @@ _SENTENCE_GATE = re.compile(
 _FOLD_HAZARDS = re.compile("[\u0130\u0131\u017f\u212a\u03a3]")
 
 
-def _fold(obj):
-    """The folded twin of a pattern, or of a list/tuple/dict holding some."""
-    if isinstance(obj, re.Pattern) and obj.flags & re.I:
-        src = re.sub(r"(\\.)|.", lambda m: m[1] or m[0].lower(), obj.pattern, flags=re.S)
-        return re.compile(src, obj.flags & ~re.I)
+def _map(fn, obj):
+    """``obj`` with ``fn`` applied to each pattern it holds, in lists, tuples and dicts."""
+    if isinstance(obj, re.Pattern):
+        return fn(obj)
     if isinstance(obj, dict):
-        return {k: _fold(v) for k, v in obj.items()}
+        return {k: _map(fn, v) for k, v in obj.items()}
     if isinstance(obj, (list, tuple)):
-        return type(obj)(map(_fold, obj))
+        return type(obj)(_map(fn, v) for v in obj)
     return obj
 
 
+def _fold(rx: re.Pattern) -> re.Pattern:
+    """The folded twin of a pattern."""
+    if not rx.flags & re.I:
+        return rx
+    src = re.sub(r"(\\.)|.", lambda m: m[1] or m[0].lower(), rx.pattern, flags=re.S)
+    return re.compile(src, rx.flags & ~re.I)
+
+
 _EXACT = SimpleNamespace(**{k[1:]: v for k, v in globals().items() if k[0] == "_" and k[1:].isupper()})
-_FOLDED = SimpleNamespace(**{k: _fold(v) for k, v in vars(_EXACT).items()})
+_FOLDED = SimpleNamespace(**_map(_fold, vars(_EXACT)))
+
+
+# --------------------------------------------------------------------------
+# the rule engine: a pattern runs only where its trigger's words occur
+# --------------------------------------------------------------------------
+# Each pattern of _FOLDED gets a trigger at import, derived from its parse
+# tree (triggers.clauses). score_one runs each sentence on the folded path
+# on _live_table: _FOLDED with each pattern DEAD that has a clause none of
+# the sentence's words meets; with no mention-producing pattern live, the
+# sentence is skipped. That is exact while no string the rules see, cut or
+# rewritten from the sentence, holds a word the check did not:
+# - the cuts (denial scopes, cue segments, speculation and exposure spans,
+#   items) start and end at word boundaries, so they make no new words;
+# - the words a live rewrite can insert join the check (_INSERTS). A
+#   special writes only a space: its name goes to the mentions;
+# - a cut can end inside a word in three places. A _REASON capture at its
+#   80-character cap and a _SPECIALS match add the words they leave
+#   (_widen); a _SYMPTOM_OF_SITE match ends before an underscore, so a
+#   sentence holding one runs every pattern.
+_TRIGGERS = Triggers()
+_NEED: dict[re.Pattern, int] = {}  # pattern -> bits of its clauses (0: it always runs)
+_map(lambda rx: _NEED.setdefault(rx, _TRIGGERS.need(clauses(rx))), vars(_FOLDED))
+_PRUNE = Pruner(_FOLDED, _NEED)
+# Each rewrite that inserts words: the clauses it needs, the text it writes
+# (_reorder_sites: a site class, or a symptom word's mapped form).
+_INSERTS = [
+    *((_TRIGGERS.need([frozenset(a.split()[-1] for a in pat.split("|"))]), cls) for cls, pat in _SITE_CLASS.items()),
+    *((_TRIGGERS.need([frozenset([k])]), v) for k, v in _SYMPTOM_WORD_MAP.items()),
+]
+_INSERTS = [(_NEED[_FOLDED.SYMPTOM_OF_SITE] | need, _TRIGGERS.mask(text)) for need, text in _INSERTS] + [
+    (_NEED[rx], _TRIGGERS.mask(text)) for rx, text in _FOLDED.ADJACENT]
+_PRODUCING = [_NEED[getattr(_FOLDED, name)] for name in (  # the mention-producing patterns
+    "RECENT_WOUND", "VITALS_TEMP", "VITALS_RR", "NIV", "REASON", "WORSENED_TAIL", "NOTED_CUE",
+    "VITALS_HR", "VITALS_SAT", "O2_NEED", "CUE")]
+_EVERY_PATTERN_LIVE = False  # True: every sentence runs the whole table
+
+
+@functools.lru_cache(maxsize=4096)
+def _live_table(mask: int) -> SimpleNamespace | None:
+    """_FOLDED with the patterns whose clauses ``mask`` (closed over the words
+    live rewrites insert) leaves unmet dead; None if none that produce is."""
+    grown = None
+    while grown != mask:
+        grown = mask
+        for need, inserted in _INSERTS:
+            if not need & ~mask:
+                mask |= inserted
+    return None if all(need & ~mask for need in _PRODUCING) else _PRUNE(mask)
 
 
 def normalize_text(text: str) -> str:
@@ -467,14 +462,9 @@ def _reorder_sites(p: SimpleNamespace, text: str) -> str:
 def _normalize_adjacent_sites(p: SimpleNamespace, text: str) -> str:
     """Map adjacent site+symptom pairs: "LE pitting edema" -> "leg swelling",
     "plantar ulcer" -> "foot wound"."""
-    if not p.ADJACENT_GUARD.search(text):
-        return text
-    t = p.PITTING.sub("edema", text)
-    for guard, rules in p.ADJACENT_GROUPS:
-        if guard.search(t):
-            for pat, repl in rules:
-                t = pat.sub(repl, t)
-    return t
+    for pat, repl in p.ADJACENT:
+        text = pat.sub(repl, text)
+    return text
 
 
 class GazetteerScorer:
@@ -511,7 +501,7 @@ class GazetteerScorer:
         fold = not _FOLD_HAZARDS.search(text) and all(
             low.count(w) == text.count(w) for w in _SPLIT_WORDS
         )
-        p = self._p = _FOLDED if fold else _EXACT  # see _FOLDED
+        self._p = _FOLDED if fold else _EXACT  # see _FOLDED; per sentence, see _live_table
         mentions: list[str] = []
         self._covered: set[str] = set()
         self._site_key: str | None = None  # per-doc _sentence_site memo
@@ -522,8 +512,10 @@ class GazetteerScorer:
             sentence = raw_sentence.strip()
             if not sentence:
                 continue
-            if not p.SENTENCE_GATE.search(sentence):
-                continue  # cannot produce a mention — see _SENTENCE_GATE
+            self._mask = -1 if not fold or _EVERY_PATTERN_LIVE or "_" in sentence else _TRIGGERS.mask(sentence)
+            p = self._p = _live_table(self._mask) if fold else _EXACT
+            if p is None:
+                continue  # no pattern that produces a mention is live
             for m in p.RECENT_WOUND.finditer(sentence):
                 self._collect(m.group(1), sentence, mentions)
             sentence = _strip_denials(p, sentence)
@@ -537,8 +529,7 @@ class GazetteerScorer:
             if care:
                 # From care/clinician sentences extract only: cited reasons,
                 # post-treatment progressions, and explicitly noted findings.
-                for m in p.REASON.finditer(sentence):
-                    self._collect(m.group(1), sentence, mentions)
+                self._collect_reasons(sentence, mentions)
                 m = p.WORSENED_TAIL.search(sentence)
                 if m:
                     self._collect(m.group(1), sentence, mentions)
@@ -548,16 +539,26 @@ class GazetteerScorer:
 
             sentence_affirm = p.SPECULATION.sub(" ", sentence)
             self._infer_reported(sentence_affirm, mentions)
-            for m in p.REASON.finditer(sentence_affirm):
-                self._collect(m.group(1), sentence_affirm, mentions)
+            self._collect_reasons(sentence_affirm, mentions)
             for m in p.CUE.finditer(sentence_affirm):
-                if m.group(0).strip().lower() == "p/w" and p.PRIOR_PW.search(
-                    sentence_affirm[: m.start()]
-                ):
+                if m.group(0).strip().lower() == "p/w" and p.PRIOR_PW.search(sentence_affirm[: m.start()]):
                     continue
                 self._collect(self._cue_segment(sentence_affirm, m.end()), sentence_affirm, mentions)
 
         return mentions if self.canonicalize is not None else mentions[:MAX_MENTIONS]
+
+    def _collect_reasons(self, sentence: str, mentions: list[str]) -> None:
+        for m in self._p.REASON.finditer(sentence):
+            if sentence[m.end() - 1 : m.end() + 1].isalnum():  # its cap cut a word
+                self._widen(m.group(1))
+            self._collect(m.group(1), sentence, mentions)
+
+    def _widen(self, text: str) -> SimpleNamespace:
+        """Let the words of ``text``, cut inside a word, trigger too; returns the live table."""
+        if ~self._mask:
+            self._mask |= _TRIGGERS.mask(text)
+            self._p = _live_table(self._mask)
+        return self._p
 
     def _cue_segment(self, sentence: str, start: int) -> str:
         seg = sentence[start:]
@@ -603,10 +604,8 @@ class GazetteerScorer:
         segment = p.SPECULATION.sub(" ", segment)
         # exposures are never presenting symptoms ("neighbor with bad cold")
         segment = p.EXPOSURE_CUT.sub("", segment)
-        # lazy, one-entry-memoized site: most segments never branch on the
-        # sentence site (r07 profile: _sentence_site was ~7% while only the
-        # rare BECAME_PAINFUL/BLACKENING/site-symptom branches consume it),
-        # so the _ANY_SITE scan runs only when a consumer actually asks
+        # the sentence's site, memoized and looked up only where a branch
+        # below asks: most segments never do, and _ANY_SITE scans are costly
         def site_of():
             if sentence != self._site_key:
                 self._site_key = sentence
@@ -616,11 +615,12 @@ class GazetteerScorer:
         if p.BECAME_PAINFUL.search(segment) and site_of() in ("leg", "arm"):
             segment = p.BECAME_PAINFUL.sub(" ", segment)
             self._add(mentions, f"{site_of()} pain")
-        if p.SPECIALS_ANY.search(segment):
-            for pat, repl in p.SPECIALS:
-                if pat.search(segment):
-                    segment = pat.sub(" ", segment)
-                    self._add(mentions, repl)
+        for k in range(len(_SPECIALS)):
+            pat, repl = p.SPECIALS[k]
+            if pat.search(segment):
+                segment = pat.sub(" ", segment)
+                p = self._widen(segment)  # a match can end inside a word
+                self._add(mentions, repl)
         if p.URGENCY.search(segment) and p.URINARY_CONTEXT.search(sentence):
             segment = p.URGENCY.sub(" ", segment)
             self._add(mentions, "urinary urgency")

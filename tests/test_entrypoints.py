@@ -164,3 +164,28 @@ def test_headline_report_is_written_where_git_ignores_it():
         ["git", "check-ignore", "-q", str(path.relative_to(REPO))], cwd=REPO
     )
     assert ignored.returncode == 0, f"{path} is not git-ignored"
+
+
+# a path ending in .py, then ":<line>"; not inside a longer path or word
+_LINE_CITATION = re.compile(r"(?<![\w/.-])((?:[\w.-]+/)*[\w.-]+\.py):\d+")
+
+
+def line_citations(text: str, repo_py: set[str]) -> list[str]:
+    """The citations of one of ``repo_py``'s files by line number in ``text``;
+    a citation of the reference (``llacie/...``) is not one."""
+    return [
+        m[0] for m in _LINE_CITATION.finditer(text)
+        if not m[1].startswith("llacie/") and m[1].rsplit("/", 1)[-1] in repo_py
+    ]
+
+
+def test_docs_cite_repo_python_by_symbol():
+    """README.md, COVERAGE.md and docs/*.md cite this repo's Python files by
+    symbol (``scorer.GazetteerScorer``), not by line: a line number goes
+    stale with the next edit above it."""
+    repo_py = {p.name for p in REPO.rglob("*.py") if ".git" not in p.parts}
+    assert line_citations("see `scorer.py:311` and llacie/vocab.py:86-121", repo_py) == ["scorer.py:311"]
+    assert line_citations("`materialize.py:4-15`, the reference's llacie/db.py:237", repo_py) == ["materialize.py:4"]
+    docs = [REPO / "README.md", REPO / "COVERAGE.md", *sorted((REPO / "docs").glob("*.md"))]
+    found = {d.name: line_citations(d.read_text(), repo_py) for d in docs}
+    assert not any(found.values()), {k: v for k, v in found.items() if v}

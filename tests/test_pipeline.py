@@ -273,3 +273,36 @@ def test_run_pipeline_scores_only_each_episodes_winner(spark, docs, vocab):
     assert winners == 20
     assert sections.value == winners
     assert 1 <= calls.value <= spark.sparkContext.defaultParallelism
+
+
+def test_score_and_link_matches_equal_find_terms(vocab, corpus_notes):
+    """Spark-free: ``_score_and_link`` memoizes ``find_terms`` per mention
+    line for the batch, and its ``matches`` stay list-equal, order included,
+    to ``find_terms`` over each newline-joined mention list."""
+    from llacie_spark.operators.sections import clean_note_text, extract_short_hpi
+    from llacie_spark.pipeline import _score_and_link
+
+    def want(mentions):
+        return [list(vocab.find_terms("\n".join(ms)).items()) for ms in mentions]
+
+    sections = [extract_short_hpi(clean_note_text(n)) for n in corpus_notes] + [None]
+    mentions, matches = _score_and_link(sections, vocab.ngram_dicts)
+    assert matches == want(mentions) and mentions[-1] == matches[-1] == []
+    assert sum(map(len, matches)) > 300
+
+    class Stub:  # an injected scorer's raw mention lists
+        lists = [
+            ["fever\nchills", "cough"],  # a mention with an embedded newline
+            ["!!!", "leg swelling", "--"],  # symbol-only lines
+            ["cough", "nausea", "cough"],  # one term on two lines
+            [],
+            ["chills", "fever\n\nfever"],
+        ]
+
+        def score_batch(self, texts):
+            return self.lists[: len(texts)]
+
+    mentions, matches = _score_and_link(["a", "b", None, "c", "d", "e"], vocab.ngram_dicts, Stub())
+    assert mentions == Stub.lists[:2] + [[]] + Stub.lists[2:]
+    assert matches == want(mentions)
+    assert matches[0] == [("cough", 3), ("chills", 2), ("fever", 1)] and matches[3] == [("cough", 1), ("nausea", 2)]

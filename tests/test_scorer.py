@@ -163,23 +163,29 @@ def test_cached_gazetteer_registered(vocab):
     assert s.score_batch(["complains of nausea."]) == [["nausea"]]
 
 
-def _gate_off(monkeypatch, s, texts, gate=re.compile("")):
-    """Score ``texts`` with the sentence gate disabled (every sentence runs
-    the full rule set) in both pattern tables, the folded one foldable
-    sections run against and the exact one the others run against."""
+def _gate_off(monkeypatch, s, texts):
+    """Score ``texts`` with the rule engine's switch on: every pattern is
+    live for every sentence, and no sentence is skipped. (The exact path,
+    which sections with a fold hazard take, runs every pattern anyway.)"""
     with monkeypatch.context() as m:
-        for table in (scorer_mod._FOLDED, scorer_mod._EXACT):
-            m.setattr(table, "SENTENCE_GATE", gate)
+        m.setattr(scorer_mod, "_EVERY_PATTERN_LIVE", True)
         return s.score_batch(texts)
 
 
 def test_gate_patch_reaches_the_table_that_runs(vocab, monkeypatch):
-    """A gate that passes nothing silences both paths, so ``_gate_off``
-    really turns the gate off wherever a section is scored."""
+    """The switch ``_gate_off`` sets reaches the table a sentence runs on:
+    off, a foldable sentence runs on a table with dead patterns; on, on the
+    whole folded table. A section on the exact path runs the whole exact
+    table either way."""
     s = make_scorer(vocab)
     texts = ["He reports fever and chills.", "He reports fever And chills."]
-    assert all(s.score_batch(texts))
-    assert _gate_off(monkeypatch, s, texts, gate=re.compile("(?!)")) == [[], []]
+    assert s.score_one(texts[0]) and s._p is not scorer_mod._FOLDED
+    assert scorer_mod.DEAD in vars(s._p).values()
+    with monkeypatch.context() as m:
+        m.setattr(scorer_mod, "_EVERY_PATTERN_LIVE", True)
+        assert s.score_one(texts[0]) and s._p is scorer_mod._FOLDED
+        assert s.score_one(texts[1]) and s._p is scorer_mod._EXACT
+    assert _gate_off(monkeypatch, s, texts) == s.score_batch(texts)
 
 
 def test_golden_mentions(vocab):
