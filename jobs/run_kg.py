@@ -5,10 +5,15 @@ Usage (local or cluster — only master/conf differ):
     zip -r llacie_spark.zip llacie_spark
     spark-submit --master <master> --py-files llacie_spark.zip \\
         jobs/run_kg.py --docs 100000 --out /path/to/graph \\
-        [--corpus fixtures/admission-100.txt] [--stage-root /path/chkpts]
+        [--corpus fixtures/admission-100.txt] \\
+        [--stage-root /path/chkpts [--no-export]]
 
-Stages run checkpointed through the snapshot catalog, so re-submitting after
-a failure resumes from the last committed stage (anti-join work discovery).
+Without ``--stage-root``: ``run_pipeline`` into ``materialize_graph``. With
+it, each run is one batch: log the undone doc ids as pending, upsert
+``fused_extract`` into ``extracted``, ``derive_pending`` into the catalog
+``edges`` table, then ``export_graph`` unless ``--no-export``; a re-submit
+resumes from the last commit. One JSON report: the written graph's counters,
+the staged derivation's under ``derive``, ``wall_s`` and ``phases``.
 """
 
 from __future__ import annotations
@@ -52,19 +57,9 @@ def main(argv: list[str]) -> None:
         "(staleness redo after a strategy upgrade; needs --stage-root)",
     )
     p.add_argument(
-        "--incremental-derive", action="store_true",
-        help="maintain the graph as the catalog table `edges`, updated per "
-        "batch (episode-scoped triple recompute + merge-on-read edge upsert "
-        "+ tombstone retraction) instead of re-deriving the full graph each "
-        "run; needs --stage-root. --out then renders a full export (nodes "
-        "and metrics derived from the edges) after the batch commit (pass "
-        "--no-export to skip it on intermediate batches)",
-    )
-    p.add_argument(
         "--no-export", action="store_true",
-        help="with --incremental-derive: skip the full parquet export "
-        "(the catalog table `edges` is the product; export on the final "
-        "batch)",
+        help="with --stage-root: skip the full parquet export (the catalog "
+        "table `edges` is the product; export on the final batch)",
     )
     p.add_argument(
         "--stage-merge-on-read", action="store_true",
@@ -74,18 +69,15 @@ def main(argv: list[str]) -> None:
     )
     args = p.parse_args(argv)
     # a flag whose prerequisite is missing would otherwise be ignored: a
-    # "redo" run without a catalog is a fresh full build reported as success,
-    # and --incremental-derive without one never creates the catalog edges
-    # table a later --stage-root run expects
-    for flag, given, needs, present in (
-        ("--incremental-derive", args.incremental_derive, "--stage-root", args.stage_root),
-        ("--redo-older-than", args.redo_older_than, "--stage-root", args.stage_root),
-        ("--stage-maintenance", args.stage_maintenance, "--stage-root", args.stage_root),
-        ("--stage-merge-on-read", args.stage_merge_on_read, "--stage-root", args.stage_root),
-        ("--no-export", args.no_export, "--incremental-derive", args.incremental_derive),
+    # "redo" run without a catalog is a fresh full build reported as success
+    for flag, given in (
+        ("--redo-older-than", args.redo_older_than),
+        ("--stage-maintenance", args.stage_maintenance),
+        ("--stage-merge-on-read", args.stage_merge_on_read),
+        ("--no-export", args.no_export),
     ):
-        if given and not present:
-            p.error(f"{flag} needs {needs}")
+        if given and not args.stage_root:
+            p.error(f"{flag} needs --stage-root")
 
     from pyspark.sql import SparkSession
 
@@ -96,10 +88,12 @@ def main(argv: list[str]) -> None:
         synthetic_doc_meta,
         synthetic_documents,
     )
-    from llacie_spark.incremental import maintain_graph
+    from llacie_spark.incremental import (
+        derive_pending, export_graph, maintain_graph, record_pending,
+    )
     from llacie_spark.io import SnapshotCatalog
     from llacie_spark.materialize import materialize_graph
-    from llacie_spark.pipeline import episode_triples, fused_extract, run_pipeline
+    from llacie_spark.pipeline import fused_extract, run_pipeline
     from llacie_spark.vocab import Vocab
 
     from llacie_spark.scorer import get_scorer
@@ -128,32 +122,19 @@ def main(argv: list[str]) -> None:
 
     t0 = time.time()
     phases = {}
+    report = {}  # the graph counters of whichever writer ran, at the top level
     if args.stage_root:
         cat = SnapshotCatalog(args.stage_root)
+        # discovery writes the batch's ids straight into the pending log, so
+        # the anti-join against the PRE-upsert snapshot runs once (never
+        # after the upsert and vacuum, when it could chase deleted files);
+        # the log survives a crash before derivation (record_pending)
         todo = cat.unfinished(
             spark, docs, "extracted", "doc_id", redo_older_than=args.redo_older_than
         )
-        n_todo = todo.count()
-        phases["discover_s"] = round(time.time() - t0, 2)
-        if args.incremental_derive and n_todo:
-            # pin the batch's doc ids NOW into the pending-derivation log
-            # (one slim-column write, O(batch)). Two reasons: `todo` is a
-            # lazy anti-join against the PRE-upsert snapshot, and
-            # re-evaluating it later — after the upsert commits and
-            # maintenance vacuums — could chase deleted files; and the log
-            # survives a crash between the extraction commit and the
-            # derivation commit, so the next invocation re-derives the
-            # batch instead of losing it (see incremental.record_pending)
-            from llacie_spark.incremental import record_pending
-
-            ids_dir = record_pending(todo, args.stage_root)
-            todo = spark.read.parquet(ids_dir).join(docs, "doc_id")
+        ids_dir, n_todo = record_pending(todo, args.stage_root)
+        phases["pending_s"] = round(time.time() - t0, 2)
         if n_todo:
-            stage_buckets = (
-                args.stage_buckets
-                if args.stage_buckets == "auto"
-                else int(args.stage_buckets)
-            )
             t = time.time()
             # drop note_text before persisting the stage: it is re-derivable
             # (assemble_text = ordered array_join over spans) and ~6 KB/doc —
@@ -162,12 +143,13 @@ def main(argv: list[str]) -> None:
             # invariant rides through every staged table.
             cat.upsert(
                 spark,
-                fused_extract(assemble_text(todo), vocab, scorer=scorer).drop(
-                    "note_text"
-                ),
+                fused_extract(
+                    assemble_text(spark.read.parquet(ids_dir).join(docs, "doc_id")),
+                    vocab, scorer=scorer,
+                ).drop("note_text"),
                 "extracted",
                 "doc_id",
-                n_buckets=stage_buckets,
+                n_buckets="auto" if args.stage_buckets == "auto" else int(args.stage_buckets),
                 merge_on_read=args.stage_merge_on_read,
             )
             # extract+upsert are one fused plan (the UDF runs inside the
@@ -187,79 +169,36 @@ def main(argv: list[str]) -> None:
                     file=sys.stderr,
                 )
             phases["split_buckets"] = upkeep["split"]
-        if args.incremental_derive:
-            # derivation work ∝ the batch's episodes, not the table: the
-            # affected episodes recompute from a bucket-pruned re-read of
-            # the extracted stage, edges upsert merge-on-read keyed by
-            # subj, zero-triple episodes retract via tombstones
-            from llacie_spark.incremental import (
-                clear_pending,
-                derive_batch,
-                export_graph,
-                read_pending,
-            )
-
-            t = time.time()
-            # the pending log may hold MORE than this run's batch: a prior
-            # invocation that crashed between its extraction commit and its
-            # derivation commit left its ids outstanding — derive the union
-            # (idempotent at episode granularity), then retire exactly the
-            # entries that were read
-            pending, consumed = read_pending(spark, args.stage_root)
-            if pending is not None:
-                # only retire the log when THIS run's doc→episode map covers
-                # every outstanding id: a run invoked with a smaller --docs
-                # (or a different corpus) than the crashed run that logged
-                # them would otherwise derive nothing for the uncovered ids
-                # and still delete their only re-derivation record
-                n_uncovered = pending.join(
-                    meta.select("doc_id"), "doc_id", "left_anti"
-                ).count()
-                dstats = derive_batch(spark, cat, pending, meta)
-                if n_uncovered:
-                    print(
-                        f"WARNING: {n_uncovered} pending-derive doc ids not "
-                        "covered by this run's doc metadata — keeping the "
-                        "pending log for a later run that covers them "
-                        "(derivation is idempotent)",
-                        file=sys.stderr,
-                    )
-                else:
-                    clear_pending(consumed)
-            else:
-                dstats = {"episodes": 0, "edges": 0, "retracted": 0}
-            phases["derive_s"] = round(time.time() - t, 2)
-            if args.stage_maintenance:
-                t = time.time()
-                phases["graph_maintenance"] = maintain_graph(spark, cat)
-                phases["graph_maintenance_s"] = round(time.time() - t, 2)
-            stats = dict(dstats)
-            if not args.no_export:
-                t = time.time()
-                # namespaced: dstats["edges"] counts THIS batch's edges,
-                # the export counts the whole table — same key, different
-                # meanings, so they must not collide in the JSON
-                stats["export"] = export_graph(spark, cat, args.out)
-                phases["export_s"] = round(time.time() - t, 2)
-            stats["wall_s"] = round(time.time() - t0, 2)
-            stats["phases"] = phases
-            stats["resumed_docs"] = n_todo
-            print(json.dumps(stats))
-            spark.stop()
-            return
+        # derivation work ∝ the batch's episodes, not the table
         t = time.time()
-        triples = episode_triples(cat.read_stage(spark, "extracted"), meta)
+        report["derive"] = derive_pending(spark, cat, args.stage_root, meta)
+        if report["derive"]["uncovered"]:
+            print(
+                f"WARNING: {report['derive']['uncovered']} pending-derive doc "
+                "ids not covered by this run's doc metadata — keeping the "
+                "pending log for a later run that covers them (derivation "
+                "is idempotent)",
+                file=sys.stderr,
+            )
+        phases["derive_s"] = round(time.time() - t, 2)
+        if args.stage_maintenance:
+            t = time.time()
+            phases["graph_maintenance"] = maintain_graph(spark, cat)
+            phases["graph_maintenance_s"] = round(time.time() - t, 2)
+        if not args.no_export:
+            t = time.time()
+            report |= export_graph(spark, cat, args.out)
+            phases["export_s"] = round(time.time() - t, 2)
     else:
         n_todo = None
         t = time.time()
-        triples = run_pipeline(docs, meta, vocab, scorer=scorer)
+        report |= materialize_graph(
+            run_pipeline(docs, meta, vocab, scorer=scorer), args.out
+        )
+        phases["triples_materialize_s"] = round(time.time() - t, 2)
 
-    stats = materialize_graph(triples, args.out)
-    phases["triples_materialize_s"] = round(time.time() - t, 2)
-    stats["wall_s"] = round(time.time() - t0, 2)
-    stats["phases"] = phases
-    stats["resumed_docs"] = n_todo
-    print(json.dumps(stats))
+    report |= {"wall_s": round(time.time() - t0, 2), "phases": phases, "resumed_docs": n_todo}
+    print(json.dumps(report))
     spark.stop()
 
 

@@ -1,14 +1,11 @@
 """Batch-incremental downstream derivation (triples → graph) over the
-snapshot catalog.
+snapshot catalog: the derivation of every staged run (``run_kg
+--stage-root``).
 
-The full-derivation path (``run_pipeline`` / ``episode_triples`` over
-``read_stage`` + ``materialize_graph`` overwrite) recomputes the WHOLE
-graph every ingest batch: the 1M-doc lifecycle measured 71 s of repeated
-full re-derivation per batch (BENCH/LIFECYCLE.md), and at 10^12 docs that
-is the single largest avoidable cost in the composed path. The reference
-never paid it — its episode-label stage ran only unfinished ids
-(``llacie/db.py:492-508``), and its per-note write was a DELETE-then-INSERT
-touching only conflicting rows (``llacie/db.py:650-665``).
+Derivation work follows the batch, not the table, as in the reference:
+its episode-label stage ran only unfinished ids (``llacie/db.py:492-508``),
+and its per-note write was a DELETE-then-INSERT touching only conflicting
+rows (``llacie/db.py:650-665``).
 
 This module maintains ONE catalog table, ``edges``, keyed by ``subj``: a
 merge-on-read upsert of the batch's recomputed edges plus equality-delete
@@ -41,6 +38,7 @@ from pyspark.sql import functions as F
 from .io import SnapshotCatalog
 from .materialize import DEFAULT_BUCKETS, build_edges, write_graph
 from .pipeline import episode_triples
+from .schemas import TRIPLES
 
 EDGES = "edges"
 
@@ -127,7 +125,38 @@ def derive_batch(
     return {"episodes": eps.count(), "edges": n_new, "retracted": n_retracted}
 
 
-def record_pending(ids_df: DataFrame, stage_root: str) -> str:
+def derive_all(
+    spark: SparkSession, cat: SnapshotCatalog, stage_root: str, doc_meta: DataFrame
+) -> dict:
+    """:func:`derive_batch` over the whole stage, for a root with no
+    committed ``edges`` table (a first run, or staged before the table
+    existed): a plain read and a first-snapshot write, nothing to merge or
+    retract. The staged docs ``doc_meta`` does not cover derive nothing
+    here, so they go to the pending log for a run that covers them. Counters
+    of :func:`derive_batch` plus ``uncovered``, the ids logged."""
+    staged = cat.read_stage(spark, "extracted")
+    if staged is None:
+        return {"episodes": 0, "edges": 0, "retracted": 0, "uncovered": 0}
+    # logged before the edges commit: once the table exists, only the log
+    # brings these docs back
+    ids = doc_meta.select("doc_id")
+    _, uncovered = record_pending(
+        staged.select("doc_id").join(ids, "doc_id", "left_anti"), stage_root
+    )
+    edges = build_edges(episode_triples(staged, doc_meta), DEFAULT_BUCKETS).persist()
+    try:
+        n_edges = edges.count()
+        cat.write_stage(edges, EDGES, "subj", n_buckets=DEFAULT_BUCKETS)
+    finally:
+        edges.unpersist()
+    eps = doc_meta.join(staged.select("doc_id"), "doc_id", "semi").select("episode_id")
+    return {
+        "episodes": eps.distinct().count(), "edges": n_edges, "retracted": 0,
+        "uncovered": uncovered,
+    }
+
+
+def record_pending(ids_df: DataFrame, stage_root: str) -> tuple[str, int]:
     """Append one batch's doc ids to the pending-derivation log.
 
     The log closes the extract→derive crash window: the extraction upsert
@@ -139,13 +168,17 @@ def record_pending(ids_df: DataFrame, stage_root: str) -> str:
     and because :func:`derive_batch` is idempotent at episode granularity,
     re-deriving a crashed batch's ids together with the new batch converges
     to the same table. Iceberg analog: the derivation's source-snapshot
-    watermark kept in table properties."""
+    watermark kept in table properties. Returns the entry's path and its
+    id count; an empty entry is removed."""
     import os
     import uuid
 
     d = os.path.join(stage_root, "_pending_derive", uuid.uuid4().hex)
     ids_df.select("doc_id").write.parquet(d)
-    return d
+    n = ids_df.sparkSession.read.parquet(d).count()
+    if not n:
+        clear_pending([d])
+    return d, n
 
 
 def read_pending(spark: SparkSession, stage_root: str):
@@ -172,6 +205,30 @@ def clear_pending(paths: list[str]) -> None:
 
     for p in paths:
         shutil.rmtree(p, ignore_errors=True)
+
+
+def derive_pending(
+    spark: SparkSession, cat: SnapshotCatalog, stage_root: str, doc_meta: DataFrame
+) -> dict:
+    """Derive every outstanding pending-log id (a crashed run's too:
+    idempotent per episode), then retire the entries read, unless
+    ``doc_meta`` misses some id: retiring would drop its only re-derivation
+    record. Returns the counters plus ``uncovered``, the ids kept."""
+    pending, consumed = read_pending(spark, stage_root)
+    if cat.current_snapshot(EDGES) is None:
+        # every staged doc is due, the logged ids among them (an id whose
+        # extraction never committed is rediscovered by the run that
+        # extracts it); derive_all logs anew the ones doc_meta misses
+        stats = derive_all(spark, cat, stage_root, doc_meta)
+        clear_pending(consumed)
+        return stats
+    if pending is None:
+        return {"episodes": 0, "edges": 0, "retracted": 0, "uncovered": 0}
+    stats = derive_batch(spark, cat, pending, doc_meta)
+    uncovered = pending.join(doc_meta.select("doc_id"), "doc_id", "left_anti").count()
+    if not uncovered:
+        clear_pending(consumed)
+    return stats | {"uncovered": uncovered}
 
 
 def maintain_graph(
@@ -210,5 +267,6 @@ def export_graph(spark: SparkSession, cat: SnapshotCatalog, out_dir: str) -> dic
     dict as ``materialize_graph``."""
     edges = cat.read_stage(spark, EDGES)
     if edges is None:
-        raise ValueError("export_graph: no committed edges table")
+        # no batch has derived an edge yet: the graph is empty
+        edges = build_edges(spark.createDataFrame([], TRIPLES))
     return write_graph(edges, out_dir)

@@ -24,9 +24,10 @@ here each stage is one Spark job:
   share, timestamp) are appended to every output, the analog of
   ``FK_strategy_id``/``strategy_runtime``/``feature_updated``
   (``llacie/sql/schema.sql:106-110``);
-- checkpointed runs stage ``fused_extract``'s output through the snapshot
-  catalog (``SnapshotCatalog.upsert``, ``run_kg --stage-root``) and derive
-  triples from the staged table with the same ``episode_triples``;
+- checkpointed runs (``run_kg --stage-root``) stage ``fused_extract``'s
+  output through the snapshot catalog, and ``incremental.derive_batch``
+  derives each batch's episodes from the staged table with the same
+  ``episode_triples``;
 - the span-sequence invariant: every stage output keeps the input ``spans``
   column untouched; ``spans_fingerprint`` gives a cheap JVM-side equality
   check.
@@ -302,10 +303,6 @@ def run_pipeline(documents: DataFrame, doc_meta: DataFrame, vocab: Vocab, scorer
     ``section_text`` (only ``matches`` comes back) → triples. The window's
     input is hash-partitioned one task per core and explicitly sized, so
     AQE cannot coalesce the scoring stage into one task.
-
-    For resumable runs, stage ``fused_extract``'s output (every note
-    scored) with ``SnapshotCatalog.upsert`` and call ``episode_triples`` on
-    the staged table instead (``run_kg --stage-root``).
     """
     from .corpus import assemble_text
 

@@ -66,6 +66,11 @@ _ABBREVIATIONS = [
 ]
 # each is \b<literal>\b: normalize_text looks for the literal before a sub
 assert all(re.fullmatch(r"\\b[\w/]+\\b", p.pattern) for p, _ in _ABBREVIATIONS)
+# (pattern, replacement, literal, fold case?) fixed at import, not per call
+_ABBREV_SUBS = [
+    (p, r, p.pattern[2:-2].lower() if p.flags & re.I else p.pattern[2:-2], bool(p.flags & re.I))
+    for p, r in _ABBREVIATIONS
+]
 
 # Sentences about care received / clinician measurements, not
 # patient-reported complaints. Named findings cited with a "noted" cue and
@@ -395,11 +400,10 @@ def normalize_text(text: str) -> str:
         if a in text:
             text = text.replace(a, b)
     low = text.lower()
-    for pat, repl in _ABBREVIATIONS:
+    for pat, repl, lit, folded in _ABBREV_SUBS:
         # most notes hold no shorthand: a substring test skips the sub (a full
         # scan) unless the pattern's literal occurs
-        lit = pat.pattern[2:-2]
-        if (lit.lower() in low) if pat.flags & re.I else (lit in text):
+        if lit in (low if folded else text):
             text = pat.sub(repl, text)
     return text
 

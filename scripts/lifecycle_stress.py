@@ -16,9 +16,10 @@ artifact, driven through the real spark-submit entrypoint (jobs/run_kg.py):
      JVM included) — whatever it wrote is an uncommitted orphan
   -> the next invocation resumes: re-discovers the dead batch's docs,
      re-extracts them, and the lifecycle completes
-  -> a ONE-SHOT twin (same 1M docs, fresh roots, single invocation) is the
-     ground truth: the final edges tables must be value-hash-equal
-     (all columns except the wall-clock `updated_at` lineage stamp).
+  -> a ONE-SHOT twin (same 1M docs, no --stage-root: run_pipeline's plan,
+     single invocation) is the ground truth: the final edges tables must be
+     value-hash-equal (all columns except the wall-clock `updated_at`
+     lineage stamp).
 
 Usage: python scripts/lifecycle_stress.py [total_docs] [n_batches]
 Writes BENCH/LIFECYCLE.md and prints one JSON line. A fast in-process
@@ -83,17 +84,20 @@ HASH_COLS = (
 
 def invoke(
     docs: int,
-    stage_root: str,
+    stage_root: str | None,
     out: str,
     kill_after: float | None = None,
     extra: list[str] | None = None,
 ) -> dict:
+    """One run_kg process: a staged batch, or with no ``stage_root`` the
+    one-shot job."""
+    staged = [
+        "--stage-root", stage_root, "--stage-buckets", "auto",
+        "--stage-maintenance", "--stage-split-target-mb", str(SPLIT_TARGET_MB),
+    ] if stage_root else []
     cmd = [
         sys.executable, str(REPO / "jobs/run_kg.py"),
-        "--docs", str(docs), "--out", out, "--stage-root", stage_root,
-        "--stage-buckets", "auto", "--stage-maintenance",
-        "--stage-split-target-mb", str(SPLIT_TARGET_MB),
-        *(extra or []),
+        "--docs", str(docs), "--out", out, *staged, *(extra or []),
     ]
     t0 = time.time()
     # steal-attribute every batch the same way bench.py attributes timed
@@ -153,14 +157,14 @@ def main() -> None:
             if i == KILL_BATCH:
                 schedule.append((i, i * batch, KILL_AFTER_S))  # the doomed run
             schedule.append((i, i * batch, None))
-        # incremental lane: merge-on-read staging (write IO O(batch) for
-        # these uniformly-hashed batches, BENCH/MOR_SCALING.md) + batch-
+        # staged lane: merge-on-read staging (write IO O(batch) for these
+        # uniformly-hashed batches, BENCH/MOR_SCALING.md) + batch-
         # incremental derivation (graph work ∝ the batch's episodes);
         # intermediate batches skip the full parquet export — the catalog
         # tables ARE the product; only the final invocation renders it
         for i, docs, kill in schedule:
             is_final = (i, docs, kill) == schedule[-1]
-            extra = ["--incremental-derive", "--stage-merge-on-read"]
+            extra = ["--stage-merge-on-read"]
             if not is_final:
                 extra.append("--no-export")
             label = f"batch{i}" + (" (SIGKILL mid-run)" if kill else "")
@@ -170,8 +174,8 @@ def main() -> None:
             print(json.dumps(r), flush=True)
 
         manifest = SnapshotCatalog(inc_root).current_snapshot("extracted")
-        one_root, one_out = f"{work}/one_stages", f"{work}/one_graph"
-        r = invoke(TOTAL_DOCS, one_root, one_out)
+        one_out = f"{work}/one_graph"
+        r = invoke(TOTAL_DOCS, None, one_out)
         r["label"], r["docs_visible"] = "one-shot twin", TOTAL_DOCS
         rows.append(r)
         print(json.dumps(r), flush=True)
@@ -194,7 +198,7 @@ def main() -> None:
                 ), 2
             ),
             "discover_s": round(
-                sum(r["phases"].get("discover_s", 0) for r in inc_done), 2
+                sum(r["phases"].get("pending_s", 0) for r in inc_done), 2
             ),
             "derive_s": round(
                 sum(r["phases"].get("derive_s", 0) for r in inc_done), 2
@@ -243,7 +247,8 @@ def _write_md(r: dict) -> None:
         else:
             ph = x["phases"]
             lines.append(
-                f"| {x['label']} | {x['docs_visible']:,} | {x['resumed_docs']:,} "
+                f"| {x['label']} | {x['docs_visible']:,} | "
+                f"{'—' if x['resumed_docs'] is None else format(x['resumed_docs'], ',')} "
                 f"| {x['wall_s']} s (+{round(x['wall_s_total'] - x['wall_s'], 1)} s startup) "
                 f"| {ph.get('extract_upsert_s', 0)} / {ph.get('maintenance_s', 0)} "
                 f"/ {ph.get('derive_s', ph.get('triples_materialize_s', 0))} "
@@ -256,7 +261,7 @@ def _write_md(r: dict) -> None:
         f"""# BENCH/LIFECYCLE — composed incremental lifecycle at {r["total_docs"]:,} docs
 
 {r["total_docs"]:,} synthetic docs arriving in {r["n_batches"]} batches through
-`jobs/run_kg.py` with `--incremental-derive --stage-merge-on-read`:
+`jobs/run_kg.py --stage-root` with `--stage-merge-on-read`:
 anti-join discovery -> pending-derive log -> fused extract -> MERGE-ON-READ
 upsert (write IO O(batch) even for these uniformly-hashed batches,
 BENCH/MOR_SCALING.md) -> maintenance (compaction + maybe_split at a
@@ -266,8 +271,8 @@ edges upsert MoR keyed by subj, zero-triple episodes retract via tombstones)
 -> full parquet export on the FINAL invocation only. Batch
 {r["killed_batch"]}'s process group (driver + JVM) is SIGKILL'd mid-flight;
 the next invocation resumes from the last committed snapshot, re-deriving
-anything left in the pending log. Ground truth: a one-shot twin (classic
-full-derivation path) on fresh roots.
+anything left in the pending log. Ground truth: a one-shot twin
+(`run_pipeline`, no `--stage-root`) on a fresh output directory.
 
 | invocation | docs visible | re-extracted | wall (in-job) | extract+upsert / maintenance / derive / export | splits | steal% |
 |---|---|---|---|---|---|---|
@@ -289,7 +294,7 @@ Cost split across the incremental invocations (in-job wall
 (merge-on-read: the uniform batch no longer rewrites the table),
 maintenance {sh["maintenance_s"]} s — together
 {round(100 * upkeep / max(sh["total_incremental_wall_s"], 0.01), 1)}% of wall;
-work discovery {sh["discover_s"]} s; batch-scoped derive {sh["derive_s"]} s
+work discovery (with the pending-log write) {sh["discover_s"]} s; batch-scoped derive {sh["derive_s"]} s
 (each batch's {r["total_docs"] // r["n_batches"]:,} episodes, NOT the full
 table — r5 re-derived the whole graph every invocation); final export
 {sh["export_s"]} s (once, by design).

@@ -30,9 +30,10 @@ from llacie_spark.incremental import (
     derive_batch,
     export_graph,
     maintain_graph,
+    read_pending,
 )
 from llacie_spark.io import SnapshotCatalog
-from llacie_spark.materialize import materialize_graph
+from llacie_spark.materialize import DEFAULT_BUCKETS, materialize_graph
 from llacie_spark.pipeline import episode_triples
 
 N_BUCKETS = 8
@@ -169,13 +170,13 @@ def _read_graph(spark, out):
     return rows("nodes"), rows("edges", "updated_at"), rows("metrics", "last_updated")
 
 
-def _assert_matches_full(cat, spark, meta):
+def _assert_matches_full(cat, spark, meta, n_buckets=N_BUCKETS):
     """The exported catalog graph equals ``materialize_graph`` over a full
     derivation of the WHOLE staged table — the ground truth."""
     out = cat.root.parent / f"compare-{uuid.uuid4().hex}"
     export_graph(spark, cat, str(out / "export"))
     full = episode_triples(cat.read_stage(spark, "extracted"), meta)
-    materialize_graph(full, str(out / "full"), n_buckets=N_BUCKETS)
+    materialize_graph(full, str(out / "full"), n_buckets=n_buckets)
     got_nodes, got_edges, got_metrics = _read_graph(spark, str(out / "export"))
     want_nodes, want_edges, want_metrics = _read_graph(spark, str(out / "full"))
     assert got_edges == want_edges
@@ -396,3 +397,74 @@ def test_clear_pending_spares_unconsumed_entries(spark, world, tmp_path):
     pending, left = read_pending(spark, root)
     assert len(left) == 1
     assert {r.doc_id for r in pending.collect()} == {"d2", "d4"}
+
+
+def _log(cat):
+    return str(cat.root.parent / "log")
+
+
+def _pending(spark, cat, meta, ids=None):
+    """``derive_pending`` as ``run_kg`` runs it (default bucket count),
+    after logging ``ids``; the pending log sits beside the catalog."""
+    from llacie_spark.incremental import derive_pending, record_pending
+
+    if ids is not None:
+        record_pending(ids, _log(cat))
+    return derive_pending(spark, cat, _log(cat), meta)
+
+
+def test_derive_all_derives_whole_stage_as_first_snapshot(spark, world):
+    """With no committed ``edges`` table (a first run, or a root staged
+    before the table existed) ``derive_pending`` derives every staged doc,
+    including those no pending log names, as the table's first snapshot:
+    no delta, no tombstone. Later batches then go through
+    ``derive_batch``."""
+    cat, b1, b2, meta = world
+    _stage(cat, spark, b1)
+    _stage(cat, spark, b2)
+    stats = _pending(spark, cat, meta)
+    assert stats == {"episodes": 3, "edges": 2, "retracted": 0, "uncovered": 0}
+    assert not cat.current_snapshot(EDGES).get("deltas")
+    assert read_pending(spark, _log(cat)) == (None, [])
+    _assert_matches_full(cat, spark, meta, DEFAULT_BUCKETS)
+    _pending(spark, cat, meta, _ids(b2))  # idempotent on top
+    _assert_matches_full(cat, spark, meta, DEFAULT_BUCKETS)
+
+
+def test_first_run_logs_staged_docs_its_meta_misses(spark, world):
+    """A root staged before the ``edges`` table existed, first derived by a
+    run whose doc metadata covers only part of the stage: the docs it
+    misses go to the pending log, and a later run that covers them
+    re-derives their episodes (here a displacement and a retraction), so
+    the graph ends equal to a full derivation."""
+    cat, b1, b2, meta = world
+    _stage(cat, spark, b1)
+    _stage(cat, spark, b2)
+    part = meta.join(_ids(b1), "doc_id", "semi")
+    assert _pending(spark, cat, part)["uncovered"] == 2
+    _assert_matches_full(cat, spark, part, DEFAULT_BUCKETS)
+    pending, _ = read_pending(spark, _log(cat))
+    assert {r.doc_id for r in pending.collect()} == {"d2", "d4"}
+
+    stats = _pending(spark, cat, meta)
+    assert stats["uncovered"] == 0 and stats["retracted"] == 1
+    assert read_pending(spark, _log(cat)) == (None, [])
+    _assert_matches_full(cat, spark, meta, DEFAULT_BUCKETS)
+
+
+def test_export_without_edges_table_writes_empty_graph(spark, tmp_path):
+    cat = SnapshotCatalog(str(tmp_path / "cat"))
+    stats = export_graph(spark, cat, str(tmp_path / "graph"))
+    assert (stats["nodes"], stats["edges"], stats["partitions"]) == (0, 0, 0)
+
+
+def test_derive_all_with_no_edges_then_batches(spark, world, tmp_path):
+    """A first derivation that yields no edge commits an empty ``edges``
+    table; the export is an empty graph and later batches derive on top."""
+    cat, b1, b2, meta = world
+    _stage(cat, spark, b2.where("doc_id = 'd4'"))  # ep2's zero-match winner
+    assert _pending(spark, cat, meta)["edges"] == 0
+    assert export_graph(spark, cat, str(tmp_path / "g0"))["edges"] == 0
+    _stage(cat, spark, b1)
+    _pending(spark, cat, meta, _ids(b1))
+    _assert_matches_full(cat, spark, meta, DEFAULT_BUCKETS)

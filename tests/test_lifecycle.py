@@ -71,13 +71,8 @@ def test_batched_ingest_with_midbatch_failure_equals_oneshot(
     # a further no-op invocation finds nothing to do
     assert run(120)["resumed_docs"] == 0
 
-    # ground truth: one-shot twin on fresh roots
-    job.main([
-        "--docs", "120",
-        "--out", str(tmp_path / "one_graph"),
-        "--stage-root", str(tmp_path / "one_stages"),
-        "--stage-buckets", "auto", "--stage-maintenance",
-    ])
+    # ground truth: the one-shot twin (no catalog: run_pipeline's plan)
+    job.main(["--docs", "120", "--out", str(tmp_path / "one_graph")])
     capsys.readouterr()
 
     inc_edges = _edge_set(spark, tmp_path / "inc_graph")
@@ -104,8 +99,7 @@ def test_pending_log_kept_when_run_cannot_cover_it(
     inc = [
         "--out", str(tmp_path / "graph"),
         "--stage-root", stage_root,
-        "--stage-buckets", "auto",
-        "--incremental-derive", "--no-export",
+        "--stage-buckets", "auto", "--no-export",
     ]
 
     def run(docs):

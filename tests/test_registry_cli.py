@@ -53,7 +53,7 @@ def test_filter_terms_list_and_dataframe(spark):
         (["--redo-older-than", "2024-01-01 00:00:00"], "--redo-older-than needs --stage-root"),
         (["--stage-maintenance"], "--stage-maintenance needs --stage-root"),
         (["--stage-merge-on-read"], "--stage-merge-on-read needs --stage-root"),
-        (["--stage-root", "unused", "--no-export"], "--no-export needs --incremental-derive"),
+        (["--no-export"], "--no-export needs --stage-root"),
     ],
     ids=["redo_older_than", "stage_maintenance", "stage_merge_on_read", "no_export"],
 )
@@ -77,7 +77,10 @@ def test_run_kg_rejects_flag_without_prerequisite(extra, message, capsys, monkey
 
 def test_run_kg_job_with_scorer_and_redo(spark, tmp_path, capsys, monkeypatch):
     """The spark-submit entrypoint end-to-end in-process: fresh run, then a
-    no-op resume, then a --redo-older-than re-extraction of everything."""
+    no-op resume, then a --redo-older-than re-extraction of everything.
+    Every staged report has one shape: the exported graph's counters at the
+    top level, so ``edges`` is the graph's edge count on every run, and the
+    batch's derivation counters under ``derive``."""
     import pyspark.sql as pys
 
     import jobs.run_kg as job
@@ -93,13 +96,40 @@ def test_run_kg_job_with_scorer_and_redo(spark, tmp_path, capsys, monkeypatch):
     job.main(base)
     first = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert first["resumed_docs"] == 60 and first["edges"] > 0
+    assert first["derive"]["episodes"] == 60
+    assert first["derive"]["edges"] == first["edges"]  # a first batch is the graph
 
     job.main(base)  # everything committed: nothing to redo
     second = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert second["resumed_docs"] == 0
+    assert second["derive"] == {"episodes": 0, "edges": 0, "retracted": 0, "uncovered": 0}
     assert second["edges"] == first["edges"]
 
     job.main(base + ["--redo-older-than", "9999-01-01 00:00:00"])
     redo = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert redo["resumed_docs"] == 60  # all rows stale -> full re-extraction
+    assert redo["derive"]["episodes"] == 60
     assert redo["edges"] == first["edges"]
+    for report in (first, second, redo):
+        assert {"nodes", "edges", "partitions", "preds", "derive"} <= report.keys()
+        timed = sum(v for k, v in report["phases"].items() if k.endswith("_s"))
+        assert timed == pytest.approx(report["wall_s"], abs=0.1)
+
+
+def test_run_kg_staged_no_export_writes_no_graph(spark, tmp_path, capsys, monkeypatch):
+    """A staged run with ``--no-export`` maintains the catalog ``edges``
+    table and writes nothing under ``--out``; its report has the
+    derivation counters and no graph counters."""
+    import pyspark.sql as pys
+
+    import jobs.run_kg as job
+    from llacie_spark.incremental import EDGES
+    from llacie_spark.io import SnapshotCatalog
+
+    monkeypatch.setattr(pys.SparkSession, "stop", lambda self: None)
+    out, stages = tmp_path / "graph", tmp_path / "stages"
+    job.main(["--docs", "20", "--out", str(out), "--stage-root", str(stages), "--no-export"])
+    report = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert not out.exists()
+    assert report["derive"]["edges"] > 0 and "edges" not in report
+    assert SnapshotCatalog(str(stages)).read_stage(spark, EDGES).count() == report["derive"]["edges"]
